@@ -14,6 +14,11 @@ literals (the ivf_topk pattern, driverq2.py).
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -456,6 +461,36 @@ SQL_PYRAMID_UPDATE = _pyr_sql(
 
 # --------------------------------------------------- z-order data skipping
 _ZB = (12288.0, 28672.0, 20480.0, 36864.0)  # (x0, x1, y0, y1): 1/16 area
+_STAGING_PREFIXES = ("egp_zorder_", "egp_rewrite_")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        return True
+    return True
+
+
+def _staging_dir(prefix: str, sf_dir: str) -> str:
+    """A fresh ``<tmp>/<prefix><tag>_<pid>`` snapshot-table directory.
+
+    The query's returned DataFrame reads it lazily, so it cannot be
+    removed when the query returns. Instead, the egp_zorder_* and
+    egp_rewrite_* directories of processes no longer alive are swept
+    before this one is created, so copies do not pile up across runs."""
+    tmp = tempfile.gettempdir()
+    for name in os.listdir(tmp):
+        pid = name.rsplit("_", 1)[-1]
+        if (name.startswith(_STAGING_PREFIXES) and pid.isdigit()
+                and not _pid_alive(int(pid))):
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = os.path.join(tmp, f"{prefix}{tag}_{os.getpid()}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def q_zorder_pruned_read(spark, sf_dir):
@@ -465,11 +500,6 @@ def q_zorder_pruned_read(spark, sf_dir):
     and the asserts prove the layout made the stats selective — the
     returned rows must still be EXACTLY the full filter, which the
     oracle computes straight from events."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from .operators.cluster import skipping_report, zorder_cluster
     from .sources.snaplog import SnapshotLogTable
 
@@ -480,10 +510,7 @@ def q_zorder_pruned_read(spark, sf_dir):
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/egp_zorder_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
-    t = SnapshotLogTable(spark, path)
+    t = SnapshotLogTable(spark, _staging_dir("egp_zorder_", sf_dir))
     t.overwrite(zorder_cluster(ev, "x", "y", num_files=16))
     x0, x1, y0, y1 = _ZB
     where = [("x", ">=", x0), ("x", "<=", x1),
@@ -512,11 +539,6 @@ def q_rewrite_compact(spark, sf_dir):
     where the scattered one couldn't and that time travel still sees
     the pre-rewrite files; the returned (pruned) read must equal the
     oracle's direct filter."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from .functions.georef import key_x, key_y
     from .operators.cluster import skipping_report
     from .sources.snaplog import SnapshotLogTable
@@ -526,9 +548,7 @@ def q_rewrite_compact(spark, sf_dir):
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/egp_rewrite_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _staging_dir("egp_rewrite_", sf_dir)
     t0 = SnapshotLogTable(spark, path)
     v1 = t0.overwrite(ev.repartition(16, "event_id"))
     where = [("x", "<", 16384.0)]

@@ -15,10 +15,19 @@ computed in Python UDFs.
 Cell id layout (bigint): ``(res << 36) | morton`` where
 ``morton = interleave(ix, iy)``, ix/iy in [0, 2**res).
 
-Twin ``*_sql`` emitters produce the same arithmetic as DuckDB-compatible
-SQL for the driver's oracle harness; ``*_np`` twins are vectorized numpy
-for use inside pandas-UDF refinement kernels. One algorithm, three
-renderers — keep them in sync.
+One algorithm, three renderers, bit-identical ids — keep them in sync
+(tests/test_cells.py and the conformance suite check them against each
+other, the bit spread on every 16-bit input):
+
+  * Column builders — the operators' path. The bit spread is two lookups
+    in a 256-entry byte table (one shared array Literal), so each input
+    appears twice in the expression tree; clamping is a CASE chain.
+    Both choices keep plan construction to a few Py4J round trips per
+    builder and the trees Catalyst re-walks on every ``withColumn`` small.
+  * ``*_sql`` emitters — DuckDB-compatible SQL for the driver's oracle
+    harness: the classic shift/mask spread and least/greatest clamping.
+  * ``*_np`` twins — vectorized numpy for pandas-UDF refinement kernels,
+    the same shift/mask spread; ``spread_bits_np`` is the reference.
 
 H3/S2 BACKEND SEAM — every operator reaches cell geometry ONLY through
 this module's API (tests/test_cells_conformance.py is the contract any
@@ -45,7 +54,10 @@ the other geometry's cover cells at the same res.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -61,28 +73,55 @@ _MASKS = (
 )
 
 
+# bit i of b moved to bit 2i, for every byte b: the Column path's table
+_SPREAD8 = tuple(
+    sum(((b >> i) & 1) << (2 * i) for i in range(8)) for b in range(256)
+)
+
+
 # ---------------------------------------------------------------- Column builders
+# Each Column method call is one Py4J round trip and each ``F.*`` call
+# about three, paid on the driver every time a plan is built; the
+# builders below use Column methods with Python scalars where they can.
+@functools.lru_cache(maxsize=1)
+def _spread8_table(sc) -> Column:
+    """``_SPREAD8`` as ONE bigint array Literal node, built once per
+    SparkContext ``sc`` (shipping the array costs ~500 round trips; the
+    Column is immutable, so every plan shares it). An ``array(...)``
+    expression would put 256 more nodes per lookup through analysis."""
+    return F.lit(np.array(_SPREAD8, dtype=np.int64))
+
+
 def _spread_bits(c: Column) -> Column:
-    """Spread the low 16 bits of c so bit i moves to bit 2i."""
-    c = c.bitwiseAND(F.lit(0xFFFF))
-    for shift, mask in _MASKS:
-        c = (c.bitwiseOR(F.shiftleft(c, shift))).bitwiseAND(F.lit(mask))
-    return c
+    """Spread the low 16 bits of c so bit i moves to bit 2i.
+
+    Two byte-table lookups, so ``c`` appears twice in the expression
+    tree. The shift/mask chain of the numpy and SQL twins reads its
+    input twice per step and would copy ``c`` 2**4 times."""
+    t = _spread8_table(SparkContext._active_spark_context)
+    lo = t[c.bitwiseAND(255)]
+    hi = t[F.shiftright(c, 8).bitwiseAND(255)]
+    return lo.bitwiseOR(hi * 65536)  # hi << 16
 
 
 def cell_encode(ix: Column, iy: Column, res: int) -> Column:
     """Cell id from integer cell coordinates at resolution ``res``."""
-    morton = _spread_bits(ix).bitwiseOR(F.shiftleft(_spread_bits(iy), 1))
-    return F.lit(res << RES_SHIFT).bitwiseOR(morton).cast("long")
+    return _spread_bits(ix).bitwiseOR(_spread_bits(iy) * 2).bitwiseOR(res << RES_SHIFT)
+
+
+def idx_of(coord: Column, res: int) -> Column:
+    """Clamped integer cell coordinate of ONE axis coordinate — the
+    building block for bbox cover-cell explosion (explode
+    sequence(idx_of(lo), idx_of(hi)) per axis). A null coordinate maps
+    to 0, as ``least(greatest(floor(..), 0), n - 1)`` does."""
+    n = 1 << res
+    i = F.floor(coord * (n / EXTENT))
+    return F.when(i > n - 1, n - 1).when(i >= 0, i).otherwise(0)
 
 
 def xy_to_ixy(x: Column, y: Column, res: int) -> tuple[Column, Column]:
     """Integer cell coordinates at resolution ``res`` (clamped to domain)."""
-    n = 1 << res
-    scale = n / EXTENT
-    ix = F.least(F.greatest(F.floor(x * F.lit(scale)), F.lit(0)), F.lit(n - 1)).cast("long")
-    iy = F.least(F.greatest(F.floor(y * F.lit(scale)), F.lit(0)), F.lit(n - 1)).cast("long")
-    return ix, iy
+    return idx_of(x, res), idx_of(y, res)
 
 
 def cell_of_xy(x: Column, y: Column, res: int) -> Column:
@@ -90,25 +129,14 @@ def cell_of_xy(x: Column, y: Column, res: int) -> Column:
     return cell_encode(ix, iy, res)
 
 
-def idx_of(coord: Column, res: int) -> Column:
-    """Clamped integer cell coordinate of ONE axis coordinate — the
-    building block for bbox cover-cell explosion (explode
-    sequence(idx_of(lo), idx_of(hi)) per axis)."""
-    n = 1 << res
-    return (
-        F.least(F.greatest(F.floor(coord * F.lit(n / EXTENT)), F.lit(0)), F.lit(n - 1))
-        .cast("long")
-    )
-
-
 def parent_cell(cell: Column, res: int, parent_res: int) -> Column:
     """Parent cell at a coarser resolution (compact direction)."""
     if parent_res > res:
         raise ValueError("parent_res must be <= res")
-    morton = cell.bitwiseAND(F.lit((1 << RES_SHIFT) - 1))
+    morton = cell.bitwiseAND((1 << RES_SHIFT) - 1)
     return (
-        F.lit(parent_res << RES_SHIFT)
-        .bitwiseOR(F.shiftright(morton, 2 * (res - parent_res)))
+        F.shiftright(morton, 2 * (res - parent_res))
+        .bitwiseOR(parent_res << RES_SHIFT)
         .cast("long")
     )
 
@@ -117,16 +145,24 @@ def kring_cells(ix: Column, iy: Column, res: int, k: int = 1) -> Column:
     """Array of cell ids of the (2k+1)^2 ring around (ix, iy), domain-clamped.
 
     The distributed distance-join prefilter: explode this array and
-    equi-join on cell id (SURVEY.md §2.3 J2/J7 mapping).
+    equi-join on cell id (SURVEY.md §2.3 J2/J7 mapping). Each axis
+    offset is spread once (null outside the domain) and the ring cells
+    OR the spread pairs together, so an invalid offset nulls its cells.
     """
     n = 1 << res
-    cols = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            nx, ny = ix + F.lit(dx), iy + F.lit(dy)
-            valid = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-            cols.append(F.when(valid, cell_encode(nx.cast("long"), ny.cast("long"), res)))
-    return F.array_compact(F.array(*cols))
+
+    def spread_offsets(c: Column) -> list[Column]:
+        out = []
+        for d in range(-k, k + 1):
+            v = c + d
+            out.append(F.when((v >= 0) & (v < n), _spread_bits(v)))
+        return out
+
+    sy = [s * 2 for s in spread_offsets(iy)]
+    return F.array_compact(F.array(*[
+        sx.bitwiseOR(s).bitwiseOR(res << RES_SHIFT)
+        for sx in spread_offsets(ix) for s in sy
+    ]))
 
 
 def kring_of_xy(x: Column, y: Column, res: int, k: int = 1) -> Column:

@@ -136,6 +136,23 @@ def rect_intersects_join(
 # ---------------------------------------------------------------------------
 # point x point distance-join and kNN
 # ---------------------------------------------------------------------------
+MAX_GRID_RIGHT_ROWS = 2_000_000  # dimension-sized contract for the grid kernel
+_GRID_INDEX_BOUND = 1 << 31  # |cell index| bound of the packed grid key
+
+
+def _grid_index(v: np.ndarray, s: float, side: str) -> np.ndarray:
+    """floor(v / s) of finite coordinates as int64 grid cell indices.
+    Raises once an index reaches 2**31 in magnitude: the packed key
+    ix * 2**32 + iy would wrap there and buckets would collide."""
+    f = np.floor(v / s)
+    if len(f) and np.abs(f).max() >= _GRID_INDEX_BOUND:
+        raise ValueError(
+            f"distance_join(broadcast_right=True): a {side} coordinate is "
+            f"2**31 or more grid cells of radius {s} from the origin, where "
+            "grid keys wrap; use a larger radius or broadcast_right=False")
+    return f.astype(np.int64)
+
+
 def _grid_distance_kernel(
     left: DataFrame,
     right: DataFrame,
@@ -155,8 +172,14 @@ def _grid_distance_kernel(
     (dist = sqrt((lx-rx)*(lx-rx) + (ly-ry)*(ly-ry)), filter dist <=
     radius), and a grid edge of ``radius`` makes the 3x3 neighborhood a
     guaranteed cover of the radius (any |dx| <= radius spans at most one
-    cell index). Output schema/list parity with the join path:
+    cell index) while every |cell index| stays below 2**31, so the
+    packed keys cannot wrap (checked on both sides; raises beyond).
+    Output schema/list parity with the join path:
     [left cols..., right cols..., dist].
+
+    The right side is collected with ``limit(MAX_GRID_RIGHT_ROWS + 1)``
+    in one job and raises when more rows come back, so a violated
+    dimension-sized contract fails loudly instead of OOMing the driver.
 
     ``topk_per_row``: emit only each LEFT ROW's top-k candidates by
     (dist asc, r_id asc) — a superset of any per-l_id global top-k
@@ -164,7 +187,13 @@ def _grid_distance_kernel(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     sc = left.sparkSession.sparkContext
-    rpdf = right.toPandas()
+    rpdf = right.limit(MAX_GRID_RIGHT_ROWS + 1).toPandas()
+    if len(rpdf) > MAX_GRID_RIGHT_ROWS:
+        raise ValueError(
+            f"distance_join(broadcast_right=True) collects the right side, "
+            f"but it has more than MAX_GRID_RIGHT_ROWS={MAX_GRID_RIGHT_ROWS} "
+            "rows; use broadcast_right=False (the cell-join path) or raise "
+            "the bound")
     r_fields = right.schema.fields
     rx = rpdf["rx"].to_numpy(dtype=np.float64)
     ry = rpdf["ry"].to_numpy(dtype=np.float64)
@@ -173,8 +202,8 @@ def _grid_distance_kernel(
         rpdf, rx, ry = rpdf.loc[fin], rx[fin], ry[fin]
     s = float(radius)
     _SH = np.int64(1) << np.int64(32)
-    rix = np.floor(rx / s).astype(np.int64)
-    riy = np.floor(ry / s).astype(np.int64)
+    rix = _grid_index(rx, s, "right")
+    riy = _grid_index(ry, s, "right")
     rkey = rix * _SH + riy
     order = np.argsort(rkey, kind="stable")
     rs = rpdf.iloc[order].reset_index(drop=True)
@@ -217,8 +246,8 @@ def _grid_distance_kernel(
                     continue
                 lx, ly = lx[ok_l], ly[ok_l]
             nb = len(pdf)
-            lix = np.floor(lx / s).astype(np.int64)
-            liy = np.floor(ly / s).astype(np.int64)
+            lix = _grid_index(lx, s, "left")
+            liy = _grid_index(ly, s, "left")
             lis, ris, ds = [], [], []
             for dxo in (-1, 0, 1):
                 for dyo in (-1, 0, 1):

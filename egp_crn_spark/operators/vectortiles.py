@@ -79,11 +79,24 @@ def vector_tiles(arcs: DataFrame, res: int,
             outer_off, inner = _list_view(varr)
             inner_off, coords_arr = _list_view(inner)
             coords = coords_arr.to_numpy(zero_copy_only=False)
-            # vertex j -> (x, y) = first two doubles of its inner list
+            vcnt = (outer_off[1:] - outer_off[:-1]).astype(np.int64)
+            # vertex j -> (x, y) = first two doubles of its inner list;
+            # a shorter (or null) vertex of a non-null arc raises, as the
+            # scalar stitcher does, instead of reading the next x as y
+            own = np.where(valid, vcnt, 0)
+            n_own = int(own.sum())
+            if n_own:
+                vi = (np.repeat(outer_off[:-1].astype(np.int64), own)
+                      + np.arange(n_own) - np.repeat(np.cumsum(own) - own, own))
+                short = (inner_off[vi + 1] - inner_off[vi]) < 2
+                if short.any():
+                    bad = int(np.repeat(np.arange(n_arcs), own)[np.argmax(short)])
+                    raise ValueError(
+                        f"arc {ids_col[bad].as_py()!r} has a vertex with "
+                        "fewer than 2 coordinates")
             vx = coords[inner_off[:-1]]
             vy = coords[inner_off[:-1] + 1] if len(inner_off) > 1 else vx
 
-            vcnt = (outer_off[1:] - outer_off[:-1]).astype(np.int64)
             segc = np.where(valid & (vcnt >= 2), vcnt - 1, 0)
             n_seg = int(segc.sum())
             if not n_seg:

@@ -81,6 +81,12 @@ def get_session(
         .config("spark.locality.wait", "0")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column/DataFrame API call to record its
+        # Python call site, at ~4 extra Py4J round trips per call — over
+        # half of the driver's plan-construction round trips. Trade-off:
+        # analysis and runtime error messages lose the Python call-site
+        # fragment; JVM stack traces and Python tracebacks are unchanged.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # one BLAS thread PER PYTHON WORKER: numpy kernels inside pandas UDFs
     # otherwise spawn a full OpenBLAS/MKL pool in each of N concurrent

@@ -28,19 +28,86 @@ def test_spread_bits_np_matches_bit_loop():
     assert (got == want).all()
 
 
-def test_column_encode_matches_numpy(spark):
-    rng = np.random.default_rng(1)
-    pdf = pd.DataFrame({
-        "x": rng.uniform(0, EXTENT, 500),
-        "y": rng.uniform(0, EXTENT, 500),
+# domain corners, edges and just-outside values (the clamping paths)
+_EDGES = [0.0, 1e-9, EXTENT / 2, EXTENT - 1e-9, EXTENT, -5.0, EXTENT + 5.0]
+
+
+def _edge_points(rng, n):
+    ex, ey = np.meshgrid(_EDGES, _EDGES)
+    return pd.DataFrame({
+        "x": np.r_[rng.uniform(0, EXTENT, n), ex.ravel()],
+        "y": np.r_[rng.uniform(0, EXTENT, n), ey.ravel()],
     })
-    for res in (0, 5, 10, 16):
+
+
+def test_column_encode_matches_numpy(spark):
+    pdf = _edge_points(np.random.default_rng(1), 500)
+    for res in (0, 1, 5, 10, 16):
         df = spark.createDataFrame(pdf).select(
             cells.cell_of_xy(F.col("x"), F.col("y"), res).alias("c")
         )
         got = np.array([r.c for r in df.collect()])
         want = cells.cell_of_xy_np(pdf.x.values, pdf.y.values, res)
         assert (got == want).all(), res
+
+
+def test_column_spread_matches_numpy_on_every_16bit_input(spark):
+    """The Column spread (two byte-table lookups) equals the numpy
+    shift/mask chain on all 2**16 inputs, and on inputs outside 16 bits
+    (both keep only the low 16 bits)."""
+    pdf = spark.range(-(1 << 16), 1 << 17).select(
+        "id", cells._spread_bits(F.col("id")).alias("s")).toPandas()
+    assert len(pdf) == 3 << 16
+    np.testing.assert_array_equal(
+        pdf["s"].to_numpy(), cells.spread_bits_np(pdf["id"].to_numpy()))
+
+
+def test_cell_encode_and_kring_match_numpy(spark):
+    """cell_encode and kring_cells equal their numpy twins (cell_encode_np
+    over the in-domain (2k+1)^2 offsets, in dx-major order) at res 0, 1,
+    10 and 16, domain edges included; a null coordinate clamps to 0."""
+    pdf = _edge_points(np.random.default_rng(4), 300)
+    df = spark.createDataFrame(pdf).union(
+        spark.createDataFrame([(None, 7.0)], "x double, y double"))
+    for res in (0, 1, 10, 16):
+        n = 1 << res
+        ix, iy = cells.xy_to_ixy(F.col("x"), F.col("y"), res)
+        out = df.select(ix.alias("ix"), iy.alias("iy"),
+                        cells.cell_encode(ix, iy, res).alias("c"),
+                        cells.kring_cells(ix, iy, res, 1).alias("ring"),
+                        cells.kring_of_xy(F.col("x"), F.col("y"), res, 2)
+                        .alias("ring2")).toPandas()
+        x = np.r_[pdf.x.to_numpy(), 0.0]
+        y = np.r_[pdf.y.to_numpy(), 7.0]
+        want_ix = np.clip(np.floor(x * (n / EXTENT)), 0, n - 1).astype(np.int64)
+        want_iy = np.clip(np.floor(y * (n / EXTENT)), 0, n - 1).astype(np.int64)
+        np.testing.assert_array_equal(out["ix"].to_numpy(), want_ix)
+        np.testing.assert_array_equal(out["iy"].to_numpy(), want_iy)
+        np.testing.assert_array_equal(
+            out["c"].to_numpy(), cells.cell_encode_np(want_ix, want_iy, res))
+        for k, col in ((1, "ring"), (2, "ring2")):
+            for a, b, ring in zip(want_ix, want_iy, out[col]):
+                want = [int(cells.cell_encode_np(np.array([a + dx]),
+                                                 np.array([b + dy]), res)[0])
+                        for dx in range(-k, k + 1) for dy in range(-k, k + 1)
+                        if 0 <= a + dx < n and 0 <= b + dy < n]
+                assert list(ring) == want, (res, k, a, b)
+
+
+def test_cell_encode_expression_stays_small(spark):
+    """Each axis input appears twice in cell_encode's JVM expression (two
+    byte-table lookups). The shift/mask chain read its input twice per
+    step, copying it 2**4 times per axis; this bound catches its return."""
+    ax, ay = "a" * 1000, "b" * 1000
+    e = str(cells.cell_encode(F.col(ax), F.col(ay), 10))
+    assert e.count(ax) == 2 and e.count(ay) == 2
+    assert len(e) < 8_000
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """get_session turns off PySpark's per-call Python call-site capture
+    (about four Py4J round trips per Column/DataFrame API call)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
 def test_sql_emitter_matches_numpy():

@@ -211,7 +211,7 @@ def test_three_renderers_agree(pts, C):
     for identical inputs at several resolutions."""
     pdf = pts.toPandas()
     con = duckdb.connect()
-    for res in (0, 4, 10, 16):
+    for res in (0, 1, 4, 10, 16):
         got_col = pts.select(
             C.cell_of_xy(F.col("x"), F.col("y"), res).alias("c")).toPandas()["c"].to_numpy()
         got_np = C.cell_of_xy_np(pdf["x"].to_numpy(), pdf["y"].to_numpy(), res)
@@ -225,13 +225,13 @@ def test_three_renderers_agree(pts, C):
 def test_idx_of_matches_cell_of_xy(pts, C):
     """idx_of is the axis projection of cell_of_xy — cover-cell explosion
     built from it lands geometry in the same cells points land in."""
-    res = 9
-    ix = C.idx_of(F.col("x"), res)
-    iy = C.idx_of(F.col("y"), res)
-    bad = pts.filter(
-        C.cell_encode(ix, iy, res) != C.cell_of_xy(F.col("x"), F.col("y"), res)
-    ).count()
-    assert bad == 0
+    for res in (0, 1, 9, 16):
+        ix = C.idx_of(F.col("x"), res)
+        iy = C.idx_of(F.col("y"), res)
+        bad = pts.filter(
+            C.cell_encode(ix, iy, res) != C.cell_of_xy(F.col("x"), F.col("y"), res)
+        ).count()
+        assert bad == 0, res
 
 
 def test_compact_uncompact_roundtrip(spark):

@@ -440,3 +440,29 @@ def test_all_files_pruned_returns_empty_not_error(spark, tdir):
     out2 = t.read(where=[("id", "=", 1000)])
     assert out2.count() == 0
     assert set(out2.columns) == {"id", "part", "val"}
+
+
+def test_driver_staging_dirs_sweep_dead_processes(tmp_path, monkeypatch):
+    """The z-order/rewrite driver queries stage snapshot tables in
+    per-pid temp dirs that their lazy results still read, so the dirs
+    outlive the query. Creating a new one sweeps the egp_zorder_* /
+    egp_rewrite_* dirs of dead pids and keeps live pids' and unrelated
+    dirs."""
+    import subprocess
+    import sys
+    import tempfile
+
+    from egp_crn_spark import driverq5
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()
+    dead, live = child.pid, os.getpid()
+    keep = [f"egp_zorder_cccc_{live}", "egp_zorder_notapid", f"other_{dead}"]
+    for name in keep + [f"egp_zorder_aaaa_{dead}", f"egp_rewrite_bbbb_{dead}"]:
+        (tmp_path / name / "data").mkdir(parents=True)
+    path = driverq5._staging_dir("egp_rewrite_", "/sf/dir")
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(keep)
+    assert os.path.dirname(path) == str(tmp_path)
+    assert os.path.basename(path).startswith("egp_rewrite_")
+    assert path.endswith(f"_{live}") and not os.path.exists(path)

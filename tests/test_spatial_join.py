@@ -215,3 +215,36 @@ def test_grid_kernel_null_coords_and_empty_right(spark, rng):
         ldf, spark.createDataFrame(right).filter(F.col("r_id") < 0),
         1000.0, broadcast_right=True)
     assert empty.count() == 0
+
+
+def test_grid_kernel_rejects_oversize_right(spark, rng, monkeypatch):
+    """The right side is collected with a row bound: a planted right
+    side one row over MAX_GRID_RIGHT_ROWS raises at construction;
+    exactly at the bound it runs."""
+    left = spark.createDataFrame(_points(rng, 20, "l_id", "lx", "ly"))
+    right = spark.createDataFrame(_points(rng, 31, "r_id", "rx", "ry"))
+    monkeypatch.setattr(SJ, "MAX_GRID_RIGHT_ROWS", 30)
+    with pytest.raises(ValueError, match="MAX_GRID_RIGHT_ROWS=30"):
+        SJ.distance_join(left, right, 1000.0, broadcast_right=True)
+    monkeypatch.setattr(SJ, "MAX_GRID_RIGHT_ROWS", 31)
+    assert SJ.distance_join(left, right, 1000.0,
+                            broadcast_right=True).count() >= 0
+
+
+def test_grid_kernel_rejects_wrapping_keys(spark):
+    """|floor(coord / radius)| >= 2**31 would wrap the packed grid key:
+    a tiny radius against huge coordinates raises on either side, while
+    indices just below the bound still join exactly."""
+    s = 1e-3
+    far = float(2 ** 31) * s
+    near = float(2 ** 31 - 2) * s
+    ok_l = spark.createDataFrame([(1, near, near)], "l_id long, lx double, ly double")
+    ok_r = spark.createDataFrame([(1, near, near)], "r_id long, rx double, ry double")
+    bad_l = spark.createDataFrame([(1, far, 0.0)], "l_id long, lx double, ly double")
+    bad_r = spark.createDataFrame([(1, 0.0, -far)], "r_id long, rx double, ry double")
+    with pytest.raises(ValueError, match="grid keys wrap"):
+        SJ.distance_join(ok_l, bad_r, s, broadcast_right=True)
+    with pytest.raises(Exception, match="grid keys wrap"):
+        SJ.distance_join(bad_l, ok_r, s, broadcast_right=True).collect()
+    got = SJ.distance_join(ok_l, ok_r, s, broadcast_right=True).collect()
+    assert [(r.l_id, r.r_id, r.dist) for r in got] == [(1, 1, 0.0)]

@@ -85,6 +85,22 @@ def test_vector_tiles_max_cover_guard(spark):
         vector_tiles(arcs, res=8, max_cover=100).count()
 
 
+
+@pytest.mark.parametrize("bad_vertex", [[30000.0], None],
+                         ids=["length1", "null"])
+def test_short_vertex_raises_like_scalar_stitcher(spark, bad_vertex):
+    """A vertex of a non-null arc with fewer than two coordinates raises
+    in the vectorized kernel, as it does in the scalar stitcher, instead
+    of silently reading the next vertex's x as its y."""
+    line = [[100.0, 100.0], bad_vertex, [40000.0, 50000.0]]
+    with pytest.raises(Exception):
+        _reference_pieces(np.asarray(line, dtype=np.float64), 4)
+    arcs = spark.createDataFrame(
+        [(1, [[0.0, 0.0], [10.0, 10.0]]), (7, line), (8, None)],
+        "arc_id long, vertices array<array<double>>")
+    with pytest.raises(Exception, match="arc 7 has a vertex with fewer"):
+        vector_tiles(arcs, 4).collect()
+
 def _reference_pieces(line, res):
     """The r8 scalar kernel (per-segment assign + clip + stitch), kept
     here as the parity oracle for the r9 vectorized kernel: cell id ->
