@@ -96,13 +96,6 @@ def _u64(x: int) -> np.uint64:
 
 
 # ------------------------------------------------------------ projections
-def _st_to_uv(s: np.ndarray) -> np.ndarray:
-    """Quadratic ST->UV (the projection S2 ships as default)."""
-    return np.where(s >= 0.5,
-                    (1.0 / 3.0) * (4.0 * s * s - 1.0),
-                    -(1.0 / 3.0) * (4.0 * (1.0 - s) * (1.0 - s) - 1.0))
-
-
 def _uv_to_st(u: np.ndarray) -> np.ndarray:
     # symmetric form (st(-u) = 1 - st(u)) keeps the sqrt argument
     # non-negative for both np.where branches

@@ -118,11 +118,6 @@ def bbox(vertices: Column) -> Column:
     )
 
 
-def euclid(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """Point distance — reference `math.dist` (validate_topology.py:312)."""
-    return F.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
-
-
 def _canonical_geom_string(vertices: Column, decimals: int = COORD_DECIMALS) -> Column:
     """Canonical orientation string of a rounded vertex array: the
     lexicographically smaller of the forward/reverse renderings —

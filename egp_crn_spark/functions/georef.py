@@ -11,8 +11,9 @@ the reference's 5-decimal rounding trick for node identity
 (/root/reference/src/helpers.py:306-342) with an exactness-by-construction
 guarantee.
 
-Each builder has a twin ``*_sql`` emitter producing the equivalent ANSI SQL
-string so DuckDB oracles share one definition (no drift).
+The key-derived builders (``key_x``/``key_y``) have twin ``*_sql`` emitters
+producing the equivalent ANSI SQL string so DuckDB oracles share one
+definition (no drift).
 """
 
 from __future__ import annotations
@@ -36,14 +37,6 @@ def phash_y(phash: Column) -> Column:
     """y in [0, EXTENT) from the low 32 bits of phash."""
     iy = phash.bitwiseAND(F.lit(_AXIS_MOD - 1))
     return (iy.cast("double") + F.lit(0.5)) * F.lit(_SCALE)
-
-
-def phash_x_sql(phash: str) -> str:
-    return f"((({phash} >> {PHASH_AXIS_BITS}) & {_AXIS_MOD - 1}) + 0.5) * {_SCALE!r}"
-
-
-def phash_y_sql(phash: str) -> str:
-    return f"(({phash} & {_AXIS_MOD - 1}) + 0.5) * {_SCALE!r}"
 
 
 # ---------------------------------------------------------------------------

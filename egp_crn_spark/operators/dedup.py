@@ -21,47 +21,19 @@ from pyspark.sql import functions as F
 from .text import shingles, tokens
 
 
-def _drop_hot(banded: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
-    """Skew guard, count + anti-join form: drop keys (buckets/shingles)
-    holding more than ``max_bucket`` rows — giant boilerplate clusters
-    would make the pair self-join quadratic. Used where the capped set
-    does NOT immediately feed a self-join on the same keys (the n-gram
-    shingle cap); join-feeding banded sets use _cap_hot_window, which
-    fuses the cap into the join's own exchange.
-
-    ANTI-join on the HOT set, not a semi-join on the ok set: hot keys
-    number <= instances/max_bucket BY CONSTRUCTION (each holds >
-    max_bucket rows), so the guard side is small and the banded rows
-    flow map-side into the pair join — the semi-join form shuffled the
-    full banded set once more just to apply the cap (measured 1.16x on
-    the 500k-image phash path).
-
-    The broadcast is NOT forced: AQE converts this anti-join to a
-    runtime broadcast when the materialized hot set is small (measured
-    identical to a forced F.broadcast on the phash path, 1.55 vs
-    1.59 s), and keeps a shuffle join when a pathological corpus pushes
-    the hot set past the broadcast threshold — 10^7-10^8 hot shingles at
-    100-TB scale must not be forced through the driver (VERDICT r5
-    advice). Without AQE the plan degrades to a safe shuffle anti-join."""
-    sizes = banded.groupBy(*keys).count()
-    hot = sizes.filter(F.col("count") > max_bucket).select(*keys)
-    return banded.join(hot, keys, "left_anti")
-
-
 def _cap_hot_window(banded: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
-    """The same cap as _drop_hot, fused into the shuffle the pair
-    self-join needs anyway: count per key with a window over the
-    (band, bucket) partition and keep rows of keys at or under the cap.
+    """Skew guard, the engine's one hot-bucket cap: keep only rows of
+    keys (buckets/shingles) holding at most ``max_bucket`` rows — giant
+    boilerplate clusters would make the pair generation quadratic.
 
-    For JOIN-FEEDING banded sets this beats the count+anti-join form
-    (measured 1.3x on the 500k-image phash path): the separate
-    aggregation pass over the banded source disappears, and no hot-key
-    set ever exists driver-side — the cap is enforced inside the
-    exchange, so there is nothing to broadcast and no AQE threshold to
-    reason about at any corpus size. The window's partition-key sort is
-    work the sort-merge join would do anyway; callers pair it with a
-    SHUFFLE_HASH hint on the build side so the join itself adds no
-    second sort."""
+    The count is a window over the key partition, so the cap runs inside
+    the shuffle the pair stage needs anyway (its exchange is reused by
+    the downstream groupBy/join on the same keys). It runs BEFORE any
+    per-key collect: the window buffer spills, so no bucket over the cap
+    ever reaches a non-spilling aggregation buffer, and no hot-key set
+    ever exists driver-side. Self-join callers put a SHUFFLE_HASH hint
+    on the build side so the join adds no second sort. Dropped shingles
+    are reported by hot_shingles."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(*keys)
@@ -283,7 +255,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         lambda s: F.xxhash64(s)))).alias("s")
     )
     if max_df is not None:
-        sh = _drop_hot(sh, ["s"], max_df)
+        sh = _cap_hot_window(sh, ["s"], max_df)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     a = sh.select(F.col(id_col).alias("a_id"), "s")
     b = sh.select(F.col(id_col).alias("b_id"), "s")
@@ -473,23 +445,16 @@ def hamming_near_pairs(sig: DataFrame, sig_col: str, id_col: str,
             ])
         ).alias("bb"),
     ).select(id_col, "sh", "bb.band", "bb.bucket")
-    # r9 shape: ONE sort-aggregation generates the within-bucket pairs
-    # (collect the bucket's members, slice-explode i<j index pairs)
-    # instead of the former window-cap + SHUFFLE_HASH self-join. The
-    # self-join form evaluated the windowed cap subtree TWICE (exchange
-    # reuse shares the shuffle, not the window sort above it), built a
-    # 3|corpus|-row hash relation, and probed c^2 ordered pairs per
-    # bucket where only c(c-1)/2 are distinct — the agg form sorts the
-    # banded set once, caps by size(ms) (identical keep-set: rows of
-    # buckets at or under max_bucket), and emits each unordered pair
-    # exactly once. Hamming is computed and thresholded inside the same
-    # stage, so the dedup distinct still shuffles only
-    # (a_id, b_id, hamming). Measured 1.15x at sf1.0 (5M images) with
-    # lower spread (no second window pass to straggle).
+    # ONE aggregation generates the within-bucket pairs: collect each
+    # capped bucket's members and slice-explode the i<j index pairs, so
+    # each unordered pair is emitted exactly once. Hamming is computed and
+    # thresholded inside the same stage, so the dedup distinct shuffles
+    # only (a_id, b_id, hamming).
+    banded = _cap_hot_window(banded, ["band", "bucket"], max_bucket)
     grouped = (
         banded.groupBy("band", "bucket")
         .agg(F.collect_list(F.struct(F.col(id_col), F.col("sh"))).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
+        .filter(F.size("ms") >= 2)
     )
     p = (
         grouped.select(F.posexplode("ms").alias("_i", "_a"), "ms")

@@ -80,10 +80,7 @@ def index_delta(changelog: DataFrame, centroids: np.ndarray, as_of: int,
 _TOMB_BROADCAST_MAX = 4_000_000
 
 
-def live_index(index: DataFrame, tombstones: DataFrame,
-               broadcast_tombstones: bool | None = None,
-               tombstone_broadcast_max: int = _TOMB_BROADCAST_MAX,
-               n_tombstones: int | None = None) -> DataFrame:
+def live_index(index: DataFrame, tombstones: DataFrame) -> DataFrame:
     """Serving view of a maintained index: rows not killed by a
     tombstone. One tombstone per id (max _ts) left-joins the index.
 
@@ -91,27 +88,16 @@ def live_index(index: DataFrame, tombstones: DataFrame,
     deletes since the last compaction — normally metadata-sized, but
     heavy churn with no compaction grows it without bound, and an
     unconditional broadcast would silently exceed the driver/executor
-    broadcast limit. With the default ``broadcast_tombstones=None`` the
-    set is counted (one metadata-sized aggregate) and broadcast only
-    under ``tombstone_broadcast_max`` distinct ids (~4M ids ≈ 64 MB of
-    (long, long) rows); past it the join falls back to an explicit
-    SHUFFLE_HASH join — identical results (the hint pins the plan so
-    neither the planner nor AQE re-broadcasts a side we just measured
-    as oversized), and the size itself is the "compact me" signal
-    (surfaced next to cell_balance via tombstone_backlog). Pass
-    True/False to force either path.
-
-    ``n_tombstones`` (ADVICE r8 #3): maintenance loops that already ran
-    tombstone_backlog() can pass its ``ids`` figure to keep this call
-    fully lazy — the default ``broadcast_tombstones=None`` otherwise
-    runs one eager count job at DataFrame-construction time (and the
-    tombstone aggregate lineage is then computed again in the join)."""
+    broadcast limit. The set is counted (one eager, metadata-sized
+    aggregate at construction) and broadcast only under
+    ``_TOMB_BROADCAST_MAX`` distinct ids (~4M ids ≈ 64 MB of (long, long)
+    rows); past it the join falls back to an explicit SHUFFLE_HASH
+    join — identical results (the hint pins the plan so neither the
+    planner nor AQE re-broadcasts a side we just measured as oversized),
+    and the size itself is the "compact me" signal (surfaced next to
+    cell_balance via tombstone_backlog)."""
     t = tombstones.groupBy("n_id").agg(F.max(TOMB_TS).alias(TOMB_TS))
-    if broadcast_tombstones is None:
-        if n_tombstones is None:
-            n_tombstones = t.count()
-        broadcast_tombstones = n_tombstones <= tombstone_broadcast_max
-    if broadcast_tombstones:
+    if t.count() <= _TOMB_BROADCAST_MAX:
         t = F.broadcast(t)
     else:
         t = t.hint("shuffle_hash")
@@ -122,8 +108,7 @@ def live_index(index: DataFrame, tombstones: DataFrame,
     )
 
 
-def tombstone_backlog(tombstones: DataFrame,
-                      broadcast_max: int = _TOMB_BROADCAST_MAX) -> dict:
+def tombstone_backlog(tombstones: DataFrame) -> dict:
     """Compaction-pressure monitor, the tombstone twin of cell_balance:
     {ids, rows, over_broadcast} — ``over_broadcast`` True means serving
     has degraded from a broadcast to a shuffled anti-join; run
@@ -132,7 +117,7 @@ def tombstone_backlog(tombstones: DataFrame,
         F.count(F.lit(1)).alias("rows"),
         F.count_distinct(F.col("n_id")).alias("ids")).first()
     return {"rows": row["rows"], "ids": row["ids"],
-            "over_broadcast": row["ids"] > broadcast_max}
+            "over_broadcast": row["ids"] > _TOMB_BROADCAST_MAX}
 
 
 def maintain_ivf_index(corpus_table, centroids: np.ndarray,

@@ -6,7 +6,7 @@ north_star). AQE skew-join splitting is ON session-wide
 
 - ``hot_keys``: cheap pre-aggregation finding keys above a row threshold
   (the measurement step — never guess which keys are hot);
-- ``salted_repartition`` / ``salted_aggregate``: two-phase aggregation
+- ``with_salt`` / ``salted_aggregate``: two-phase aggregation
   where only the hot keys are salted (cold keys keep single-pass
   aggregation; salting everything doubles shuffle volume for no reason).
 """
@@ -56,12 +56,3 @@ def salted_aggregate(
         *[c.alias(n) for n, c in aggs.items()]
     )
     return partial.groupBy(key).agg(*[c.alias(n) for n, c in merge.items()])
-
-
-def repartition_hot_aware(df: DataFrame, key: str, threshold: int,
-                          n_salt: int = 16) -> DataFrame:
-    """Repartition on (key, salt) so hot keys spread over n_salt
-    partitions while cold keys stay co-located on their key."""
-    hot = hot_keys(df, key, threshold)
-    salted = with_salt(df, key, hot, n_salt)
-    return salted.repartition(F.col(key), F.col("_salt"))

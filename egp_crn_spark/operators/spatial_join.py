@@ -140,6 +140,22 @@ MAX_GRID_RIGHT_ROWS = 2_000_000  # dimension-sized contract for the grid kernel
 _GRID_INDEX_BOUND = 1 << 31  # |cell index| bound of the packed grid key
 
 
+def _collect_bounded(df: DataFrame, max_rows: int, what: str) -> pd.DataFrame:
+    """Collect a dimension-sized side to the driver, enforcing the bound.
+
+    ``limit(max_rows + 1)`` is collected in ONE job (no separate count,
+    the lineage runs once); more than ``max_rows`` rows back means the
+    dimension-sized contract is violated, and it raises naming the bound
+    (``what``) instead of silently OOMing the driver."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        raise ValueError(
+            f"{what} is collected to the driver, but it has more than "
+            f"{max_rows} rows; it must be dimension-sized — take the join "
+            "path, shard the input, or raise the bound")
+    return pdf
+
+
 def _grid_index(v: np.ndarray, s: float, side: str) -> np.ndarray:
     """floor(v / s) of finite coordinates as int64 grid cell indices.
     Raises once an index reaches 2**31 in magnitude: the packed key
@@ -177,9 +193,8 @@ def _grid_distance_kernel(
     Output schema/list parity with the join path:
     [left cols..., right cols..., dist].
 
-    The right side is collected with ``limit(MAX_GRID_RIGHT_ROWS + 1)``
-    in one job and raises when more rows come back, so a violated
-    dimension-sized contract fails loudly instead of OOMing the driver.
+    The right side is collected by _collect_bounded under
+    MAX_GRID_RIGHT_ROWS.
 
     ``topk_per_row``: emit only each LEFT ROW's top-k candidates by
     (dist asc, r_id asc) — a superset of any per-l_id global top-k
@@ -187,13 +202,10 @@ def _grid_distance_kernel(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     sc = left.sparkSession.sparkContext
-    rpdf = right.limit(MAX_GRID_RIGHT_ROWS + 1).toPandas()
-    if len(rpdf) > MAX_GRID_RIGHT_ROWS:
-        raise ValueError(
-            f"distance_join(broadcast_right=True) collects the right side, "
-            f"but it has more than MAX_GRID_RIGHT_ROWS={MAX_GRID_RIGHT_ROWS} "
-            "rows; use broadcast_right=False (the cell-join path) or raise "
-            "the bound")
+    rpdf = _collect_bounded(
+        right, MAX_GRID_RIGHT_ROWS,
+        "the distance_join(broadcast_right=True) right side "
+        "(MAX_GRID_RIGHT_ROWS)")
     r_fields = right.schema.fields
     rx = rpdf["rx"].to_numpy(dtype=np.float64)
     ry = rpdf["ry"].to_numpy(dtype=np.float64)
@@ -435,8 +447,7 @@ def polygon_cover_cells(polys: DataFrame, res: int, convex: bool = False) -> Dat
 MAX_BROADCAST_POLYS = 200_000  # dimension-sized contract for pip_refine_udf
 
 
-def pip_refine_udf(spark, polys: DataFrame,
-                   max_polys: int = MAX_BROADCAST_POLYS):
+def pip_refine_udf(polys: DataFrame):
     """Scalar pandas UDF (x, y, poly_id) -> bool doing exact PIP against a
     broadcast of the polygon vertex arrays.
 
@@ -446,22 +457,16 @@ def pip_refine_udf(spark, polys: DataFrame,
     exchange of the id strings alone cost more than the geometry.)
 
     CONTRACT: ``polys`` is dimension-sized (it is collected + broadcast).
-    The bound is ENFORCED, not assumed — a fact-sized polygon set raises
-    instead of silently OOMing the driver; shard such sets (e.g. per
-    tile via groupBy().applyInPandas) before refining. The bound is
-    checked INSIDE the collection loop (no extra count job — the
-    polygon lineage runs exactly once).
+    The bound is ENFORCED, not assumed — _collect_bounded raises past
+    MAX_BROADCAST_POLYS; shard such sets (e.g. per tile via
+    groupBy().applyInPandas) before refining.
     """
-    polys_local: dict[int, np.ndarray] = {}
-    for r in polys.select("poly_id", "vertices").toLocalIterator():
-        if len(polys_local) >= max_polys:
-            raise ValueError(
-                f"pip_refine_udf broadcasts the polygon set, but it exceeds "
-                f"max_polys={max_polys}; shard the polygons (per-tile "
-                f"applyInPandas) or raise the bound explicitly"
-            )
-        polys_local[int(r["poly_id"])] = np.asarray(
-            [list(p) for p in r["vertices"]], dtype=np.float64)
+    ppdf = _collect_bounded(polys.select("poly_id", "vertices"),
+                            MAX_BROADCAST_POLYS,
+                            "the pip_refine_udf polygon set (MAX_BROADCAST_POLYS)")
+    polys_local: dict[int, np.ndarray] = {
+        int(pid): np.asarray([list(p) for p in verts], dtype=np.float64)
+        for pid, verts in zip(ppdf["poly_id"], ppdf["vertices"])}
     # group polygons by vertex count so the kernel vectorizes across ALL
     # candidate rows of a batch (one gather-indexed ray-cast pass per edge)
     by_count: dict[int, tuple[dict[int, int], np.ndarray]] = {}
@@ -469,7 +474,7 @@ def pip_refine_udf(spark, polys: DataFrame,
         ids = [pid for pid, a in polys_local.items() if len(a) == v_count]
         stacked = np.stack([polys_local[pid] for pid in ids])
         by_count[v_count] = ({pid: i for i, pid in enumerate(ids)}, stacked)
-    bc = spark.sparkContext.broadcast(by_count)
+    bc = polys.sparkSession.sparkContext.broadcast(by_count)
 
     @F.pandas_udf("boolean")
     def pip_ok(x: pd.Series, y: pd.Series, poly_id: pd.Series) -> pd.Series:
@@ -509,14 +514,13 @@ def point_in_polygon_join(
     3. exact PIP refine as a scalar pandas-UDF filter over (x, y,
        poly_id) only — the Arrow exchange never carries payload columns.
     """
-    spark = points.sparkSession
     cover = polygon_cover_cells(polys, res, convex=convex)
     if broadcast_polys:
         cover = F.broadcast(cover)
     cand = points.withColumn("_cell", C.cell_of_xy(F.col("x"), F.col("y"), res)).join(
         cover, "_cell"
     )
-    pip_ok = pip_refine_udf(spark, polys)
+    pip_ok = pip_refine_udf(polys)
     return cand.filter(
         F.col("_interior") | pip_ok(F.col("x"), F.col("y"), F.col("poly_id"))
     ).drop("_cell", "_interior")

@@ -2,10 +2,10 @@
 
 Language-ID (stopword-hit heuristic), quality scoring (length/punct/
 stopword ratios), token counting (whitespace + BPE-ish regex), and
-document fingerprinting (md5 + shingle minhash). Every function is
-Catalyst expressions only — no Python in the hot path — and every
-definition is mirrored by a SQL emitter so DuckDB oracles share one
-semantics (the engine's cross-checking pattern, see driverq.py).
+document fingerprinting (md5) and word shingles. Every function is
+Catalyst expressions only — no Python in the hot path; the tokenizer is
+mirrored by a SQL emitter so DuckDB oracles share its semantics (the
+engine's cross-checking pattern, see driverq.py).
 """
 
 from __future__ import annotations
@@ -88,7 +88,7 @@ def predicted_lang(text: Column) -> Column:
     )
 
 
-# ---------------------------------------------------------------- shingles + minhash
+# ---------------------------------------------------------------- shingles
 def shingles(text: Column, k: int = 3) -> Column:
     """Word k-shingles as strings (documents shorter than k words → empty).
 
@@ -105,32 +105,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_md5(shingle_arr: Column, h: int) -> Column:
-    """One minhash value: lexicographic min of md5('h<h>|' + shingle).
-    md5-based so DuckDB oracles reproduce it exactly; the xxhash64 variant
-    below is the fast path for production plans."""
-    return F.array_min(
-        F.transform(shingle_arr, lambda s: F.md5(F.concat(F.lit(f"h{h}|"), s)))
-    )
-
-
-def minhash_signature_md5(text: Column, num_hashes: int = 8, k: int = 3) -> Column:
-    sh = shingles(text, k)
-    return F.array(*[minhash_md5(sh, h) for h in range(num_hashes)])
-
-
-def minhash_xx(shingle_arr: Column, h: int) -> Column:
-    """Fast path: xxhash64 (JVM intrinsic), bigint min."""
-    return F.array_min(
-        F.transform(shingle_arr, lambda s: F.xxhash64(F.lit(h), s))
-    )
-
-
-def minhash_signature_xx(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    sh = shingles(text, k)
-    return F.array(*[minhash_xx(sh, h) for h in range(num_hashes)])
-
-
 def doc_fingerprint(text: Column) -> Column:
     """Whole-document fingerprint: md5 of the normalized token stream."""
     return F.md5(F.array_join(tokens(text), " "))
@@ -141,20 +115,4 @@ def tokens_sql(text: str) -> str:
     return (
         f"case when length(trim({text})) = 0 then []::varchar[] "
         f"else string_split_regex(trim({text}), '\\s+') end"
-    )
-
-
-def shingles_sql(text: str, k: int = 3) -> str:
-    toks = tokens_sql(text)
-    parts = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
-    return (
-        f"(select case when len(t) < {k} then []::varchar[] else "
-        f"list_transform(range(1, len(t) - {k - 2}), i -> {parts}) end "
-        f"from (select {toks} as t))"
-    )
-
-
-def minhash_md5_sql(shingles_expr: str, h: int) -> str:
-    return (
-        f"list_aggregate(list_transform({shingles_expr}, s -> md5('h{h}|' || s)), 'min')"
     )

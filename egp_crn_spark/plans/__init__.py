@@ -19,10 +19,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def has_python_eval(df: DataFrame) -> bool:
     plan = physical_plan(df)
     return any(n in plan for n in _PY_NODES)

@@ -294,7 +294,7 @@ def test_cell_balance_flags_drift(spark, trained):
     assert skewed["max_over_mean"] > 2 * base["max_over_mean"]
 
 
-def test_tombstone_broadcast_guard_fallback(spark, trained):
+def test_tombstone_broadcast_guard_fallback(spark, trained, monkeypatch):
     """VERDICT r7 #4: an oversized tombstone backlog flips live_index
     from broadcast to a shuffled join automatically — identical results
     both paths — and tombstone_backlog surfaces the compact-me signal."""
@@ -302,22 +302,21 @@ def test_tombstone_broadcast_guard_fallback(spark, trained):
     idx, tombs = IM.build_index_state(t.read(s1), C, s1)
     for frm, to in [(s1, s2), (s2, s3)]:
         idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
-    # plant a backlog larger than a tiny broadcast cap
-    auto_small = IM.live_index(idx, tombs, tombstone_broadcast_max=2)
-    forced_bcast = IM.live_index(idx, tombs, broadcast_tombstones=True)
-    forced_shuffle = IM.live_index(idx, tombs, broadcast_tombstones=False)
-    want = _index_set(forced_bcast, False)
-    assert _index_set(auto_small, False) == want
-    assert _index_set(forced_shuffle, False) == want
-    # the small-cap auto path must NOT contain a broadcast of tombstones
     from egp_crn_spark import plans
-    p = plans.physical_plan(auto_small)
-    assert "BroadcastHashJoin" not in p, p[:1200]
-    p2 = plans.physical_plan(forced_bcast)
-    assert "BroadcastHashJoin" in p2
-    back = IM.tombstone_backlog(tombs, broadcast_max=2)
-    assert back["ids"] > 2 and back["over_broadcast"]
+    # a large cap broadcasts the tombstones
+    monkeypatch.setattr(IM, "_TOMB_BROADCAST_MAX", 1 << 40)
+    bcast = IM.live_index(idx, tombs)
+    assert "BroadcastHashJoin" in plans.physical_plan(bcast)
     assert not IM.tombstone_backlog(tombs)["over_broadcast"]
+    # plant a backlog larger than a tiny cap: the shuffled path
+    monkeypatch.setattr(IM, "_TOMB_BROADCAST_MAX", 2)
+    shuffled = IM.live_index(idx, tombs)
+    p = plans.physical_plan(shuffled)
+    assert "BroadcastHashJoin" not in p, p[:1200]
+    assert _index_set(shuffled, False) == _index_set(bcast, False)
+    back = IM.tombstone_backlog(tombs)
+    assert back["ids"] > 2 and back["over_broadcast"]
     # compaction clears the pressure
     cidx, ctombs = IM.compact_index(idx, tombs)
-    assert IM.tombstone_backlog(ctombs, broadcast_max=2)["ids"] == 0
+    cback = IM.tombstone_backlog(ctombs)
+    assert cback["ids"] == 0 and not cback["over_broadcast"]

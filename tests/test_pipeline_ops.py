@@ -514,15 +514,39 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     max_df cap bounds them and hot_shingles reports what was dropped."""
     boiler = "terms of service apply to all"
     docs = {i: f"{boiler} document number {i} unique body {i * 7}" for i in range(12)}
+    # residual shared phrases around the cap: "beta gamma delta" sits in
+    # exactly 3 docs (kept), "alpha beta gamma" in 5 and "omega psi chi"
+    # in 4 (both dropped)
+    for i in range(5):
+        docs[i] += " alpha beta gamma" + (" delta" if i < 3 else "")
+    for i in range(5, 9):
+        docs[i] += " omega psi chi"
     df = spark.createDataFrame(pd.DataFrame({
         "doc_id": list(docs), "text": list(docs.values())}))
     # uncapped: the boilerplate shingles pair everything
     full = DD.ngram_jaccard_pairs(df, threshold=0.05).toPandas()
     assert len(full) == 12 * 11 / 2
-    # capped: shingles in >3 docs are dropped → only the (0..9 vs 10,11)-ish
-    # residual shared shingles can pair docs; candidate count is bounded
+    # capped: shingles in >3 docs are dropped → only the residual shared
+    # shingles can pair docs; candidate count is bounded
     capped = DD.ngram_jaccard_pairs(df, threshold=0.05, max_df=3).toPandas()
     assert len(capped) < len(full)
+    # exactly the Jaccard over the KEPT shingles (document frequency <= 3)
+    sets = {}
+    for i, t in docs.items():
+        w = t.split()
+        sets[i] = {" ".join(w[j:j + 3]) for j in range(len(w) - 2)}
+    dfreq = pd.Series([s for v in sets.values() for s in v]).value_counts()
+    kept = {i: {s for s in v if dfreq[s] <= 3} for i, v in sets.items()}
+    want = {}
+    for a in docs:
+        for b in docs:
+            inter = len(kept[a] & kept[b])
+            if a < b and inter:
+                jac = inter / (len(kept[a]) + len(kept[b]) - inter)
+                if jac >= 0.05:
+                    want[(a, b)] = jac
+    got = {(r.a_id, r.b_id): r.jaccard for r in capped.itertuples()}
+    assert set(want) == {(0, 1), (0, 2), (1, 2)} and got == want
     hot = DD.hot_shingles(df, max_df=3).toPandas()
     assert len(hot) > 0 and (hot["df"] > 3).all()
 
@@ -657,6 +681,22 @@ def test_phash_near_dup_planted(spark):
     assert not any("far" in p for p in pairs)
     # capped mega-cluster contributes nothing (audit would surface it)
     assert not any(a.startswith("dup") for a, _ in pairs)
+
+    # the cap runs BELOW the aggregation that collects bucket members:
+    # the Window count and its `_cnt <= max_bucket` Filter are descendants
+    # (later lines) of every collect_list ObjectHashAggregate, so no
+    # bucket over the cap is ever collected
+    from egp_crn_spark import plans
+    lines = plans.physical_plan(
+        phash_near_dup(df, max_hamming=3, max_bucket=10)).splitlines()
+    aggs = [i for i, ln in enumerate(lines)
+            if "ObjectHashAggregate" in ln and "collect_list" in ln]
+    cap = [i for i, ln in enumerate(lines)
+           if "Filter" in ln and "_cnt" in ln and "<= 10" in ln]
+    win = [i for i, ln in enumerate(lines)
+           if "Window [count(1)" in ln and "_cnt" in ln]
+    assert aggs and len(cap) == 1 and len(win) == 1, "\n".join(lines)
+    assert max(aggs) < cap[0] < win[0], "\n".join(lines)
 
     # recall guarantee without the cap: all 50 identical dups pair up
     full = phash_near_dup(df.filter(F.col("image_id").startswith("dup")),

@@ -217,18 +217,36 @@ def test_grid_kernel_null_coords_and_empty_right(spark, rng):
     assert empty.count() == 0
 
 
-def test_grid_kernel_rejects_oversize_right(spark, rng, monkeypatch):
-    """The right side is collected with a row bound: a planted right
-    side one row over MAX_GRID_RIGHT_ROWS raises at construction;
-    exactly at the bound it runs."""
+def _grid_caller(spark, rng):
     left = spark.createDataFrame(_points(rng, 20, "l_id", "lx", "ly"))
     right = spark.createDataFrame(_points(rng, 31, "r_id", "rx", "ry"))
-    monkeypatch.setattr(SJ, "MAX_GRID_RIGHT_ROWS", 30)
-    with pytest.raises(ValueError, match="MAX_GRID_RIGHT_ROWS=30"):
-        SJ.distance_join(left, right, 1000.0, broadcast_right=True)
-    monkeypatch.setattr(SJ, "MAX_GRID_RIGHT_ROWS", 31)
-    assert SJ.distance_join(left, right, 1000.0,
-                            broadcast_right=True).count() >= 0
+    return lambda: SJ.distance_join(left, right, 1000.0, broadcast_right=True)
+
+
+def _pip_caller(spark, rng):
+    pts = spark.createDataFrame(_points(rng, 20, "p_id", "x", "y"))
+    e = EXTENT / 31
+    polys = spark.createDataFrame(pd.DataFrame({
+        "poly_id": np.arange(31, dtype=np.int64),
+        "vertices": [[[i * e, 0.0], [(i + 1) * e, 0.0], [(i + 1) * e, EXTENT],
+                      [i * e, EXTENT], [i * e, 0.0]] for i in range(31)]}))
+    return lambda: SJ.point_in_polygon_join(pts, polys, res=4)
+
+
+@pytest.mark.parametrize("bound,make", [
+    ("MAX_GRID_RIGHT_ROWS", _grid_caller),
+    ("MAX_BROADCAST_POLYS", _pip_caller),
+], ids=["grid", "pip"])
+def test_grid_kernel_rejects_oversize_right(spark, rng, monkeypatch, bound, make):
+    """Both driver-side collects go through _collect_bounded: a planted
+    collected side of 31 rows, one row over the bound, raises at
+    construction; exactly at the bound it runs."""
+    build = make(spark, rng)
+    monkeypatch.setattr(SJ, bound, 30)
+    with pytest.raises(ValueError, match=rf"{bound}.*more than 30 rows"):
+        build()
+    monkeypatch.setattr(SJ, bound, 31)
+    assert build().count() >= 0
 
 
 def test_grid_kernel_rejects_wrapping_keys(spark):
