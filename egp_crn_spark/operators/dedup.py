@@ -277,39 +277,25 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
 
 
 # ---------------------------------------------------------------- simhash
-def simhash64(text: Column, use_md5: bool = False) -> Column:
+def simhash64(text: Column) -> Column:
     """64-bit SimHash over whitespace tokens — pure Column: per-token
-    hash bits vote ±1 per position; sign → bit. Bit positions are
-    unrolled statically (shift amounts must be Python ints).
+    xxhash64 bits vote ±1 per position; sign → bit. Bit positions are
+    unrolled statically (shift amounts must be Python ints). The md5
+    form a DuckDB oracle can reproduce is simhash_signatures(use_md5=True).
 
-    use_md5=True derives the per-token bits from the first 16 hex chars
-    of md5('sh|' + token) so a DuckDB oracle can reproduce the signature
-    exactly (bit b = bit (b%4) of hex nibble 16 - b//4). Default
-    xxhash64 (JVM intrinsic) is the production path.
-
-    Either way the token hash is hoisted into a transform() so it runs
-    ONCE per token — lambda bodies get no Catalyst subexpression
-    elimination, so inlining it in the per-bit expressions would cost
-    64 hash evaluations per token."""
-    toks = tokens(text)
-    if use_md5:
-        toks = F.transform(toks, lambda t: F.md5(F.concat(F.lit("sh|"), t)))
-    else:
-        toks = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def bit(t: Column, b: int) -> Column:
-        if use_md5:
-            nibble = F.conv(F.substring(t, 16 - b // 4, 1), 16, 10).cast("int")
-            return F.shiftright(nibble, b % 4).bitwiseAND(F.lit(1))
-        return F.shiftright(t, b).bitwiseAND(F.lit(1))
-
+    The token hash is hoisted into a transform() so it runs ONCE per
+    token — lambda bodies get no Catalyst subexpression elimination, so
+    inlining it in the per-bit expressions would cost 64 hash
+    evaluations per token."""
+    toks = F.transform(tokens(text), lambda t: F.xxhash64(t))
     votes = F.aggregate(
         toks,
         F.array(*[F.lit(0)] * 64).cast("array<int>"),
         lambda acc, t: F.zip_with(
             acc,
             F.array(*[
-                F.when(bit(t, b) == 1, 1).otherwise(-1) for b in range(64)
+                F.when(F.shiftright(t, b).bitwiseAND(F.lit(1)) == 1, 1)
+                .otherwise(-1) for b in range(64)
             ]),
             lambda a, v: a + v,
         ),

@@ -27,19 +27,12 @@ DISSOLVED_SCHEMA = "bb_uid long, ring_idx int, vertices array<array<double>>, ar
 
 
 def dissolve_blocks(faces: DataFrame, block_col: str = "bb_uid",
-                    vertices: str = "vertices",
-                    packed_keys: bool = True) -> DataFrame:
-    """faces: (bb_uid, vertices ring). Returns dissolved rings per block.
-    ``packed_keys`` (default True, VERDICT r6 #7) keys segments with
-    node_key_packed structs instead of printf strings — same node
-    identity classes (see node_key_packed); the canonical
-    (least, greatest) pair order differs but the keys feed only the
-    groupBy equality, and boundary rows (_n = 1) carry deterministic
-    coords either way. Measured 1.2x on the 90k-face boundary stage
-    (BENCH/TOPOLOGY.md round-7 note); the same swap measured NO win at
-    snap_nodes and mb_v202 (string keys kept there). Keys are internal
-    only; output is coordinates."""
-    key = N.node_key_packed if packed_keys else N.node_key
+                    vertices: str = "vertices") -> DataFrame:
+    """faces: (bb_uid, vertices ring). Returns dissolved rings per block."""
+    # packed node-key structs, not printf strings, for the segment
+    # groupBy: measured 1.2x on the 90k-face boundary stage
+    # (BENCH/TOPOLOGY.md round-7 note)
+    key = N.node_key_packed
     ring = faces.select(
         F.col(block_col),
         F.concat(F.col(vertices), F.slice(F.col(vertices), 1, 1)).alias("rv"),

@@ -91,7 +91,6 @@ def point_near_arc_pairs(
     id_col: str = "segment_id",
     vertices: str = "vertices",
     res: int | None = None,
-    broadcast_points: bool = False,
 ) -> DataFrame:
     """RAW (p_id, arc id) candidate pairs within ``radius`` — exact
     predicate, but MAY repeat a pair (one row per qualifying segment ×
@@ -112,12 +111,6 @@ def point_near_arc_pairs(
         res, pad=radius)
     ix, iy = C.xy_to_ixy(F.col("x"), F.col("y"), res)
     pts = points.withColumn("_cell", C.cell_encode(ix, iy, res))
-    # broadcast_points: when the caller KNOWS the point side is small
-    # (bound-enforced — e.g. v302 counts its deadends first), broadcasting
-    # it keeps the exploded segment side entirely map-side: the arc table
-    # — the 100-TB side — is never shuffled at all.
-    if broadcast_points:
-        pts = F.broadcast(pts)
     d2 = point_segment_dist2(F.col("x"), F.col("y"), F.col("ax"), F.col("ay"),
                              F.col("bx"), F.col("by"))
     return pts.join(segs, "_cell").withColumn("_d2", d2).filter(

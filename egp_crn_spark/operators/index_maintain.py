@@ -44,6 +44,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .guard import broadcastable, join_hint
 from .similarity import ivf_assign, ivf_pq_assign
 
 AS_OF = "_as_of"
@@ -77,9 +78,6 @@ def index_delta(changelog: DataFrame, centroids: np.ndarray, as_of: int,
     return appends, tombstones
 
 
-_TOMB_BROADCAST_MAX = 4_000_000
-
-
 def live_index(index: DataFrame, tombstones: DataFrame) -> DataFrame:
     """Serving view of a maintained index: rows not killed by a
     tombstone. One tombstone per id (max _ts) left-joins the index.
@@ -89,20 +87,14 @@ def live_index(index: DataFrame, tombstones: DataFrame) -> DataFrame:
     heavy churn with no compaction grows it without bound, and an
     unconditional broadcast would silently exceed the driver/executor
     broadcast limit. The set is counted (one eager, metadata-sized
-    aggregate at construction) and broadcast only under
-    ``_TOMB_BROADCAST_MAX`` distinct ids (~4M ids ≈ 64 MB of (long, long)
-    rows); past it the join falls back to an explicit SHUFFLE_HASH
-    join — identical results (the hint pins the plan so neither the
-    planner nor AQE re-broadcasts a side we just measured as oversized),
+    aggregate at construction) and broadcast only up to
+    ``guard.BROADCAST_MAX_ROWS`` distinct ids; past it the join is a
+    pinned shuffled hash join (``guard.join_hint``) — identical results,
     and the size itself is the "compact me" signal (surfaced next to
     cell_balance via tombstone_backlog)."""
     t = tombstones.groupBy("n_id").agg(F.max(TOMB_TS).alias(TOMB_TS))
-    if t.count() <= _TOMB_BROADCAST_MAX:
-        t = F.broadcast(t)
-    else:
-        t = t.hint("shuffle_hash")
     return (
-        index.join(t, "n_id", "left")
+        index.join(t.hint(join_hint(t)), "n_id", "left")
         .filter(F.col(TOMB_TS).isNull() | (F.col(AS_OF) >= F.col(TOMB_TS)))
         .drop(TOMB_TS)
     )
@@ -117,7 +109,7 @@ def tombstone_backlog(tombstones: DataFrame) -> dict:
         F.count(F.lit(1)).alias("rows"),
         F.count_distinct(F.col("n_id")).alias("ids")).first()
     return {"rows": row["rows"], "ids": row["ids"],
-            "over_broadcast": row["ids"] > _TOMB_BROADCAST_MAX}
+            "over_broadcast": not broadcastable(row["ids"])}
 
 
 def maintain_ivf_index(corpus_table, centroids: np.ndarray,

@@ -35,6 +35,7 @@ from ..functions import cells as C
 from ..functions.georef import phash_x, phash_y
 from ..functions.imagecodec import decode_image, resize_nearest
 from .cellsets import cell_parent_expr
+from .guard import join_hint
 
 __all__ = ["base_tiles", "rollup_level", "build_pyramid",
            "pyramid_update"]
@@ -163,7 +164,7 @@ def rollup_level(tiles: DataFrame, tile_px: int = 16) -> DataFrame:
 
 
 def build_pyramid(images: DataFrame, res: int, min_res: int,
-                  tile_px: int = 16, persist: bool = True) -> DataFrame:
+                  tile_px: int = 16) -> DataFrame:
     """Full pyramid: levels ``res`` down to ``min_res`` inclusive,
     tagged with a ``res`` column. ``res - min_res`` rollup passes, each
     reading only the level above it."""
@@ -172,23 +173,18 @@ def build_pyramid(images: DataFrame, res: int, min_res: int,
     # each level is cached before the union: union branches re-execute
     # shared lineage otherwise, which would recompute the base decode
     # once PER LEVEL (at real scale each level lands in the catalog as
-    # it is built, which serves the same purpose). ``persist=False``
-    # (ADVICE r8 #4) lets callers in long-lived maintenance loops manage
-    # materialization themselves instead of accumulating cached levels
-    # this function never unpersists.
-    _p = (lambda df: df.cache()) if persist else (lambda df: df)
-    level = _p(base_tiles(images, res, tile_px))
+    # it is built, which serves the same purpose)
+    level = base_tiles(images, res, tile_px).cache()
     out = level.withColumn("res", F.lit(res))
     for r in range(res - 1, min_res - 1, -1):
-        level = _p(rollup_level(level, tile_px))
+        level = rollup_level(level, tile_px).cache()
         out = out.unionByName(level.withColumn("res", F.lit(r)))
     return out.select("res", "cell", "px", "n_src")
 
 
 def pyramid_update(old_pyramid: DataFrame, images: DataFrame,
                    changed: DataFrame, res: int, min_res: int,
-                   tile_px: int = 16, emit: str = "full",
-                   persist: bool = True) -> DataFrame:
+                   tile_px: int = 16, emit: str = "full") -> DataFrame:
     """Incremental pyramid maintenance: re-roll ONLY the dirty subtrees.
 
     ``old_pyramid`` is a prior ``build_pyramid`` output (levels ``res``
@@ -230,41 +226,33 @@ def pyramid_update(old_pyramid: DataFrame, images: DataFrame,
     boundary)."""
     if emit not in ("full", "delta"):
         raise ValueError("emit must be 'full' or 'delta'")
-    _p = (lambda df: df.cache()) if persist else (lambda df: df)
     cell = C.cell_of_xy(phash_x(F.col("phash")), phash_y(F.col("phash")),
                         res)
-    dirty = _p(changed.select(cell.alias("cell")).distinct())
-    # broadcast the dirty set only while it is broadcast-sized — the
-    # live_index tombstone lesson (operators/index_maintain.py): a
-    # metadata-sized set usually, but a churn-everything changelog at a
-    # fine res could exceed the broadcast limit, so fall back to
-    # shuffled semi/anti joins past the threshold (identical results)
-    _DIRTY_BCAST_MAX = 5_000_000
-    n_dirty = dirty.count()  # dirty is cached; reused at every level
-
-    def _hint(df):
-        return F.broadcast(df) if n_dirty <= _DIRTY_BCAST_MAX else df
-
-    level_new = _p(base_tiles(
-        images.join(_hint(dirty.withColumnRenamed("cell", "_dirty")),
+    dirty = changed.select(cell.alias("cell")).distinct().cache()
+    # dirty is cached; its one count decides the join strategy of every
+    # level (coarser dirty sets are never larger than the base one)
+    h = join_hint(dirty)
+    level_new = base_tiles(
+        images.join(dirty.withColumnRenamed("cell", "_dirty").hint(h),
                     cell == F.col("_dirty"), "left_semi"),
-        res, tile_px))
+        res, tile_px).cache()
+
     def _patched(r, level_new, dirty):
-        return _p(old_pyramid.filter(F.col("res") == r)
-                  .select("cell", "px", "n_src")
-                  .join(_hint(dirty), "cell", "left_anti")
-                  .unionByName(level_new))
+        return (old_pyramid.filter(F.col("res") == r)
+                .select("cell", "px", "n_src")
+                .join(dirty.hint(h), "cell", "left_anti")
+                .unionByName(level_new).cache())
 
     cur = _patched(res, level_new, dirty)
     out = (level_new if emit == "delta" else cur).withColumn(
         "res", F.lit(res))
     for r in range(res - 1, min_res - 1, -1):
-        dirty = _p(dirty.select(
-            cell_parent_expr(F.col("cell")).alias("cell")).distinct())
+        dirty = dirty.select(
+            cell_parent_expr(F.col("cell")).alias("cell")).distinct().cache()
         siblings = cur.join(
-            _hint(dirty),
+            dirty.hint(h),
             cell_parent_expr(cur["cell"]) == dirty["cell"], "left_semi")
-        level_new = _p(rollup_level(siblings, tile_px))
+        level_new = rollup_level(siblings, tile_px).cache()
         cur = _patched(r, level_new, dirty)
         out = out.unionByName(
             (level_new if emit == "delta" else cur)

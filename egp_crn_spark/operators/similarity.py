@@ -331,7 +331,6 @@ def ivf_probe(
     k: int = 5,
     nprobe: int = 4,
     method: str = "auto",
-    broadcast_queries: bool = True,
     max_cell: int | None = None,
 ) -> DataFrame:
     """IVF QUERY: probe the nprobe nearest cells per query — a cell
@@ -339,14 +338,9 @@ def ivf_probe(
     prefilter), candidates shrink ~ncells/nprobe vs brute force.
     ``method`` picks the quantizer form (see ivf_assign).
 
-    ``broadcast_queries`` (default True) hints the probe side into a
-    broadcast join so the corpus index is NEVER shuffled — the serving
-    shape: query batches are interactively small while the index is the
-    10^9+-row side (and may be a bucketed table). This must be an
-    explicit hint because the matmul quantizer emits probes through
-    mapInPandas, whose unknown size statistics otherwise push Catalyst to
-    a sort-merge join that shuffles the whole index. Pass False only for
-    offline mega-batches where the query side rivals the corpus.
+    The probe side is broadcast so the corpus index is NEVER shuffled —
+    the serving shape: query batches are interactively small while the
+    index is the 10^9+-row side (and may be a bucketed table).
 
     ``max_cell`` (optional) bounds candidates per probed cell via
     cap_index_cells — use its standalone form to also get the audit of
@@ -360,8 +354,8 @@ def ivf_probe(
         )
     else:
         probes = _probe_cells_matmul(queries.select("q_id", "qv"), centroids, nprobe)
-    if broadcast_queries:
-        probes = F.broadcast(probes)
+    # an explicit hint: mapInPandas output has no size statistics
+    probes = F.broadcast(probes)
     # norms hoisted per row (see brute_force_topk) — bit-identical cosine
     # No pair dedup needed: ivf_assign places each corpus vector in exactly
     # ONE cell and the nprobe probe cells per query are distinct, so a
@@ -552,7 +546,6 @@ def ivf_pq_probe(queries: DataFrame, index_pq: DataFrame,
                  refine_corpus: DataFrame | None = None,
                  refine_mult: int = 16,
                  vec_col: str = "embedding", id_col: str = "vec_id",
-                 broadcast_queries: bool = True,
                  max_cell: int | None = None,
                  approx_ok: bool = False) -> DataFrame:
     """Query the COMPRESSED index: probe cells exactly like ivf_probe,
@@ -581,9 +574,8 @@ def ivf_pq_probe(queries: DataFrame, index_pq: DataFrame,
         index_pq, _ = cap_index_cells(index_pq, max_cell)
     probes = _probe_cells_matmul(
         queries.select("q_id", "qv"), centroids, nprobe)
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    cand = probes.join(index_pq, "cell")
+    # an explicit hint: mapInPandas output has no size statistics
+    cand = F.broadcast(probes).join(index_pq, "cell")
     sc = cand.sparkSession.sparkContext
     bc_C = sc.broadcast(np.ascontiguousarray(centroids, dtype=np.float64))
     bc_B = sc.broadcast(np.ascontiguousarray(codebooks, dtype=np.float64))

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from ..functions import cells as C
 from ..functions import geomkernel as GK
+from .guard import collect_bounded
 
 
 # ---------------------------------------------------------------------------
@@ -140,22 +141,6 @@ MAX_GRID_RIGHT_ROWS = 2_000_000  # dimension-sized contract for the grid kernel
 _GRID_INDEX_BOUND = 1 << 31  # |cell index| bound of the packed grid key
 
 
-def _collect_bounded(df: DataFrame, max_rows: int, what: str) -> pd.DataFrame:
-    """Collect a dimension-sized side to the driver, enforcing the bound.
-
-    ``limit(max_rows + 1)`` is collected in ONE job (no separate count,
-    the lineage runs once); more than ``max_rows`` rows back means the
-    dimension-sized contract is violated, and it raises naming the bound
-    (``what``) instead of silently OOMing the driver."""
-    pdf = df.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows:
-        raise ValueError(
-            f"{what} is collected to the driver, but it has more than "
-            f"{max_rows} rows; it must be dimension-sized — take the join "
-            "path, shard the input, or raise the bound")
-    return pdf
-
-
 def _grid_index(v: np.ndarray, s: float, side: str) -> np.ndarray:
     """floor(v / s) of finite coordinates as int64 grid cell indices.
     Raises once an index reaches 2**31 in magnitude: the packed key
@@ -193,7 +178,7 @@ def _grid_distance_kernel(
     Output schema/list parity with the join path:
     [left cols..., right cols..., dist].
 
-    The right side is collected by _collect_bounded under
+    The right side is collected by collect_bounded under
     MAX_GRID_RIGHT_ROWS.
 
     ``topk_per_row``: emit only each LEFT ROW's top-k candidates by
@@ -202,7 +187,7 @@ def _grid_distance_kernel(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     sc = left.sparkSession.sparkContext
-    rpdf = _collect_bounded(
+    rpdf = collect_bounded(
         right, MAX_GRID_RIGHT_ROWS,
         "the distance_join(broadcast_right=True) right side "
         "(MAX_GRID_RIGHT_ROWS)")
@@ -457,11 +442,11 @@ def pip_refine_udf(polys: DataFrame):
     exchange of the id strings alone cost more than the geometry.)
 
     CONTRACT: ``polys`` is dimension-sized (it is collected + broadcast).
-    The bound is ENFORCED, not assumed — _collect_bounded raises past
+    The bound is ENFORCED, not assumed — collect_bounded raises past
     MAX_BROADCAST_POLYS; shard such sets (e.g. per tile via
     groupBy().applyInPandas) before refining.
     """
-    ppdf = _collect_bounded(polys.select("poly_id", "vertices"),
+    ppdf = collect_bounded(polys.select("poly_id", "vertices"),
                             MAX_BROADCAST_POLYS,
                             "the pip_refine_udf polygon set (MAX_BROADCAST_POLYS)")
     polys_local: dict[int, np.ndarray] = {

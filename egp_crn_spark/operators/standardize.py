@@ -161,9 +161,9 @@ def drop_validation_columns(df: DataFrame) -> DataFrame:
     return df.drop(*stale) if stale else df
 
 
-def standardize(df: DataFrame, round_coords: bool = True) -> DataFrame:
+def standardize(df: DataFrame) -> DataFrame:
     """Full pipeline in reference order (helpers.py:443-639)."""
-    df = clean_vertices(df) if round_coords else df
+    df = clean_vertices(df)
     df = standardize_attributes(df)
     df = repair_identifiers(df)
     df = drop_validation_columns(df)

@@ -27,6 +27,7 @@ from ..functions import geomexpr as GX
 from ..functions import geomkernel as GK
 from . import nodes as N
 from .distance import point_near_arc_pairs
+from .guard import join_hint
 from .spatial_join import rect_intersects_join
 
 
@@ -80,7 +81,7 @@ def v201_duplicated(arcs: DataFrame, id_col: str = "segment_id",
 
 
 # ---------------------------------------------------------------- pairwise prefilter
-def _arc_pair_candidates(arcs: DataFrame, res: int, id_col: str, vertices: str,
+def _arc_candidate_pairs(arcs: DataFrame, res: int, id_col: str, vertices: str,
                          with_checksum: bool = False,
                          salt_hot: tuple[int, int] | None = None) -> DataFrame:
     """Candidate arc pairs by bbox-cell intersection (a_id < b_id once).
@@ -246,25 +247,12 @@ def _pairs_to_flags(hit_pairs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------- 202
 def v202_overlap(arcs: DataFrame, res: int = 10, id_col: str = "segment_id",
                  vertices: str = "vertices",
-                 pair_candidates: DataFrame | None = None,
                  salt_hot: tuple[int, int] | None = None) -> DataFrame:
     """Arcs must not overlap (share a collinear positive-length section).
     shapely `overlaps` excludes equal geometries, so checksum-equal pairs
-    are removed before the kernel (validate_topology.py:383-392).
-    ``pair_candidates`` lets the composed validate_topology() share one
-    cached bbox-cell self-join between 202 and 303."""
-    if pair_candidates is not None and "ack" not in pair_candidates.columns:
-        # shared candidates built without checksums: join them back by id
-        ck = arcs.select(F.col(id_col), GX.geom_checksum128(F.col(vertices)).alias("_ck"))
-        cand = (
-            pair_candidates
-            .join(ck.withColumnRenamed(id_col, "a_id").withColumnRenamed("_ck", "ack"), "a_id")
-            .join(ck.withColumnRenamed(id_col, "b_id").withColumnRenamed("_ck", "bck"), "b_id")
-        )
-    else:
-        cand = (pair_candidates if pair_candidates is not None
-                else _arc_pair_candidates(arcs, res, id_col, vertices,
-                                          with_checksum=True, salt_hot=salt_hot))
+    are removed before the kernel (validate_topology.py:383-392)."""
+    cand = _arc_candidate_pairs(arcs, res, id_col, vertices,
+                                with_checksum=True, salt_hot=salt_hot)
     cand = cand.filter(F.col("ack") != F.col("bck"))
     return _pairs_to_flags(_refine_pairs(
         cand, arcs, GK.polylines_overlap, _seg_overlap_col(), id_col, vertices,
@@ -274,15 +262,12 @@ def v202_overlap(arcs: DataFrame, res: int = 10, id_col: str = "segment_id",
 # ---------------------------------------------------------------- 303
 def v303_crosses(arcs: DataFrame, res: int = 10, id_col: str = "segment_id",
                  vertices: str = "vertices",
-                 pair_candidates: DataFrame | None = None,
                  salt_hot: tuple[int, int] | None = None) -> DataFrame:
     """Arcs must not cross (must be segmented at intersections) —
     validate_topology.py:274-294. For single-segment pairs (no interior
     vertices) shapely `crosses` reduces to the proper-crossing test,
     which vectorizes across the whole Arrow batch."""
-    cand = (pair_candidates if pair_candidates is not None
-            else _arc_pair_candidates(arcs, res, id_col, vertices,
-                                      salt_hot=salt_hot))
+    cand = _arc_candidate_pairs(arcs, res, id_col, vertices, salt_hot=salt_hot)
     return _pairs_to_flags(_refine_pairs(
         cand, arcs, GK.polylines_cross_shapely, _seg_cross_col(), id_col, vertices,
     ))
@@ -323,14 +308,6 @@ def v301_node_intersection(arcs: DataFrame, id_col: str = "segment_id",
 
 
 # ---------------------------------------------------------------- 302
-# Max deadend rows for which v302 broadcasts the deadend side of its two
-# joins (points into the distance join, endpoints into the connectivity
-# join). 1M rows of (id, node, x, y) is ~40-60 MB serialized — cheap for
-# executors with the usual 4-8 GiB; above it the joins fall back to
-# shuffles. Deadends are a few % of a real road network, so the
-# broadcast path is the production-shaped one.
-DEADEND_BROADCAST_MAX = 1_000_000
-
 # The one persisted intermediate a v302 run leaves behind. Kept so a
 # REPEATED v302 (demo trials, re-validation sweeps) releases the prior
 # run's cached deadend blocks instead of accumulating them in executor
@@ -386,16 +363,14 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     dead = (N.deadends(arcs, id_col, vertices, packed=True)
             .withColumnRenamed(id_col, "src_id").persist())
     _V302_PERSISTED.append(dead)
-    # bound-enforced broadcast decision (the PIP pattern): deadends are
-    # the validation's subject and a few % of a real network, so both the
-    # distance join's point side and the connectivity join's endpoint
-    # side usually fit a broadcast — then the 100-TB arc side is NEVER
-    # shuffled in either join. The count materializes the persisted
-    # deadends once (work every consumer below needs anyway) and the
-    # worst case (a pathological all-deadend network) falls back to
-    # plain shuffle joins.
-    n_dead = dead.count()
-    small = n_dead <= DEADEND_BROADCAST_MAX
+    # bound-enforced broadcast decision: deadends are the validation's
+    # subject and a few % of a real network, so both the distance join's
+    # point side and the connectivity join's endpoint side usually fit a
+    # broadcast — then the 100-TB arc side is NEVER shuffled in either
+    # join. The count materializes the persisted deadends once (work
+    # every consumer below needs anyway); a pathological all-deadend
+    # network gets shuffled hash joins instead.
+    h = join_hint(dead)
     # p_id = src_id ALONE — the deadend node key is never consumed past
     # this join, so carrying it (a ~20-char string on every k-ring-
     # exploded candidate row) would only widen the join shuffle. The two
@@ -404,9 +379,8 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # distinct below collapses pair duplicates anyway (a min-distance
     # aggregation would be a wasted extra shuffle).
     hits = point_near_arc_pairs(
-        dead.select(F.col("src_id").alias("p_id"), "x", "y"),
+        dead.select(F.col("src_id").alias("p_id"), "x", "y").hint(h),
         arcs, min_dist, id_col=id_col, vertices=vertices,
-        broadcast_points=small,
     ).select(F.col("p_id").alias("src_id"), F.col(id_col).alias("near_id"))
     # connected = arcs referencing either endpoint NODE of the source arc
     # (pts_id_lookup over ALL vertices — validate_topology.py:211-215).
@@ -424,14 +398,12 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # duplicates only arise from an arc revisiting a node (rare in noded
     # data), and the pre-distinct was a full extra exchange of the widest
     # exploded set — `connected` dedups the (much smaller) join output
-    # anyway. When the deadend count is small (the `small` bound above),
-    # the endpoint side broadcasts and the vertex explode stays entirely
-    # map-side — no vertex row is ever shuffled.
+    # anyway. When the deadend side broadcasts (``h`` above), the vertex
+    # explode stays entirely map-side — no vertex row is ever shuffled.
     allv = N.all_vertex_nodes(arcs, id_col, vertices, packed=True).select(
         "node", F.col(id_col).alias("near_id")
     )
-    src_side = F.broadcast(src_end_nodes) if small else src_end_nodes
-    connected = (src_side.join(allv, "node")
+    connected = (src_end_nodes.hint(h).join(allv, "node")
                  .select("src_id", "near_id").distinct())
     # per-arc SET subtraction (validate_topology.py:219-221): an arc with
     # BOTH endpoints deadends near the same arc yields the pair twice in
@@ -466,14 +438,7 @@ VALIDATIONS = {
 def validate_topology(arcs: DataFrame, codes: list[int] | None = None,
                       id_col: str = "segment_id") -> DataFrame:
     """Run validations and pivot flag sets into v<code> int columns
-    (validate_topology.py:156-172). ``arcs`` should be standardized first.
-
-    202 and 303 accept a shared precomputed ``pair_candidates`` frame,
-    but the composed run does NOT cache one by default: candidates are
-    column-pruned (ids + endpoints + bbox, never vertex arrays) and each
-    validation consumes them in ONE linear pipeline, so a persist barrier
-    buys nothing (the round-2 array-carrying variant measured 2x slower
-    when cached; the round-3 slim variant is fastest recomputed)."""
+    (validate_topology.py:156-172). ``arcs`` should be standardized first."""
     # shared normalized projection across 7 validations; registered so
     # validate_release() can drop it once the flagged output is consumed
     validate_release()

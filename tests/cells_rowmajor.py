@@ -15,7 +15,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import EXTENT, MAX_RES
+from egp_crn_spark.config import EXTENT, MAX_RES
 
 RES_SHIFT = 36
 

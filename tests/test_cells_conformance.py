@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from egp_crn_spark.config import EXTENT
 from egp_crn_spark.functions import cells as morton_cells
-from egp_crn_spark.functions import cells_rowmajor
+from tests import cells_rowmajor
 
 
 try:

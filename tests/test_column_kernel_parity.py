@@ -73,13 +73,13 @@ def test_overlap_column_matches_kernel(spark):
 def test_pair_candidates_never_carry_arrays(spark):
     """Regression guard for the round-3 column pruning: the candidate
     frame the cell self-join shuffles must hold NO array column."""
-    from egp_crn_spark.operators.validate import _arc_pair_candidates
+    from egp_crn_spark.operators.validate import _arc_candidate_pairs
 
     arcs = spark.createDataFrame(pd.DataFrame({
         "segment_id": ["a", "b"],
         "vertices": [[[0.0, 0.0], [10.0, 0.0]], [[5.0, -5.0], [5.0, 5.0]]],
     }))
-    cand = _arc_pair_candidates(arcs, 10, "segment_id", "vertices",
+    cand = _arc_candidate_pairs(arcs, 10, "segment_id", "vertices",
                                 with_checksum=True)
     assert all(not str(f.dataType).lower().startswith("array")
                for f in cand.schema.fields), cand.schema.simpleString()

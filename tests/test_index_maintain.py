@@ -296,26 +296,39 @@ def test_cell_balance_flags_drift(spark, trained):
 
 def test_tombstone_broadcast_guard_fallback(spark, trained, monkeypatch):
     """VERDICT r7 #4: an oversized tombstone backlog flips live_index
-    from broadcast to a shuffled join automatically — identical results
-    both paths — and tombstone_backlog surfaces the compact-me signal."""
+    from broadcast to a pinned shuffled hash join automatically —
+    identical results both paths — and tombstone_backlog surfaces the
+    compact-me signal. The bound is guard.BROADCAST_MAX_ROWS, inclusive."""
     t, C, B, (s1, s2, s3) = trained
     idx, tombs = IM.build_index_state(t.read(s1), C, s1)
     for frm, to in [(s1, s2), (s2, s3)]:
         idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
     from egp_crn_spark import plans
+    from egp_crn_spark.operators import guard
     # a large cap broadcasts the tombstones
-    monkeypatch.setattr(IM, "_TOMB_BROADCAST_MAX", 1 << 40)
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", 1 << 40)
     bcast = IM.live_index(idx, tombs)
     assert "BroadcastHashJoin" in plans.physical_plan(bcast)
     assert not IM.tombstone_backlog(tombs)["over_broadcast"]
     # plant a backlog larger than a tiny cap: the shuffled path
-    monkeypatch.setattr(IM, "_TOMB_BROADCAST_MAX", 2)
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", 2)
     shuffled = IM.live_index(idx, tombs)
     p = plans.physical_plan(shuffled)
     assert "BroadcastHashJoin" not in p, p[:1200]
+    assert "ShuffledHashJoin" in p, p[:1200]
     assert _index_set(shuffled, False) == _index_set(bcast, False)
     back = IM.tombstone_backlog(tombs)
     assert back["ids"] > 2 and back["over_broadcast"]
+    # boundary: exactly ids rows at a bound of ids broadcasts; one row
+    # over the bound takes the shuffled hash join
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", back["ids"])
+    at = plans.physical_plan(IM.live_index(idx, tombs))
+    assert "BroadcastHashJoin" in at and "ShuffledHashJoin" not in at
+    assert not IM.tombstone_backlog(tombs)["over_broadcast"]
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", back["ids"] - 1)
+    over = plans.physical_plan(IM.live_index(idx, tombs))
+    assert "ShuffledHashJoin" in over and "BroadcastHashJoin" not in over
+    assert IM.tombstone_backlog(tombs)["over_broadcast"]
     # compaction clears the pressure
     cidx, ctombs = IM.compact_index(idx, tombs)
     cback = IM.tombstone_backlog(ctombs)

@@ -1,10 +1,12 @@
-"""Dead-code gate: every top-level def/class in the package is used.
+"""Dead-code gates, Spark-free, over the parsed ``egp_crn_spark/**`` modules.
 
-Spark-free. Parses each ``egp_crn_spark/**/*.py`` module, and for every
-top-level function or class looks for its name (as a whole word) in the
-package, the tests, the tools, the benchmark and the bench entry points
-— everywhere except the definition's own source lines. A name found
-nowhere else is dead code and fails the test.
+1. Every top-level function or class has its name (as a whole word)
+   somewhere in the package, the tests, the tools, the benchmark or the
+   bench entry points — everywhere except the definition's own source
+   lines. A name found nowhere else is dead code.
+2. Every parameter whose default is a ``bool`` literal is passed by at
+   least one call outside ``tests/`` (by keyword, by position, or via
+   ``*``/``**``). A flag no caller sets is a fork with one live branch.
 """
 
 from __future__ import annotations
@@ -50,3 +52,59 @@ def unreferenced_names() -> list[str]:
 def test_no_unreferenced_top_level_definitions():
     dead = unreferenced_names()
     assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)
+
+
+def _positional_index(fn: ast.FunctionDef | ast.AsyncFunctionDef,
+                      name: str) -> int | None:
+    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    if pos and pos[0] in ("self", "cls"):
+        pos = pos[1:]
+    return pos.index(name) if name in pos else None
+
+
+def _passes(call: ast.Call, name: str, index: int | None) -> bool:
+    if any(k.arg is None or k.arg == name for k in call.keywords):
+        return True
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    return index is not None and len(call.args) > index
+
+
+def unset_flags() -> list[str]:
+    corpus = _corpus()
+    # callee name -> every call to a function or method of that name
+    # outside tests/
+    calls: dict[str, list[ast.Call]] = {}
+    for path, text in corpus.items():
+        if path.is_relative_to(ROOT / "tests"):
+            continue
+        for node in ast.walk(ast.parse("\n".join(text))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                callee = (f.id if isinstance(f, ast.Name)
+                          else f.attr if isinstance(f, ast.Attribute) else None)
+                if callee:
+                    calls.setdefault(callee, []).append(node)
+    unset = []
+    for mod in sorted(PACKAGE.rglob("*.py")):
+        for fn in ast.walk(ast.parse("\n".join(corpus[mod]))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            params = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+            params += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for p, d in params:
+                if not (isinstance(d, ast.Constant) and isinstance(d.value, bool)):
+                    continue
+                index = _positional_index(fn, p.arg)
+                if not any(_passes(c, p.arg, index)
+                           for c in calls.get(fn.name, [])):
+                    unset.append(f"{mod.relative_to(ROOT)}::{fn.name}({p.arg})")
+    return unset
+
+
+def test_no_bool_flag_left_unset():
+    unset = unset_flags()
+    assert not unset, ("bool parameters no call outside tests/ sets:\n"
+                       + "\n".join(unset))

@@ -456,14 +456,15 @@ def test_simhash_md5_matches_xxhash_structure(spark):
     assert (got.hamming <= 10).all()
 
 
-def test_v302_small_deadend_broadcast_path(spark):
+def test_v302_small_deadend_broadcast_path(spark, monkeypatch):
     """The bound-enforced v302 broadcast decision: with few deadends the
     distance join's point side and the connectivity join's endpoint side
     BROADCAST (the arc side is never shuffled); with the bound forced to
-    0 the same input takes the shuffle fallback. Both paths must flag
-    the same arcs."""
+    0 the same input takes pinned shuffled hash joins. Both paths must
+    flag the same arcs."""
     import pandas as pd
 
+    from egp_crn_spark.operators import guard
     from egp_crn_spark.operators import validate as V
     from egp_crn_spark import plans
 
@@ -479,12 +480,10 @@ def test_v302_small_deadend_broadcast_path(spark):
     assert plans.has_broadcast_join(df_b), "small deadend set must broadcast"
     got_b = sorted(r.flagged_id for r in df_b.collect())
 
-    orig = V.DEADEND_BROADCAST_MAX
-    try:
-        V.DEADEND_BROADCAST_MAX = 0
-        got_s = sorted(r.flagged_id for r in V.v302_min_distance(net).collect())
-    finally:
-        V.DEADEND_BROADCAST_MAX = orig
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", 0)
+    df_s = V.v302_min_distance(net)
+    assert "ShuffledHashJoin" in plans.physical_plan(df_s)
+    got_s = sorted(r.flagged_id for r in df_s.collect())
     assert got_b == got_s == ["road", "stub"]
 
 

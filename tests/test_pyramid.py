@@ -82,11 +82,21 @@ def test_count_conservation(spark, images):
     assert all(r.n == total for r in per_level)
 
 
-def test_pyramid_update_equals_rebuild(spark, images):
+@pytest.mark.parametrize("bound", ["under", "over"])
+def test_pyramid_update_equals_rebuild(spark, images, monkeypatch, bound):
     """Incremental maintenance == full rebuild, byte-equal at every
     level, across inserts + deletes (including cells emptied by the
-    delete of their last image)."""
+    delete of their last image) — with the dirty set broadcast (under
+    the guard bound) and with it over the bound (shuffled hash joins)."""
+    from egp_crn_spark import plans
+    from egp_crn_spark.operators import guard
     from egp_crn_spark.operators.pyramid import pyramid_update
+
+    # cache lookups ignore join hints, so levels cached by an earlier
+    # call would stand in for this call's hinted joins
+    spark.catalog.clearCache()
+    if bound == "over":
+        monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", 0)
 
     h = F.abs(F.xxhash64("image_id", F.lit(11)))
     v1 = images.filter(h % 3 != 0)
@@ -99,7 +109,10 @@ def test_pyramid_update_equals_rebuild(spark, images):
                                                F.lit("delete"))))
 
     old = build_pyramid(v1, RES, MIN_RES, PX)
-    got = pyramid_update(old, v2, changed, RES, MIN_RES, PX).toPandas()
+    upd = pyramid_update(old, v2, changed, RES, MIN_RES, PX)
+    join = "ShuffledHashJoin" if bound == "over" else "BroadcastHashJoin"
+    assert join in plans.physical_plan(upd)
+    got = upd.toPandas()
     want = build_pyramid(v2, RES, MIN_RES, PX).toPandas()
     assert len(got) == len(want)
     gm = {(int(r["res"]), int(r["cell"])): (bytes(r["px"]), int(r["n_src"]))

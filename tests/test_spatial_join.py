@@ -238,7 +238,7 @@ def _pip_caller(spark, rng):
     ("MAX_BROADCAST_POLYS", _pip_caller),
 ], ids=["grid", "pip"])
 def test_grid_kernel_rejects_oversize_right(spark, rng, monkeypatch, bound, make):
-    """Both driver-side collects go through _collect_bounded: a planted
+    """Both driver-side collects go through guard.collect_bounded: a planted
     collected side of 31 rows, one row over the bound, raises at
     construction; exactly at the bound it runs."""
     build = make(spark, rng)

@@ -81,9 +81,9 @@ def main() -> None:
     ))
 
     # 2) validation pair candidates: no arrays in the shuffle, fused fast path
-    from egp_crn_spark.operators.validate import (_arc_pair_candidates,
+    from egp_crn_spark.operators.validate import (_arc_candidate_pairs,
                                                   _seg_cross_col, v303_crosses)
-    cand = _arc_pair_candidates(arcs, 10, "segment_id", "vertices")
+    cand = _arc_candidate_pairs(arcs, 10, "segment_id", "vertices")
     audits.append(audit(
         "v202/v303 pair candidates (column-pruned cell self-join)",
         cand.filter(_seg_cross_col()),
@@ -183,7 +183,7 @@ def main() -> None:
     # hint (skips both SMJ sort passes — measured 1.3x at 2M arcs); at
     # audit size the input must be big enough that AQE does not demote
     # the join to broadcast, so the hint's physical form is visible
-    from egp_crn_spark.operators.validate import _arc_pair_candidates
+    from egp_crn_spark.operators.validate import _arc_candidate_pairs
 
     big_arcs = spark.range(100_000).select(
         F.concat(F.lit("s"), F.col("id")).alias("segment_id"),
@@ -195,7 +195,7 @@ def main() -> None:
         ).alias("vertices"))
     audits.append(audit(
         "arc pair candidates (topology self-join)",
-        _arc_pair_candidates(big_arcs, 10, "segment_id", "vertices",
+        _arc_candidate_pairs(big_arcs, 10, "segment_id", "vertices",
                              with_checksum=True).groupBy().count(),
         wants=[("shuffle-hash join (no sorts)", r"ShuffledHashJoin")],
         forbids=[("sort-merge join", r"SortMergeJoin"),
@@ -220,13 +220,13 @@ def main() -> None:
                  ("vertex side shuffled on node", r"SortMergeJoin \[node#"),
                  ("per-row Python UDF", r"BatchEvalPython"),
                  ("cartesian product", r"CartesianProduct")],
-        notes="Bound-enforced (deadends counted first): the point side "
-              "of the dilated-bbox distance join and the endpoint side "
-              "of the connectivity join broadcast — the arc/vertex side "
-              "is never shuffled on the cell or node key (the tiny "
-              "pair-level set subtraction may still SMJ; it is bounded "
-              "by the deadend count). Pathological all-deadend inputs "
-              "fall back to shuffle joins.",
+        notes="Bound-enforced (join_hint counts the deadends): the "
+              "point side of the dilated-bbox distance join and the "
+              "endpoint side of the connectivity join broadcast — the "
+              "arc/vertex side is never shuffled on the cell or node key "
+              "(the tiny pair-level set subtraction may still SMJ; it is "
+              "bounded by the deadend count). Pathological all-deadend "
+              "inputs get shuffled hash joins.",
     ))
 
     # 10) IVF-PQ compressed serving: probes broadcast, the index is

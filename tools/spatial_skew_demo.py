@@ -26,7 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from egp_crn_spark.config import env_cpus  # noqa: E402
 from egp_crn_spark.operators.validate import (  # noqa: E402
-    _arc_pair_candidates,
+    _arc_candidate_pairs,
     v303_crosses,
 )
 from egp_crn_spark.session import get_session  # noqa: E402
@@ -85,7 +85,7 @@ def main() -> None:
 
     def key_mass(salt_hot):
         """Candidate rows per join task key — the skew observable."""
-        cand = _arc_pair_candidates(net, RES, "segment_id", "vertices",
+        cand = _arc_candidate_pairs(net, RES, "segment_id", "vertices",
                                     salt_hot=salt_hot)
         prof = cand.groupBy(F.spark_partition_id().alias("p")).count()
         row = prof.agg(F.max("count").alias("mx"), F.sum("count").alias("n")).first()
