@@ -22,7 +22,8 @@ PHASH_AXIS_BITS: int = 32
 #: Max cell resolution: 2**r cells per axis, r in [0, MAX_RES].
 MAX_RES: int = 16
 
-#: Coordinate rounding, in decimals, applied before node-equality tests —
+#: Coordinate rounding, in decimals, of the one node identity
+#: (operators/nodes.node_key: struct<nx, ny> of round(coord, 5) * 10^5) —
 #: mirrors reference 5-decimal rounding (/root/reference/src/helpers.py:306-342).
 COORD_DECIMALS: int = 5
 

@@ -1,23 +1,1 @@
-"""Column-function library. Cell backends live behind the cells.py seam;
-``geodesic_backend()`` picks the geodesic implementation available in
-the current environment."""
-
-from __future__ import annotations
-
-
-def geodesic_backend():
-    """The geodesic cell backend module: real H3 when the library is
-    importable, else the dependency-free native S2 implementation
-    (cells_s2 — always available, fully vectorized). Both expose the
-    cells.py seam surface (cell_of_xy / parent_cell / kring_of_xy /
-    res_for_radius / cell_size / MAX_RES) and pass the conformance
-    battery in tests/test_cells_conformance.py. The planar Morton
-    backend (cells.py) stays the PERFORMANCE default — pure-Column bit
-    arithmetic beats any Python-batch encode — so geodesic is an
-    explicit opt-in for workloads that need true spherical cells."""
-    try:
-        from . import cells_h3
-        return cells_h3
-    except ImportError:
-        from . import cells_s2
-        return cells_s2
+"""Column-function library. Cell backends live behind the cells.py seam."""

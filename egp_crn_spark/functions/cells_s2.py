@@ -6,8 +6,7 @@ gated. This module closes the gap for real: S2 cell ids implemented
 natively from the PUBLISHED algorithm (s2geometry's documented cell-id
 scheme — cube-face projection, quadratic ST transform, Hilbert-curve
 position, trailing-bit level marker) as vectorized numpy kernels. No
-external library, importable everywhere, and therefore the GEODESIC
-DEFAULT when ``h3`` is missing (``functions.geodesic_backend()``).
+external library, importable everywhere.
 
 Layout of a cell id (uint64, stored as int64 bigint — faces 4-5 set the
 sign bit, which is fine for the equi-joins and range containment the

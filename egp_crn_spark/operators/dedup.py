@@ -81,6 +81,29 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def _vector_matrix(vecs, dim: int | None, what: str):
+    """(n, dim) ndarray over one Arrow batch's list column of fixed-width
+    vectors (near zero-copy: the flat value buffer, reshaped).
+    ``dim=None`` takes the width from the batch, which must be uniform.
+    A null or a row of another width would shift every later row's
+    values after flatten() — even when the total length happens to be
+    n x dim — so both raise ValueError naming ``what``."""
+    import numpy as np
+
+    n = len(vecs)
+    if vecs.null_count:
+        raise ValueError(f"{what} has {vecs.null_count} null vector(s)")
+    widths = np.diff(vecs.offsets.to_numpy(zero_copy_only=False))
+    if dim is None:
+        dim = int(widths[0]) if n else 0
+    bad = widths != dim
+    if bad.any():
+        raise ValueError(
+            f"{what} has ragged vectors: {int(bad.sum())} of {n} rows "
+            f"are not {dim} wide (first: {int(widths[bad][0])})")
+    return vecs.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+
+
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        num_hashes: int, k: int, use_md5: bool) -> DataFrame:
     """(id, sig array): minhash signatures via EXPLODE + min-aggregate.
@@ -532,24 +555,12 @@ def _banded_signs_matmul(sel: DataFrame, planes, bands: int,
             if not n:
                 continue
             vcol = b.column(1)
-            flat = vcol.flatten()
+            X = _vector_matrix(
+                vcol, None if P is None else P.shape[1],
+                f"dedup_embedding_cosine: column '{v_field.name}'")
             if P is None:
-                if vcol.null_count or len(flat) % n:
-                    raise ValueError(
-                        f"dedup_embedding_cosine: column "
-                        f"'{v_field.name}' has nulls or ragged vectors "
-                        f"(nulls={vcol.null_count}, values={len(flat)}, "
-                        f"rows={n})")
-                dim = len(flat) // n
                 P = np.random.default_rng(seed).standard_normal(
-                    (num_planes, dim))
-            if vcol.null_count or len(flat) != n * P.shape[1]:
-                raise ValueError(
-                    f"dedup_embedding_cosine: column '{v_field.name}' has "
-                    f"nulls or ragged vectors (nulls={vcol.null_count}, "
-                    f"values={len(flat)}, expected {n} x {P.shape[1]})"
-                )
-            X = flat.to_numpy(zero_copy_only=False).reshape(n, P.shape[1])
+                    (num_planes, X.shape[1]))
             bits = (X @ P.T) > 0  # (n, num_planes)
             chars = bits.astype(np.uint8) + ord("0")
             # vectorized per-band bucket strings: each band's char block
@@ -583,42 +594,35 @@ def _banded_signs_matmul(sel: DataFrame, planes, bands: int,
 def dedup_embedding_cosine(df: DataFrame, vec_col: str = "embedding",
                            id_col: str = "vec_id", threshold: float = 0.95,
                            num_planes: int = 16, bands: int = 4,
-                           max_bucket: int = 2000, dim: int | None = None,
-                           method: str = "auto") -> DataFrame:
+                           max_bucket: int = 2000, dim: int | None = None
+                           ) -> DataFrame:
     """Near-dup pairs with cosine >= threshold. Candidates via seeded
     random-hyperplane LSH (deterministic plane matrix, seed 1234);
     verification via exact cosine.
 
     ``dim`` sizes the plane matrix. With the default ``dim=None`` the
     matmul kernel derives the width from the first Arrow batch inside
-    the workers — no driver-side job at all (method='expr' is the one
-    mode that genuinely needs the width on the driver, so it requires
-    ``dim``).
+    the workers — no driver-side job at all.
 
-    ``method``: 'expr' = pure-Column literal plane fold (DuckDB-twin
-    exact, oracle mode), 'matmul' = broadcast-plane BLAS sign-bit kernel
-    (the scale path — no literals in the plan), 'auto' = expr iff dim is
-    given and num_planes * dim <= _EXPR_BITS_MAX. Both quantizers use
-    the same plane matrix, so their bucket strings are identical up to
-    floating-point sign ties at the hyperplane boundary (the expr path
-    folds the dot product sequentially, BLAS sums pairwise — a dot
-    product within rounding of zero can flip sign between them)."""
+    The quantizer follows the input: a pure-Column literal plane fold
+    (DuckDB-twin exact, oracle mode) iff ``dim`` is given and
+    num_planes * dim <= _EXPR_BITS_MAX, else the broadcast-plane BLAS
+    sign-bit kernel (the scale path — no literals in the plan). Both
+    quantizers use the same plane matrix, so their bucket strings are
+    identical up to floating-point sign ties at the hyperplane boundary
+    (the expr path folds the dot product sequentially, BLAS sums
+    pairwise — a dot product within rounding of zero can flip sign
+    between them)."""
     import numpy as np
 
-    if method not in ("auto", "expr", "matmul"):
-        raise ValueError(f"unknown quantizer method {method!r}")
     if dim is None:
-        if method == "expr":
-            raise ValueError("method='expr' builds driver-side plane "
-                             "literals — pass dim=<vector width>")
         planes = None  # matmul kernel derives dim from the first batch
         use_expr = False
     else:
         # deterministic pseudo-random plane matrix
         planes = np.random.default_rng(1234).standard_normal(
             (num_planes, dim))
-        use_expr = method == "expr" or (
-            method == "auto" and num_planes * dim <= _EXPR_BITS_MAX)
+        use_expr = num_planes * dim <= _EXPR_BITS_MAX
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     rows = num_planes // bands
     if use_expr:

@@ -19,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import geomexpr as GX
 from ..functions.polygonize_kernel import polygonize_segments
 from . import nodes as N
 
@@ -29,22 +28,15 @@ DISSOLVED_SCHEMA = "bb_uid long, ring_idx int, vertices array<array<double>>, ar
 def dissolve_blocks(faces: DataFrame, block_col: str = "bb_uid",
                     vertices: str = "vertices") -> DataFrame:
     """faces: (bb_uid, vertices ring). Returns dissolved rings per block."""
-    # packed node-key structs, not printf strings, for the segment
-    # groupBy: measured 1.2x on the 90k-face boundary stage
-    # (BENCH/TOPOLOGY.md round-7 note)
-    key = N.node_key_packed
     ring = faces.select(
         F.col(block_col),
         F.concat(F.col(vertices), F.slice(F.col(vertices), 1, 1)).alias("rv"),
     )
-    segs = ring.select(
-        F.col(block_col), F.explode(GX.segment_pairs(F.col("rv"))).alias("s")
-    ).select(
+    segs = N.segment_keys(ring, block_col, "rv").select(
         block_col,
-        F.element_at("s.a", 1).alias("ax"), F.element_at("s.a", 2).alias("ay"),
-        F.element_at("s.b", 1).alias("bx"), F.element_at("s.b", 2).alias("by"),
-        F.least(key(F.col("s.a")), key(F.col("s.b"))).alias("_k1"),
-        F.greatest(key(F.col("s.a")), key(F.col("s.b"))).alias("_k2"),
+        F.element_at("a", 1).alias("ax"), F.element_at("a", 2).alias("ay"),
+        F.element_at("b", 1).alias("bx"), F.element_at("b", 2).alias("by"),
+        "_k1", "_k2",
     )
     # boundary segments: used exactly once within the block
     w_cnt = segs.groupBy(block_col, "_k1", "_k2").agg(

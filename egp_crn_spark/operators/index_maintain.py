@@ -68,7 +68,7 @@ def index_delta(changelog: DataFrame, centroids: np.ndarray, as_of: int,
         appends = ivf_pq_assign(ins, centroids, codebooks, vec_col, id_col)
     else:
         appends = ivf_assign(ins, centroids, vec_col, id_col,
-                             method="matmul", dtype="float32")
+                             dtype="float32")
     appends = appends.withColumn(AS_OF, F.lit(int(as_of)))
     tombstones = (
         changelog.filter(F.col("_change_type") == "delete")
@@ -140,7 +140,7 @@ def build_index_state(corpus: DataFrame, centroids: np.ndarray,
         idx = ivf_pq_assign(corpus, centroids, codebooks, vec_col, id_col)
     else:
         idx = ivf_assign(corpus, centroids, vec_col, id_col,
-                         method="matmul", dtype="float32")
+                         dtype="float32")
     idx = idx.withColumn(AS_OF, F.lit(int(as_of)))
     empty_tombs = idx.select("n_id").limit(0) \
         .withColumn(TOMB_TS, F.lit(0))

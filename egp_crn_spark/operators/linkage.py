@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import geomexpr as GX
 from . import nodes as N
 
 
@@ -24,17 +23,11 @@ def _arc_face_coverage(arcs: DataFrame, faces: DataFrame,
                        vertices: str = "vertices") -> DataFrame:
     """(arc id, face_id): faces whose ring contains EVERY segment of the
     arc (covered_by the face boundary — link_arcs.py:98-100)."""
-    def seg_keys(df, idc, vcol):
-        segs = df.select(F.col(idc), F.explode(GX.segment_pairs(F.col(vcol))).alias("s"))
-        ka, kb = N.node_key(F.col("s.a")), N.node_key(F.col("s.b"))
-        return segs.select(F.col(idc), F.least(ka, kb).alias("_k1"),
-                           F.greatest(ka, kb).alias("_k2"))
-
     ring = faces.select(
         "face_id", F.concat(F.col("vertices"), F.slice("vertices", 1, 1)).alias("rv")
     )
-    fsegs = seg_keys(ring, "face_id", "rv")
-    asegs = seg_keys(arcs, id_col, vertices)
+    fsegs = N.segment_keys(ring, "face_id", "rv").select("face_id", "_k1", "_k2")
+    asegs = N.segment_keys(arcs, id_col, vertices).select(id_col, "_k1", "_k2")
     n_arc_segs = asegs.groupBy(id_col).agg(F.count("*").alias("_n"))
     matched = (
         asegs.join(fsegs, ["_k1", "_k2"])

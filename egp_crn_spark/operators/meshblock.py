@@ -53,9 +53,7 @@ def meshblock_input(arcs: DataFrame, id_col: str = "segment_id",
                     vertices: str = "vertices") -> DataFrame:
     """All non-deadend arcs (validate_meshblock.py:357-358,
     conflate_meshblock.py:70-72)."""
-    # packed keys: only ids are consumed, the node column never escapes
-    dead_ids = (N.deadends(arcs, id_col, vertices, packed=True)
-                .select(id_col).distinct())
+    dead_ids = N.deadends(arcs, id_col, vertices).select(id_col).distinct()
     return arcs.join(dead_ids, id_col, "left_anti")
 
 
@@ -194,7 +192,7 @@ def validate_meshblock(arcs: DataFrame, restore: DataFrame,
     # ONE aggregation action over `out`'s three-join lineage (the round-2
     # version fired 3 separate counts, recomputing that lineage each
     # time); missing.count() is the restore table's own lineage.
-    dead_ids = N.deadends(arcs, id_col, packed=True).select(id_col).distinct()
+    dead_ids = N.deadends(arcs, id_col).select(id_col).distinct()
     invalid = (F.col("v201") == 1) | (F.col("v202") == 1)
     row = (
         out.join(dead_ids.withColumn("_dead", F.lit(1)), id_col, "left")
@@ -258,8 +256,7 @@ def mb_v201_deadend_within(arcs: DataFrame, faces: DataFrame,
 
     if res is None:
         res = _res_for_faces(faces, vertices)
-    dead_ids = (N.deadends(arcs, id_col, vertices, packed=True)
-                .select(id_col).distinct())
+    dead_ids = N.deadends(arcs, id_col, vertices).select(id_col).distinct()
     dead = arcs.join(dead_ids, id_col, "left_semi").select(id_col, vertices)
 
     has_holes = "holes" in faces.columns
@@ -325,22 +322,12 @@ def mb_v202_bo_on_boundary(arcs: DataFrame, faces: DataFrame,
     face-ring segment keys — one distinct + anti-join, no geometry UDF."""
     bos = arcs.filter((F.col("segment_type") == 2) & (F.col("bo_new") != 1))
 
-    def seg_keys(df, idc, vcol):
-        segs = df.select(
-            F.col(idc), F.explode(GX.segment_pairs(F.col(vcol))).alias("s")
-        )
-        ka = N.node_key(F.col("s.a"))
-        kb = N.node_key(F.col("s.b"))
-        return segs.select(
-            F.col(idc), F.least(ka, kb).alias("_k1"), F.greatest(ka, kb).alias("_k2")
-        )
-
     # face rings closed: append first vertex
     ring = faces.select(
         F.col("face_id"),
         F.concat(F.col("vertices"), F.slice(F.col("vertices"), 1, 1)).alias("rv"),
     )
-    boundary_keys = seg_keys(ring, "face_id", "rv").select("_k1", "_k2").distinct()
-    arc_segs = seg_keys(bos, id_col, vertices)
+    boundary_keys = N.segment_keys(ring, "face_id", "rv").select("_k1", "_k2").distinct()
+    arc_segs = N.segment_keys(bos, id_col, vertices)
     uncovered = arc_segs.join(boundary_keys, ["_k1", "_k2"], "left_anti")
     return uncovered.select(F.col(id_col).alias("flagged_id")).distinct()

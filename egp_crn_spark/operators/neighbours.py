@@ -10,7 +10,7 @@ planar partition touch iff their face rings share at least one vertex
 node (segment-sharing AND corner-touching both reduce to shared nodes),
 so the neighbour relation is a self equi-join on exploded ring-vertex
 node keys. The reference's per-row STRtree `touches` probes
-(review_meshblock.py:90-97) become one shuffle on a string node key.
+(review_meshblock.py:90-97) become one shuffle on the node key.
 """
 
 from __future__ import annotations

@@ -4,8 +4,10 @@ The reference has no graph engine: the arc graph is recovered from
 coordinate equality of rounded endpoints (helpers.py:306-342 rounding;
 degree via duplicated()/Counter — gen_crossings.py:138-144,
 validate_meshblock.py:280-281). Here: explode endpoints → groupBy node
-key. Node key = the rounded coordinate pair as a string (exact equality,
-no float-group hazards).
+key. Node key = struct<nx long, ny long>, the 5-decimal rounding of each
+coordinate scaled to an integer (exact equality, no float-group
+hazards). node_key and segment_keys are the only builders of node and
+segment identity; every ``node`` column the operators emit has this type.
 """
 
 from __future__ import annotations
@@ -17,46 +19,35 @@ from ..config import COORD_DECIMALS, CROSSING_DEGREE
 from ..functions import geomexpr as GX
 
 
-def node_key(pt: Column, decimals: int = COORD_DECIMALS) -> Column:
-    """Canonical string key of a point — 5-decimal node identity."""
-    return F.concat_ws(
-        ":",
-        F.format_string(f"%.{decimals}f", F.element_at(pt, 1)),
-        F.format_string(f"%.{decimals}f", F.element_at(pt, 2)),
-    )
-
-
-def node_key_packed(pt: Column, decimals: int = COORD_DECIMALS) -> Column:
-    """Packed integer node identity — struct<nx, ny> of the 5-decimal
-    rounding of each coordinate, scaled to long: the SAME identity
-    classes as node_key, as an equality key of two longs instead of a
-    ~20-char printf string (no format compute on every vertex, fixed
-    16-byte join/aggregate keys). For INTERNAL joins only — any output
-    that mirrors the reference's printf node keys keeps node_key.
-
-    One rounding rule for both key forms (ADVICE r5): printf %.Nf
-    correctly rounds the double's exact value (exact decimal ties are
-    not binary-representable, so its tie rule never fires);
-    ``F.round(x, N)`` rounds that same exact value HALF_UP — identical
-    digits. The outer round only snaps the already-N-decimal value
-    scaled by 10^N onto its integer (error ~1e-11, no knife edge),
-    unlike rounding ``x * 10^N`` directly, whose product can land
-    exactly on .5 and diverge from printf (verified on an odd-multiple-
-    of-5e-6 battery + 200k random coords: 0 mismatches)."""
-    s = float(10 ** decimals)
+def node_key(pt: Column) -> Column:
+    """Node identity of a point: struct<nx, ny> of the COORD_DECIMALS
+    rounding of each coordinate, scaled to long — a fixed 16-byte
+    join/aggregate key. ``F.round`` rounds HALF_UP on the shortest
+    decimal form of the double (the digits ``repr`` prints), and -0.0
+    lands on the same integer as 0.0. The outer round only snaps the
+    already-rounded value scaled by 10^N onto its integer (error ~1e-11,
+    no knife edge), unlike rounding ``x * 10^N`` directly, whose product
+    can land exactly on .5."""
+    s = float(10 ** COORD_DECIMALS)
     return F.struct(
-        F.round(F.round(F.element_at(pt, 1), decimals) * s).cast("long").alias("nx"),
-        F.round(F.round(F.element_at(pt, 2), decimals) * s).cast("long").alias("ny"),
+        F.round(F.round(F.element_at(pt, 1), COORD_DECIMALS) * s).cast("long").alias("nx"),
+        F.round(F.round(F.element_at(pt, 2), COORD_DECIMALS) * s).cast("long").alias("ny"),
     )
+
+
+def segment_keys(df: DataFrame, id_col: str, vertices: str) -> DataFrame:
+    """One row per segment of each vertex list: (id, a, b, _k1, _k2) —
+    ``a``/``b`` the segment's endpoints in vertex order, ``_k1 <= _k2``
+    their node keys (undirected segment identity)."""
+    segs = df.select(F.col(id_col), F.explode(GX.segment_pairs(F.col(vertices))).alias("s"))
+    ka, kb = node_key(F.col("s.a")), node_key(F.col("s.b"))
+    return segs.select(id_col, F.col("s.a").alias("a"), F.col("s.b").alias("b"),
+                       F.least(ka, kb).alias("_k1"), F.greatest(ka, kb).alias("_k2"))
 
 
 def endpoint_nodes(arcs: DataFrame, id_col: str = "segment_id",
-                   vertices: str = "vertices",
-                   packed: bool = False) -> DataFrame:
-    """One row per arc endpoint: (id, node, x, y, is_start).
-    ``packed=True`` keys nodes with node_key_packed (internal-join
-    callers only — see node_key_packed)."""
-    key = node_key_packed if packed else node_key
+                   vertices: str = "vertices") -> DataFrame:
+    """One row per arc endpoint: (id, node, x, y, is_start)."""
     v = F.col(vertices)
     ends = arcs.select(
         F.col(id_col),
@@ -69,7 +60,7 @@ def endpoint_nodes(arcs: DataFrame, id_col: str = "segment_id",
     )
     return ends.select(
         id_col,
-        key(F.col("e.pt")).alias("node"),
+        node_key(F.col("e.pt")).alias("node"),
         F.element_at(F.col("e.pt"), 1).alias("x"),
         F.element_at(F.col("e.pt"), 2).alias("y"),
         F.col("e.is_start"),
@@ -77,20 +68,16 @@ def endpoint_nodes(arcs: DataFrame, id_col: str = "segment_id",
 
 
 def all_vertex_nodes(arcs: DataFrame, id_col: str = "segment_id",
-                     vertices: str = "vertices",
-                     packed: bool = False) -> DataFrame:
+                     vertices: str = "vertices") -> DataFrame:
     """One row per vertex (the reference's pts_id_lookup substrate,
-    validate_topology.py:132-134): (id, node, vertex_idx, n_vertices).
-    ``packed=True`` keys nodes with node_key_packed (internal-join
-    callers whose node columns never reach an output)."""
-    key = node_key_packed if packed else node_key
+    validate_topology.py:132-134): (id, node, vertex_idx, n_vertices)."""
     ex = arcs.select(
         F.col(id_col),
         F.size(vertices).alias("n_vertices"),
         F.posexplode(vertices).alias("vertex_idx", "pt"),
     )
     return ex.select(
-        id_col, "n_vertices", "vertex_idx", key(F.col("pt")).alias("node"),
+        id_col, "n_vertices", "vertex_idx", node_key(F.col("pt")).alias("node"),
         F.element_at("pt", 1).alias("x"), F.element_at("pt", 2).alias("y"),
     )
 
@@ -107,15 +94,11 @@ def node_degrees(arcs: DataFrame, id_col: str = "segment_id",
 
 
 def deadends(arcs: DataFrame, id_col: str = "segment_id",
-             vertices: str = "vertices", packed: bool = False) -> DataFrame:
+             vertices: str = "vertices") -> DataFrame:
     """Deadend endpoints: nodes appearing exactly once (the
     ~duplicated(keep=False) idiom, validate_meshblock.py:280-281).
-    Returns (id, node, x, y) — id = the arc owning the deadend node.
-    ``packed=True`` runs the once-count on packed node keys (1.4x at 2M
-    arcs — the count groupBy is this helper's only shuffle) and returns
-    the packed node column; callers that join ``node`` onward must use
-    the same key form on the other side."""
-    ends = endpoint_nodes(arcs, id_col, vertices, packed=packed)
+    Returns (id, node, x, y) — id = the arc owning the deadend node."""
+    ends = endpoint_nodes(arcs, id_col, vertices)
     once = ends.groupBy("node").count().filter("count = 1").select("node")
     return ends.join(once, "node", "left_semi").select(id_col, "node", "x", "y")
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import _ensure_parallelism, cosine_sim
+from .dedup import _ensure_parallelism, _vector_matrix, cosine_sim
 
 
 def _as_double(vec_col: str):
@@ -137,12 +137,6 @@ def _nearest_centroids_expr(vec, C: np.ndarray, nprobe: int):
     return F.transform(top, lambda s: s["cell"])
 
 
-def _use_expr(method: str, C: np.ndarray) -> bool:
-    if method not in ("auto", "expr", "matmul"):
-        raise ValueError(f"unknown quantizer method {method!r}")
-    return method == "expr" or (method == "auto" and len(C) <= _EXPR_NCELLS_MAX)
-
-
 def _stack(vals) -> np.ndarray:
     return np.asarray([np.asarray(v, dtype=np.float64) for v in vals])
 
@@ -186,17 +180,7 @@ def _assign_matmul(sel: DataFrame, C: np.ndarray) -> DataFrame:
             if not n:
                 continue
             cv = b.column(b.schema.get_field_index("cv"))
-            flat = cv.flatten()
-            # a null or ragged vector would make flatten() drop/shift
-            # values and silently misalign every later row's cell —
-            # fail loudly instead, naming the column
-            if cv.null_count or len(flat) != n * Cb.shape[1]:
-                raise ValueError(
-                    f"ivf_assign: column 'cv' has nulls or ragged "
-                    f"vectors (nulls={cv.null_count}, values={len(flat)}, "
-                    f"expected {n} x {Cb.shape[1]})"
-                )
-            X = flat.to_numpy(zero_copy_only=False).reshape(n, Cb.shape[1])
+            X = _vector_matrix(cv, Cb.shape[1], "ivf_assign: column 'cv'")
             if X.dtype != np_t:
                 X = X.astype(np_t)
             sims = X @ Cb.T
@@ -255,7 +239,6 @@ def ivf_assign(
     centroids: np.ndarray,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "auto",
     dtype: str = "float64",
 ) -> DataFrame:
     """IVF INDEX BUILD: assign each corpus vector to its nearest
@@ -264,9 +247,9 @@ def ivf_assign(
     sources.tables.save_bucketed_table) and serve many query batches
     from it. Norm precomputed per row (see brute_force_topk).
 
-    method: 'expr' = pure-Column literal fold (tiny ncells; DuckDB-twin
-    exact), 'matmul' = broadcast-centroid BLAS kernel (the scale path),
-    'auto' = expr iff ncells <= _EXPR_NCELLS_MAX.
+    The quantizer follows the centroid count: a pure-Column literal
+    fold (DuckDB-twin exact) at ncells <= _EXPR_NCELLS_MAX, else the
+    broadcast-centroid BLAS kernel (the scale path).
 
     dtype: 'float32' builds and CARRIES the index in single precision —
     embeddings are float32 at the source, so the double path spends 2x
@@ -274,11 +257,9 @@ def ivf_assign(
     assignment stage is measured memory-bandwidth-bound (BENCH/ANN.md),
     so this halves its real cost; scoring in ivf_probe promotes to
     double at the arithmetic, losing nothing but the wasted bytes.
-    Implies the matmul quantizer (the literal-expr fold is the
+    Always runs the matmul quantizer (the literal-expr fold is the
     double-exact oracle path)."""
     if dtype == "float32":
-        if method == "expr":
-            raise ValueError("dtype='float32' requires the matmul quantizer")
         sel = _ensure_parallelism(corpus).select(
             F.col(id_col).alias("n_id"),
             F.transform(F.col(vec_col), lambda x: x.cast("float")).alias("cv"))
@@ -287,7 +268,7 @@ def ivf_assign(
         raise ValueError(f"unknown dtype {dtype!r}")
     sel = _ensure_parallelism(corpus).select(
         F.col(id_col).alias("n_id"), _as_double(vec_col).alias("cv"))
-    if _use_expr(method, centroids):
+    if len(centroids) <= _EXPR_NCELLS_MAX:
         return sel.withColumn(
             "cell",
             F.element_at(_nearest_centroids_expr(F.col("cv"), centroids, 1), 1),
@@ -330,13 +311,12 @@ def ivf_probe(
     centroids: np.ndarray,
     k: int = 5,
     nprobe: int = 4,
-    method: str = "auto",
     max_cell: int | None = None,
 ) -> DataFrame:
     """IVF QUERY: probe the nprobe nearest cells per query — a cell
     equi-join against the prebuilt index (same shape as the spatial
-    prefilter), candidates shrink ~ncells/nprobe vs brute force.
-    ``method`` picks the quantizer form (see ivf_assign).
+    prefilter), candidates shrink ~ncells/nprobe vs brute force. The
+    quantizer follows the centroid count, as in ivf_assign.
 
     The probe side is broadcast so the corpus index is NEVER shuffled —
     the serving shape: query batches are interactively small while the
@@ -347,7 +327,7 @@ def ivf_probe(
     capped cells."""
     if max_cell is not None:
         index, _ = cap_index_cells(index, max_cell)
-    if _use_expr(method, centroids):
+    if len(centroids) <= _EXPR_NCELLS_MAX:
         probes = queries.select(
             "q_id", F.col("qv"), _norm(F.col("qv")).alias("_qn"),
             F.explode(_nearest_centroids_expr(F.col("qv"), centroids, nprobe)).alias("cell"),
@@ -492,13 +472,8 @@ def ivf_pq_assign(corpus: DataFrame, centroids: np.ndarray,
             n = b.num_rows
             if not n:
                 continue
-            cv = b.column(b.schema.get_field_index("cv"))
-            flat = cv.flatten()
-            if cv.null_count or len(flat) != n * C.shape[1]:
-                raise ValueError(
-                    f"ivf_pq_assign: nulls or ragged vectors "
-                    f"(nulls={cv.null_count}, values={len(flat)})")
-            X = flat.to_numpy(zero_copy_only=False).reshape(n, C.shape[1])
+            X = _vector_matrix(b.column(b.schema.get_field_index("cv")),
+                               C.shape[1], "ivf_pq_assign: column 'cv'")
             if X.dtype != np.float32:
                 X = X.astype(np.float32)
             cell = np.empty(n, dtype=np.int64)
@@ -594,8 +569,8 @@ def ivf_pq_probe(queries: DataFrame, index_pq: DataFrame,
             if not n:
                 continue
             qid = b.column(0).to_numpy(zero_copy_only=False)
-            Q = b.column(1).flatten().to_numpy(zero_copy_only=False) \
-                .reshape(n, C.shape[1])
+            Q = _vector_matrix(b.column(1), C.shape[1],
+                               "ivf_pq_probe: column 'qv'")
             qn = b.column(2).to_numpy(zero_copy_only=False)
             cell = b.column(3).to_numpy(zero_copy_only=False)
             codes = _codes_matrix(b.column(5), n, m)
@@ -689,12 +664,11 @@ def ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: np.ndarray | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """One-shot IVF top-k = ivf_assign + ivf_probe. For repeated query
     batches build the index once with ivf_assign and call ivf_probe —
     the assignment is the dominant cost and amortizes across batches."""
     C = centroids if centroids is not None else train_centroids(
         corpus, ncells, vec_col, id_col=id_col)
-    return ivf_probe(queries, ivf_assign(corpus, C, vec_col, id_col, method),
-                     C, k, nprobe, method)
+    return ivf_probe(queries, ivf_assign(corpus, C, vec_col, id_col),
+                     C, k, nprobe)

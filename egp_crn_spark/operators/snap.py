@@ -10,8 +10,8 @@ dependent); we pin determinism by taking the NEAREST hit with
 Plan: endpoints explode → anti-join on exact rounded node key (already-
 integrated endpoints drop out) → k-ring distance join to NRN nodes →
 window rank 1 → node map joined back; endpoint rewrite is a Column
-expression over the vertex array. Two shuffles, all keys bigint/short
-strings.
+expression over the vertex array. Two shuffles, all keys bigint or
+node-key structs.
 """
 
 from __future__ import annotations

@@ -280,11 +280,7 @@ def v301_node_intersection(arcs: DataFrame, id_col: str = "segment_id",
     with an interior vertex (of a >2-vertex arc), where the node is
     referenced by more than one arc, flags every arc whose INTERIOR holds
     that point (validate_topology.py:235-272)."""
-    # packed node keys: every node column here is internal (output is
-    # flagged ids only), so the joins/distincts key on struct<long,long>
-    # instead of printf strings — no per-vertex format compute, 16-byte
-    # aggregate keys on the (node, id) distinct (the widest shuffle)
-    allv = N.all_vertex_nodes(arcs, id_col, vertices, packed=True)
+    allv = N.all_vertex_nodes(arcs, id_col, vertices)
     endpoints = allv.filter((F.col("vertex_idx") == 0) | (F.col("vertex_idx") == F.col("n_vertices") - 1))
     interiors = allv.filter(
         (F.col("n_vertices") > 2)
@@ -356,11 +352,7 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # call's cached blocks are released here (the return value is lazy,
     # so the current ones must outlive this function).
     v302_release()
-    # packed=True throughout: every node column in v302 is internal
-    # (the output is flagged ids), so the deadend once-count and the
-    # connectivity join all key on struct<long,long> instead of printf
-    # strings — measured 1.4x on the deadend aggregation at 2M arcs
-    dead = (N.deadends(arcs, id_col, vertices, packed=True)
+    dead = (N.deadends(arcs, id_col, vertices)
             .withColumnRenamed(id_col, "src_id").persist())
     _V302_PERSISTED.append(dead)
     # bound-enforced broadcast decision: deadends are the validation's
@@ -372,8 +364,8 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # network gets shuffled hash joins instead.
     h = join_hint(dead)
     # p_id = src_id ALONE — the deadend node key is never consumed past
-    # this join, so carrying it (a ~20-char string on every k-ring-
-    # exploded candidate row) would only widen the join shuffle. The two
+    # this join, so carrying it (16 bytes on every k-ring-exploded
+    # candidate row) would only widen the join shuffle. The two
     # endpoints of a doubly-deadend arc become two point rows with the
     # same p_id; that's fine — existence is all 302 needs, and the
     # distinct below collapses pair duplicates anyway (a min-distance
@@ -391,7 +383,7 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     dead_ids = dead.select(F.col("src_id").alias(id_col)).distinct()
     src_end_nodes = (
         N.endpoint_nodes(arcs.join(dead_ids, id_col, "left_semi"),
-                         id_col, vertices, packed=True)
+                         id_col, vertices)
         .select(F.col(id_col).alias("src_id"), "node")
     )
     # the exploded all-vertex side is NOT pre-distinct'd: (node, near_id)
@@ -400,7 +392,7 @@ def v302_min_distance(arcs: DataFrame, min_dist: float = MIN_DISTANCE,
     # exploded set — `connected` dedups the (much smaller) join output
     # anyway. When the deadend side broadcasts (``h`` above), the vertex
     # explode stays entirely map-side — no vertex row is ever shuffled.
-    allv = N.all_vertex_nodes(arcs, id_col, vertices, packed=True).select(
+    allv = N.all_vertex_nodes(arcs, id_col, vertices).select(
         "node", F.col(id_col).alias("near_id")
     )
     connected = (src_end_nodes.hint(h).join(allv, "node")

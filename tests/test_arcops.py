@@ -5,12 +5,15 @@ dedup) are what's under test."""
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from egp_crn_spark.config import CLUSTER_TOLERANCE, MIN_DISTANCE
+from egp_crn_spark.config import (CLUSTER_TOLERANCE, COORD_DECIMALS, EXTENT,
+                                  MIN_DISTANCE)
 from egp_crn_spark.functions import geomkernel as GK
 from egp_crn_spark.operators import nodes as N
 from egp_crn_spark.operators import snap as SN
@@ -83,21 +86,40 @@ def test_standardize_id_repair_deterministic(spark, arcs_pd):
 
 
 # ---------------------------------------------------------------- nodes
+def node_oracle(x: float, y: float) -> tuple[int, int]:
+    """node_key in Python: each coordinate's shortest round-trip decimal
+    (``repr``), rounded HALF_UP to COORD_DECIMALS and scaled to int.
+    Spark's ``round`` reads a double through that decimal form, not its
+    exact binary value, so ``Decimal(x)`` would be the wrong oracle on
+    decimal ties such as 0.000155 (binary value just below the tie)."""
+    def q(v):
+        d = Decimal(repr(float(v))).quantize(Decimal(1).scaleb(-COORD_DECIMALS),
+                                            ROUND_HALF_UP)
+        return int(d.scaleb(COORD_DECIMALS))
+    return q(x), q(y)
+
+
+def _keys(nodes) -> list[tuple[int, int]]:
+    """node column values (Rows or dicts) as (nx, ny) tuples."""
+    return [(k["nx"], k["ny"]) for k in nodes]
+
+
 def test_crossings_deg4(arcs_std, arcs_std_pd):
     got = N.crossings(arcs_std).toPandas()
+    nodes = _keys(got.node)
     # the crafted degree-4 node must be present with count exactly 4
     lattice = 65536.0 / 256.0
-    key = f"{10 * lattice:.5f}:{10 * lattice:.5f}"
-    assert key in set(got.node)
-    assert int(got.set_index("node").loc[key, "count"]) == 4
+    key = node_oracle(10 * lattice, 10 * lattice)
+    assert key in set(nodes)
+    assert int(dict(zip(nodes, got["count"]))[key]) == 4
     # oracle: full endpoint multiset count
     cnt = {}
     for vs in arcs_std_pd.np_verts:
         for p in (vs[0], vs[-1]):
-            k = f"{p[0]:.5f}:{p[1]:.5f}"
+            k = node_oracle(p[0], p[1])
             cnt[k] = cnt.get(k, 0) + 1
     want = {k for k, v in cnt.items() if v >= 4}
-    assert set(got.node) == want
+    assert set(nodes) == want
 
 
 def test_deadends_match_oracle(arcs_std, arcs_std_pd):
@@ -105,10 +127,49 @@ def test_deadends_match_oracle(arcs_std, arcs_std_pd):
     cnt = {}
     for vs in arcs_std_pd.np_verts:
         for p in (vs[0], vs[-1]):
-            k = f"{p[0]:.5f}:{p[1]:.5f}"
+            k = node_oracle(p[0], p[1])
             cnt[k] = cnt.get(k, 0) + 1
     want = {k for k, v in cnt.items() if v == 1}
-    assert set(got.node) == want
+    assert set(_keys(got.node)) == want
+
+
+def test_node_key_rounding_battery(spark):
+    """node_key matches its Decimal oracle on odd multiples of 5e-6
+    (decimal ties in their shortest form), signed zeros, values just
+    below zero, coordinates near EXTENT and 10k seeded random points."""
+    ties = [Decimal(10 * k + 5).scaleb(-6) for k in range(4000)]
+    xs = [float(t) for t in ties] + [-float(t) for t in ties[:500]]
+    xs += [float(1000 + t) for t in ties[:1000]]
+    xs += [float(Decimal(EXTENT) - t) for t in ties[:50]]
+    xs += [0.0, -0.0, -1e-6, 1e-6, -4e-6, -6e-6, EXTENT, EXTENT - 1e-6]
+    xs += list(np.random.default_rng(7).uniform(0.0, EXTENT, 10_000))
+    pts = spark.createDataFrame(
+        [([float(x), float(y)],) for x, y in zip(xs, reversed(xs))],
+        "pt array<double>")
+    got = pts.select("pt", N.node_key(F.col("pt")).alias("k")).collect()
+    assert len(got) == len(xs)
+    bad = [(r.pt, k) for r, k in zip(got, _keys(r.k for r in got))
+           if k != node_oracle(*r.pt)]
+    assert not bad, bad[:5]
+
+
+@pytest.mark.parametrize("x0", [-0.0, -1e-6])
+def test_signed_zero_is_one_node(spark, x0):
+    """Two BO arcs meet where one starts at (x0, 5) and the other at
+    (0.0, 5): both round to the same node, so the junction is no
+    deadend in deadends, unintegrated_bo_nodes or v302."""
+    from egp_crn_spark.operators.snapsuggest import unintegrated_bo_nodes
+
+    arcs = spark.createDataFrame(pd.DataFrame({
+        "segment_id": ["a", "b"],
+        "segment_type": [2, 2],
+        "vertices": [[[x0, 5.0], [20.0, 5.0]], [[0.0, 5.0], [0.0, 25.0]]],
+    }))
+    want = {(2_000_000, 500_000), (0, 2_500_000)}
+    assert set(_keys(r.node for r in N.deadends(arcs).collect())) == want
+    assert set(_keys(r.node for r in unintegrated_bo_nodes(arcs).collect())) == want
+    # not one node: a's start would be a deadend 0 m from b, unconnected
+    assert V.v302_min_distance(arcs).count() == 0
 
 
 # ---------------------------------------------------------------- validations
@@ -354,3 +415,27 @@ def test_snap_nodes(spark):
     assert list(out.loc["b1", "vertices"][0]) == [100.0, 100.0]
     # NRN arc untouched
     assert list(out.loc["r1", "vertices"][0]) == [100.0, 100.0]
+
+
+def test_snap_nodes_distance_tie(spark):
+    """An NGD endpoint exactly as far from two NRN nodes snaps to the one
+    with the smaller node key (nx, ny)."""
+    assert 10.0 - 9.9375 == 10.0625 - 10.0 == 0.0625
+    df = pd.DataFrame(
+        {
+            "segment_id": ["r1", "r2", "g1"],
+            "segment_id_orig": ["a" * 32, "b" * 32, "-1"],
+            "segment_type": [1, 1, 2],
+            "boundary": [0, 0, 0],
+            "bo_new": [0, 0, 1],
+            "ngd_uid": [-1, -1, 1],
+            "structure_type": ["Unknown"] * 3,
+            "vertices": [
+                [[10.0625, 4.0], [10.0625, 50.0]],
+                [[9.9375, 4.0], [9.9375, 50.0]],
+                [[10.0, 4.0], [30.0, 0.0]],
+            ],
+        }
+    )
+    out = SN.snap_nodes(spark.createDataFrame(df)).toPandas().set_index("segment_id")
+    assert list(out.loc["g1", "vertices"][0]) == [9.9375, 4.0]

@@ -1,9 +1,12 @@
 """Dead-code gates, Spark-free, over the parsed ``egp_crn_spark/**`` modules.
 
-1. Every top-level function or class has its name (as a whole word)
-   somewhere in the package, the tests, the tools, the benchmark or the
-   bench entry points — everywhere except the definition's own source
-   lines. A name found nowhere else is dead code.
+1. Every top-level function or class is referenced by code somewhere in
+   the package, the tests, the tools, the benchmark or the bench entry
+   points — everywhere except the definition's own source lines. A
+   reference is a ``Name`` or ``Attribute`` node (f-string expressions
+   included), an import alias, or a string constant that is exactly the
+   name; a mention in a docstring or comment does not keep a function
+   alive. A name referenced nowhere else is dead code.
 2. Every parameter whose default is a ``bool`` literal is passed by at
    least one call outside ``tests/`` (by keyword, by position, or via
    ``*``/``**``). A flag no caller sets is a fork with one live branch.
@@ -12,7 +15,6 @@
 from __future__ import annotations
 
 import ast
-import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -28,14 +30,29 @@ def _corpus() -> dict[Path, list[str]]:
     return {p: p.read_text().splitlines() for p in paths if p.resolve() != this}
 
 
+def _referenced_names(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of every code reference in ``tree``."""
+    refs = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            refs.append((node.attr, node.lineno))
+        elif isinstance(node, ast.alias):
+            refs += [(part, node.lineno) for part in node.name.split(".")]
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and node.value.isidentifier()):
+            refs.append((node.value, node.lineno))
+    return refs
+
+
 def unreferenced_names() -> list[str]:
     corpus = _corpus()
-    # word -> every (file, line index) it occurs on
+    # name -> every (file, 0-based line) it is referenced on
     where: dict[str, list[tuple[Path, int]]] = {}
     for path, text in corpus.items():
-        for i, line in enumerate(text):
-            for w in set(re.findall(r"\w+", line)):
-                where.setdefault(w, []).append((path, i))
+        for name, line in _referenced_names(ast.parse("\n".join(text))):
+            where.setdefault(name, []).append((path, line - 1))
     dead = []
     for mod in sorted(PACKAGE.rglob("*.py")):
         for node in ast.parse("\n".join(corpus[mod])).body:

@@ -176,31 +176,40 @@ def test_ivf_topk_recall(spark, embeddings):
     assert np.mean(recalls) >= 0.6  # nprobe=3/8 cells → decent recall
 
 
-def test_ivf_matmul_matches_expr(spark, embeddings):
+def test_ivf_matmul_matches_expr(spark, embeddings, monkeypatch):
     """The broadcast-matmul quantizer (the scale path for large ncells)
     and the literal-expression quantizer assign identical cells and
-    return identical top-k ids on the same data."""
+    return identical top-k ids on the same data. 8 cells take the expr
+    path; lowering _EXPR_NCELLS_MAX below 8 sends them to matmul."""
+    from egp_crn_spark import plans
+
     queries = embeddings.filter("vec_id % 50 = 0").select(
         F.col("vec_id").alias("q_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
     )
     C = SIM.train_centroids(embeddings, ncells=8, sample=512)
-    a_expr = SIM.ivf_assign(embeddings, C, method="expr").select("n_id", "cell").toPandas()
-    a_mm = SIM.ivf_assign(embeddings, C, method="matmul").select("n_id", "cell").toPandas()
+    expr_idx = SIM.ivf_assign(embeddings, C)
+    t_expr = SIM.ivf_topk(queries, embeddings, k=5, ncells=8, nprobe=3,
+                          centroids=C)
+    monkeypatch.setattr(SIM, "_EXPR_NCELLS_MAX", 7)
+    mm_idx = SIM.ivf_assign(embeddings, C)
+    t_mm = SIM.ivf_topk(queries, embeddings, k=5, ncells=8, nprobe=3,
+                        centroids=C)
+    assert "MapInArrow" not in plans.physical_plan(expr_idx)
+    assert "MapInArrow" in plans.physical_plan(mm_idx)
+    a_expr = expr_idx.select("n_id", "cell").toPandas()
+    a_mm = mm_idx.select("n_id", "cell").toPandas()
     merged = a_expr.merge(a_mm, on="n_id", suffixes=("_e", "_m"))
     assert len(merged) == len(a_expr)
     assert (merged.cell_e == merged.cell_m).all()
 
-    t_expr = SIM.ivf_topk(queries, embeddings, k=5, ncells=8, nprobe=3,
-                          centroids=C, method="expr").toPandas()
-    t_mm = SIM.ivf_topk(queries, embeddings, k=5, ncells=8, nprobe=3,
-                        centroids=C, method="matmul").toPandas()
+    t_expr, t_mm = t_expr.toPandas(), t_mm.toPandas()
     key = ["q_id", "n_id", "rank"]
     assert (t_expr[key].sort_values(key).reset_index(drop=True)
             .equals(t_mm[key].sort_values(key).reset_index(drop=True)))
 
 
-def test_ivf_float32_index(spark, embeddings):
+def test_ivf_float32_index(spark, embeddings, monkeypatch):
     """dtype='float32' carries the index in single precision (half the
     Arrow/shuffle bytes) without hurting ANN quality: same cells as the
     double path on this fixture, and probe recall vs exact matches the
@@ -210,10 +219,12 @@ def test_ivf_float32_index(spark, embeddings):
         F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
     )
     C = SIM.train_centroids(embeddings, ncells=8, sample=512)
-    idx32 = SIM.ivf_assign(embeddings, C, method="matmul", dtype="float32")
+    idx32 = SIM.ivf_assign(embeddings, C, dtype="float32")
     from pyspark.sql.types import ArrayType, FloatType
     assert idx32.schema["cv"].dataType == ArrayType(FloatType())
-    idx64 = SIM.ivf_assign(embeddings, C, method="matmul")
+    # the double path through the same (matmul) quantizer
+    monkeypatch.setattr(SIM, "_EXPR_NCELLS_MAX", 7)
+    idx64 = SIM.ivf_assign(embeddings, C)
     a = idx32.select("n_id", "cell").toPandas().set_index("n_id").cell
     b = idx64.select("n_id", "cell").toPandas().set_index("n_id").cell
     assert (a.reindex(b.index) == b).all()
@@ -224,6 +235,33 @@ def test_ivf_float32_index(spark, embeddings):
     ap = got.groupby("q_id").n_id.apply(set)
     recalls = [len(ex[q] & ap.get(q, set())) / len(ex[q]) for q in ex.index]
     assert np.mean(recalls) >= 0.6
+
+
+@pytest.mark.parametrize("kernel", ["ivf_assign", "ivf_pq_assign",
+                                    "dedup_embedding_cosine"])
+def test_ragged_vectors_raise(spark, monkeypatch, kernel):
+    """Rows of widths dim-1 and dim+1 in ONE Arrow batch flatten to
+    exactly n x dim values; every fixed-width decode must still refuse
+    them, naming the column, instead of silently shifting rows."""
+    dim = 8
+    rng = np.random.default_rng(3)
+    corpus = spark.createDataFrame(
+        [(0, [1.0] * (dim - 1)), (1, [1.0] * (dim + 1))],
+        "vec_id long, embedding array<double>").coalesce(1)
+    # keep both rows in one partition, hence one batch
+    monkeypatch.setattr(SIM, "_ensure_parallelism", lambda df: df)
+    C = rng.standard_normal((4, dim))
+    if kernel == "ivf_assign":
+        monkeypatch.setattr(SIM, "_EXPR_NCELLS_MAX", 0)  # the matmul kernel
+        out, what = SIM.ivf_assign(corpus, C), "ivf_assign: column 'cv'"
+    elif kernel == "ivf_pq_assign":
+        out = SIM.ivf_pq_assign(corpus, C, rng.standard_normal((2, 256, dim // 2)))
+        what = "ivf_pq_assign: column 'cv'"
+    else:
+        out = DD.dedup_embedding_cosine(corpus, threshold=0.0)
+        what = "dedup_embedding_cosine: column '_v'"
+    with pytest.raises(Exception, match=f"{what} has ragged vectors"):
+        out.collect()
 
 
 def test_ivf_matmul_large_ncells(spark, embeddings):

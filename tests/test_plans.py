@@ -102,18 +102,21 @@ def test_embedding_cosine_pair_distinct_is_narrow(spark):
         "no vector column may cross the pair-dedup exchange"
 
 
-def test_embedding_cosine_quantizer_switch(spark):
+def test_embedding_cosine_quantizer_switch(spark, monkeypatch):
     """VERDICT r5 #4: below _EXPR_BITS_MAX the hyperplane quantizer is a
     pure-Column literal fold (no Python eval); above it the broadcast-
     matmul sign-bit kernel takes over and the plan carries NO plane
     literals (bounded size) — and both quantizers emit identical pairs."""
+    from egp_crn_spark.operators import dedup as DD
     from egp_crn_spark.operators.dedup import dedup_embedding_cosine
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    expr_df = dedup_embedding_cosine(emb, threshold=0.3, dim=64, method="expr")
+    expr_df = dedup_embedding_cosine(emb, threshold=0.3, dim=64)
     assert not plans.has_python_eval(expr_df), \
         "expression quantizer must stay JVM-side"
-    mm_df = dedup_embedding_cosine(emb, threshold=0.3, dim=64, method="matmul")
+    with monkeypatch.context() as m:
+        m.setattr(DD, "_EXPR_BITS_MAX", 16 * 64 - 1)
+        mm_df = dedup_embedding_cosine(emb, threshold=0.3, dim=64)
     p = plans.physical_plan(mm_df)
     assert "MapInArrow" in p, "matmul quantizer runs through mapInArrow"
     assert len(p) < 50_000, "matmul plan must not unroll plane literals"
@@ -126,12 +129,13 @@ def test_embedding_cosine_quantizer_switch(spark):
     assert got_e == got_m and got_e, "quantizers must agree on the pair set"
 
 
-def test_embedding_cosine_no_dim_sniff_job(spark):
+def test_embedding_cosine_no_dim_sniff_job(spark, monkeypatch):
     """VERDICT r6 #8: the default dim=None must not run a driver-side
     first() sniff job — the matmul kernel derives the vector width from
     the first Arrow batch in the workers. And the lazy path must emit
     the same pairs as an explicit-dim matmul run (same seed, same
     derived plane matrix)."""
+    from egp_crn_spark.operators import dedup as DD
     from egp_crn_spark.operators.dedup import dedup_embedding_cosine
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -142,8 +146,9 @@ def test_embedding_cosine_no_dim_sniff_job(spark):
         "constructing with dim=None must not launch a Spark job"
     assert "MapInArrow" in plans.physical_plan(lazy)
     got_l = {tuple(r) for r in lazy.select("a_id", "b_id").collect()}
-    eager = dedup_embedding_cosine(emb, threshold=0.3, dim=64,
-                                   method="matmul")
+    # an explicit dim below the bits bound would take the expr path
+    monkeypatch.setattr(DD, "_EXPR_BITS_MAX", 16 * 64 - 1)
+    eager = dedup_embedding_cosine(emb, threshold=0.3, dim=64)
     got_e = {tuple(r) for r in eager.select("a_id", "b_id").collect()}
     assert got_l == got_e and got_l
 

@@ -291,8 +291,8 @@ def main() -> None:
               "independent skipping layers, zero exchanges, zero Python.",
     ))
 
-    # 12) pyramid rollup level: one hash exchange into the 4-children
-    # groupBy, pixel work confined to the grouped-map pandas stage
+    # 12) pyramid rollup level: one hash exchange on parent, then one
+    # vectorized mapInPandas fold over the locally sorted children
     from egp_crn_spark.operators.pyramid import base_tiles, rollup_level
     from egp_crn_spark.synth import write_fixtures
 
@@ -303,17 +303,25 @@ def main() -> None:
     audits.append(audit(
         "tile pyramid rollup (one level)",
         rollup_level(base_tiles(pimg, 5, 8), 8),
-        wants=[("grouped-map mosaic stage", r"FlatMapGroupsInPandas"),
+        wants=[("exactly one hash exchange on parent (final plan)",
+                r"== Final Plan ==(?:(?!hashpartitioning\(parent)[\s\S])*"
+                r"Exchange hashpartitioning\(parent#\d+L?, \d+\)"
+                r"(?:(?!hashpartitioning\(parent)[\s\S])*== Initial Plan =="),
+               ("vectorized mosaic fold", r"MapInPandas fold_batches"),
                ("partial map-side min_by aggregation",
-                r"HashAggregate[^\n]*partial_min_by|partial_min")],
-        forbids=[("per-row Python UDF", r"BatchEvalPython"),
+                r"Aggregate[^\n]*partial_min_by")],
+        forbids=[("grouped-map stage", r"FlatMapGroupsInPandas"),
+                 ("per-row Python UDF", r"BatchEvalPython"),
                  ("any sort-merge join", r"SortMergeJoin"),
                  ("cartesian product", r"CartesianProduct")],
         notes="base_tiles aggregates map-side (at most one candidate "
-              "row per (cell, map partition) crosses the exchange), "
-              "decodes only the per-cell survivors in one mapInPandas, "
-              "and the rollup is a single groupBy(parent) grouped-map "
-              "with <=4 rows per group — skew-immune by construction.",
+              "row per (cell, map partition) crosses the exchange) and "
+              "decodes only the per-cell survivors in one mapInPandas. "
+              "The rollup hash-repartitions on parent once, sorts each "
+              "partition locally, and mosaics every <=4-child group of "
+              "an Arrow batch in one vectorized numpy pass "
+              "(fold_batches) — no grouped-map stage, no per-group "
+              "pandas dispatch.",
     ))
 
     # 13) vector tile pipeline: simplify → clip is two chained Arrow
