@@ -265,8 +265,8 @@ def test_ragged_vectors_raise(spark, monkeypatch, kernel):
 
 
 def test_ivf_matmul_large_ncells(spark, embeddings):
-    """auto method picks matmul above _EXPR_NCELLS_MAX and stays correct:
-    every assigned cell equals the numpy nearest centroid."""
+    """The quantizer switches to matmul above _EXPR_NCELLS_MAX and stays
+    correct: every assigned cell equals the numpy nearest centroid."""
     C = SIM.train_centroids(embeddings, ncells=32, sample=512)
     got = SIM.ivf_assign(embeddings, C).select("n_id", "cell").toPandas()
     pdf = embeddings.toPandas()
