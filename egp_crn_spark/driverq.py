@@ -25,30 +25,7 @@ from .functions import cells as C
 from .functions.georef import key_x, key_x_sql, key_y, key_y_sql
 from .operators import conflate as CF
 from .operators import spatial_join as SJ
-
-
-_SHIPPED: set[int] = set()
-
-
-def ensure_shipped(spark: SparkSession) -> None:
-    """Workers resolve egp_crn_spark only if the package is shipped (or
-    cwd happens to be the repo); ship once per session so queries() works
-    under any driver harness."""
-    key = id(spark)
-    if key in _SHIPPED:
-        return
-    try:
-        from .session import package_zip
-
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already on the workers' path
-    _SHIPPED.add(key)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_shipped(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .session import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +41,7 @@ _NGD_N, _NGD_CELL, _NGD_SHIFT = 8, EXTENT / 8, 0.3 * (EXTENT / 32)
 def _crn_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("p_partkey")
     return (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < _CRN_N * _CRN_N)
         .select(
             F.col("p_partkey").alias("crn_id"),
@@ -89,7 +66,7 @@ _CRN_SQL = f"""
 def _ngd_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("s_suppkey")
     return (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .filter(F.col("s_suppkey") < _NGD_N * _NGD_N)
         .select(
             F.col("s_suppkey").alias("ngd_id"),
@@ -140,7 +117,7 @@ _CONFLATE_CTES = f"""
 def _conflation(spark: SparkSession, sf_dir: str):
     crn = _crn_rects(spark, sf_dir)
     ngd = _ngd_rects(spark, sf_dir)
-    pairs = CF.conflate_pairs_rect(crn, ngd, res=5, broadcast_ngd=True)
+    pairs = CF.conflate_pairs_rect(crn, ngd, res=5)
     return CF.classify_conflation(pairs, crn.select("crn_id"), ngd.select("ngd_id"))
 
 
@@ -199,7 +176,7 @@ SQL_CONFLATION_METRICS = f"""
 # tile / cell assignment (S2.9 phash georef analogue on events keys)
 # ---------------------------------------------------------------------------
 def q_cell_assignment(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("point_id"),
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
@@ -232,7 +209,7 @@ _DJ_RADIUS = 400.0
 
 
 def q_distance_join(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     left = ev.filter(F.col("event_id") % 20 == 7).select(
         F.col("event_id").alias("l_id"),
         key_x(F.col("event_id")).alias("lx"),
@@ -266,12 +243,12 @@ _SUPP_KEY_OFFSET = 1_000_000  # decorrelate supplier coords from customer keys
 
 
 def q_knn_nearest(spark, sf_dir):
-    left = _t(spark, sf_dir, "customer").select(
+    left = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("l_id"),
         key_x(F.col("c_custkey")).alias("lx"),
         key_y(F.col("c_custkey")).alias("ly"),
     )
-    right = _t(spark, sf_dir, "supplier").select(
+    right = read_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("r_id"),
         key_x(F.col("s_suppkey") + _SUPP_KEY_OFFSET).alias("rx"),
         key_y(F.col("s_suppkey") + _SUPP_KEY_OFFSET).alias("ry"),
@@ -311,7 +288,7 @@ _EDGE_SQL = f"""
 
 
 def _edges(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.select(
         (F.col("l_orderkey") * 2654435761 % _NODE_MOD).alias("n1"),
         ((F.col("l_orderkey") * 2654435761 + F.col("l_linenumber") * 2246822519) % _NODE_MOD).alias("n2"),
@@ -344,7 +321,7 @@ SQL_NODE_DEGREE = f"""
 # duplicate-geometry checksum (F9 / validation 201) on derived 2-pt lines
 # ---------------------------------------------------------------------------
 def q_dup_geometry(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_orderkey") % 512).alias("a"),
         (F.col("o_orderkey") * 31 % 512).alias("b"),
@@ -378,7 +355,7 @@ SQL_DUP_GEOMETRY = """
 # incremental deltas: id anti-joins (J12) + full-outer classification (J9/F22)
 # ---------------------------------------------------------------------------
 def q_delta_orders(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     prev = o.filter(F.col("o_orderkey") % 10 != 3).select("o_orderkey")
     curr = o.filter(F.col("o_orderkey") % 7 != 2).select("o_orderkey")
     adds = curr.join(prev, "o_orderkey", "left_anti").withColumn("status", F.lit("Additions"))
@@ -401,7 +378,7 @@ def q_crossings_delta(spark, sf_dir):
     """gen_crossings.py:104-122 — outer-join old vs new crossings, classify
     Additions / Deletions / Modifications."""
     e_new = _edges(spark, sf_dir)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
     e_old = li.select(
         (F.col("l_orderkey") * 2654435761 % _NODE_MOD).alias("n1"),
         ((F.col("l_orderkey") * 2654435761 + F.col("l_linenumber") * 2246822519) % _NODE_MOD).alias("n2"),
@@ -451,7 +428,7 @@ SQL_CROSSINGS_DELTA = f"""
 # relational core: aggregate (A6), window top-1 (W1), sessionize (W2)
 # ---------------------------------------------------------------------------
 def q_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
@@ -475,8 +452,8 @@ SQL_PRICING_SUMMARY = """
 
 
 def q_top_customer_per_nation(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
     )
@@ -501,7 +478,7 @@ _SESSION_GAP = 1800
 
 
 def q_sessionize(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     gap = F.unix_timestamp("ts") - F.lag(F.unix_timestamp("ts")).over(w)
     return (
@@ -549,7 +526,7 @@ _BATCH1 = {
 
 QUERIES.update(_BATCH1)
 
-from .driverq2 import QUERIES2  # noqa: E402  (import after _BATCH1 to avoid cycles)
+from .driverq2 import QUERIES2  # noqa: E402
 from .driverq3 import QUERIES3  # noqa: E402
 from .driverq4 import QUERIES4  # noqa: E402
 from .driverq5 import QUERIES5  # noqa: E402

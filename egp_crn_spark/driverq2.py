@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.georef import key_x, key_x_sql, key_y, key_y_sql
@@ -23,13 +22,7 @@ from .operators.meshblock import polygonize_tiled
 from .operators.segment import split_lines_at_points
 from .operators.skew import salted_aggregate
 from .operators.spatial_join import point_in_polygon_join
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .driverq import ensure_shipped
-
-    ensure_shipped(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .session import read_table
 
 
 _STOP_SQL = "['the','a','of','and','to','is','in']"
@@ -38,7 +31,7 @@ _TOKS = TX.tokens_sql("text")
 
 # ---------------------------------------------------------------- dedup_exact
 def q_dedup_exact_docs(spark, sf_dir):
-    return DD.dedup_exact(_t(spark, sf_dir, "documents"))
+    return DD.dedup_exact(read_table(spark, sf_dir, "documents"))
 
 
 SQL_DEDUP_EXACT_DOCS = """
@@ -51,7 +44,7 @@ SQL_DEDUP_EXACT_DOCS = """
 
 # ---------------------------------------------------------------- token_stats
 def q_token_stats(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     feats = TX.quality_features(F.col("text"))
     return d.select(
         "doc_id",
@@ -83,7 +76,7 @@ SQL_TOKEN_STATS = f"""
 
 # ---------------------------------------------------------------- lang_id
 def q_lang_id(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     pred = TX.predicted_lang(F.col("text"))
     return d.select("doc_id", pred.alias("pred_lang"),
                     (pred == F.col("lang")).alias("matches_label"))
@@ -123,7 +116,7 @@ SQL_LANG_ID = _lang_sql()
 
 # ---------------------------------------------------------------- fingerprint
 def q_doc_fingerprint(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     sig = DD.minhash_signatures(d, "text", "doc_id", num_hashes=2, k=3, use_md5=True)
     return (
         d.select("doc_id", TX.doc_fingerprint(F.col("text")).alias("fp"))
@@ -156,7 +149,7 @@ _MH_HASHES, _MH_BANDS, _MH_T = 8, 4, 0.5
 
 def q_minhash_lsh_dup(spark, sf_dir):
     return DD.dedup_minhash_lsh(
-        _t(spark, sf_dir, "documents"),
+        read_table(spark, sf_dir, "documents"),
         num_hashes=_MH_HASHES, bands=_MH_BANDS, threshold=_MH_T, use_md5=True,
     ).select("a_id", "b_id", "jaccard")
 
@@ -214,7 +207,7 @@ _NG_MAX_DF = 5  # exercises the hot-shingle cap (sf0.01 has shingles with df up 
 
 def q_ngram_jaccard(spark, sf_dir):
     return DD.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=_NG_T, max_df=_NG_MAX_DF
+        read_table(spark, sf_dir, "documents"), threshold=_NG_T, max_df=_NG_MAX_DF
     ).select("a_id", "b_id", "jaccard")
 
 
@@ -235,7 +228,7 @@ SQL_NGRAM_JACCARD = f"""
 
 # ---------------------------------------------------------------- embedding topk
 def q_embedding_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
@@ -265,7 +258,7 @@ _SEG_OFF = 500_000
 
 
 def _seg_lines(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _SEG_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _SEG_N)
     return o.select(
         F.col("o_orderkey").cast("string").alias("line_id"),
         key_x(F.col("o_orderkey")).alias("ax"),
@@ -317,7 +310,7 @@ _PG_KEYS, _PG_CELL = 24, 100.0
 
 
 def q_polygonize_grid(spark, sf_dir):
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < _PG_KEYS)
+    p = read_table(spark, sf_dir, "part").filter(F.col("p_partkey") < _PG_KEYS)
     js = F.explode(F.sequence(F.lit(0), F.lit(_PG_KEYS - 2))).alias("j")
     k = F.col("p_partkey").cast("double") * _PG_CELL
     vert = p.select(k.alias("x"), js).select(
@@ -373,7 +366,7 @@ def _quad_corner_cols(ix, iy):
 
 def q_pip_quads(spark, sf_dir):
     # quads from supplier keys < 16 (CCW corner order)
-    s = _t(spark, sf_dir, "supplier").filter(F.col("s_suppkey") < _Q_N * _Q_N)
+    s = read_table(spark, sf_dir, "supplier").filter(F.col("s_suppkey") < _Q_N * _Q_N)
     qi = F.col("s_suppkey") % _Q_N
     qj = F.expr(f"s_suppkey div {_Q_N}")
     corners = []
@@ -381,7 +374,7 @@ def q_pip_quads(spark, sf_dir):
         x, y = _quad_corner_cols(qi + di, qj + dj)
         corners.append(F.array(x, y))
     quads = s.select(F.col("s_suppkey").alias("poly_id"), F.array(*corners).alias("vertices"))
-    pts = _t(spark, sf_dir, "events").select(
+    pts = read_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("p_id"),
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
@@ -419,7 +412,7 @@ SQL_PIP_QUADS = _pip_quads_sql()
 def q_lineage_counts(spark, sf_dir):
     from .functions import cells as C
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         C.cell_of_xy(key_x(F.col("event_id")), key_y(F.col("event_id")), 4).alias("cell_id"),
     )
@@ -441,7 +434,7 @@ SQL_LINEAGE_COUNTS = _lineage_sql()
 
 # ---------------------------------------------------------------- salted agg
 def q_salted_agg(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return salted_aggregate(
         ev, "event_type",
         aggs={"s": F.sum(F.col("value").cast("decimal(28,6)")),
@@ -465,7 +458,7 @@ _SH_HAMMING = 3  # → 4 bands of 16 bits (pigeonhole-exact recall)
 
 def q_simhash_dup(spark, sf_dir):
     return DD.dedup_simhash(
-        _t(spark, sf_dir, "documents"), max_hamming=_SH_HAMMING, use_md5=True
+        read_table(spark, sf_dir, "documents"), max_hamming=_SH_HAMMING, use_md5=True
     ).select("a_id", "b_id", F.col("hamming").cast("long").alias("hamming"))
 
 
@@ -528,7 +521,7 @@ _IVF_C = _ivf_centroids()
 
 
 def _ivf_queries(spark, sf_dir):
-    return _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0).select(
+    return read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
     )
@@ -540,7 +533,7 @@ def q_ivf_topk(spark, sf_dir):
     one query oracles both the ANN result AND its recall against the
     exact baseline (the round-3 ``ivf_recall`` single-row query folded in
     per VERDICT r3 #1's consolidation guidance)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = _ivf_queries(spark, sf_dir)
     ivf = SIM.ivf_topk(
         queries, emb,
@@ -615,7 +608,7 @@ def _derived_images(spark, sf_dir):
     DuckDB oracle can recompute decoded statistics without the codec."""
     from .functions.imagecodec import encode_image
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen(it):
         i = np.arange(17)[:, None, None]
@@ -773,7 +766,7 @@ _FS_EVERY = 3
 def q_frame_sample(spark, sf_dir):
     """Video frame sampling (pure Column): synthetic frame table
     (video_id = key/16, frame_idx = key%16), keep every 3rd frame."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 4096)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 4096)
     frames = o.select(
         F.expr("o_orderkey div 16").alias("video_id"),
         (F.col("o_orderkey") % 16).alias("frame_idx"),
@@ -803,7 +796,7 @@ def _ec_planes() -> np.ndarray:
 
 def q_embedding_cosine_dup(spark, sf_dir):
     return DD.dedup_embedding_cosine(
-        _t(spark, sf_dir, "embeddings"),
+        read_table(spark, sf_dir, "embeddings"),
         threshold=_EC_T, num_planes=_EC_PLANES, bands=_EC_BANDS, dim=_IVF_DIM,
     ).select("a_id", "b_id", "cosine")
 
@@ -859,7 +852,7 @@ def q_stream_window_counts(spark, sf_dir):
 
     from .streaming import windowed_event_counts
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     # stable per-input staging dir, written once and reused — a fresh
     # mkdtemp per invocation would leak one events copy per harness run
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]

@@ -2,17 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.neighbours import compare_neighbours
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .driverq import ensure_shipped
-
-    ensure_shipped(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .session import read_table
 
 
 # ---------------------------------------------------------------- neighbours
@@ -37,7 +31,7 @@ def _grid_blocks(keys: DataFrame, key_col: str) -> DataFrame:
 def q_neighbour_review(spark, sf_dir):
     """review_meshblock semantics: CRN = full 4x4 block grid, NGD = same
     grid with keys%7==3 dropped; diff per-block neighbour sets."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < _NB_N * _NB_N)
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_partkey") < _NB_N * _NB_N)
     crn = _grid_blocks(part, "p_partkey")
     ngd = _grid_blocks(part.filter(F.col("p_partkey") % 7 != 3), "p_partkey")
     return compare_neighbours(crn, ngd)
@@ -78,8 +72,8 @@ def q_conform_source(spark, sf_dir):
     """conform_deltas_src semantics (S6/P2/P3/P8): pushdown filter +
     semi-join extract + rename + domain-coded classification — all
     Catalyst-native (the reference shells out to ogr2ogr SQL)."""
-    orders = _t(spark, sf_dir, "orders")
-    customers = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = read_table(spark, sf_dir, "orders")
+    customers = read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     status_domain = F.when(F.col("o_orderstatus") == "F", "Finished") \
         .when(F.col("o_orderstatus") == "O", "Open").otherwise("Pending")
     return (
@@ -131,7 +125,7 @@ def q_table_roundtrip(spark, sf_dir):
     from .sources.tables import (drop_table, load_table, save_bucketed_table,
                                  save_table, table_exists)
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", (F.col("o_orderkey") % 8).alias("bucket")
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -207,7 +201,7 @@ def q_phash_near_dup(spark, sf_dir):
     every base image gets a planted partner one bit-flip away."""
     from .operators.images import phash_near_dup
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 4 == 0)
+    ev = read_table(spark, sf_dir, "events").filter(F.col("event_id") % 4 == 0)
     hi = (F.col("event_id") * _PH_M1) % _PH_P
     lo = (F.col("event_id") * _PH_M2) % _PH_P
     ph = (hi * F.lit(2147483648) + lo).cast("long")

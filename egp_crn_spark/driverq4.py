@@ -13,7 +13,7 @@ comparison is tighter (orientation signs, point-segment distances).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.georef import key_x, key_x_sql, key_y, key_y_sql
@@ -23,13 +23,7 @@ from .operators.dissolve import dissolve_blocks
 from .operators.distance import arc_within_network_distance
 from .operators.snap import snap_nodes
 from .operators.snapsuggest import suggested_snapping
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .driverq import ensure_shipped
-
-    ensure_shipped(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .session import read_table
 
 
 def _flags(arcs: DataFrame, flagged: DataFrame, name: str,
@@ -73,7 +67,7 @@ _V101_N = 2048
 def _v101_arcs(spark, sf_dir):
     """4-vertex polylines: k%3==0 → bowtie (segments 1 and 3 cross),
     else a monotone staircase (simple)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V101_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V101_N)
     k = F.col("o_orderkey")
     x, y = key_x(k), key_y(k)
     a = (k % 5 + 2).cast("double")
@@ -128,7 +122,7 @@ _V102_STEP = 0.00051  # tol 0.01 sits between steps (margin >= 3e-4, no boundary
 
 
 def _v102_arcs(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V102_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V102_N)
     k = F.col("o_orderkey")
     x, y = key_x(k), key_y(k)
     s1 = (k % 40 + 1).cast("double") * _V102_STEP
@@ -159,7 +153,7 @@ _V201_MOD = 384  # classes < 128 hold two keys (k, k+384), rest are unique
 
 
 def _v201_arcs(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V201_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V201_N)
     k = F.col("o_orderkey")
     g = k % _V201_MOD
     a = F.array(key_x(g + 9000), key_y(g + 9000))
@@ -194,7 +188,7 @@ def _v202_arcs(spark, sf_dir):
     """Horizontal segments on 32 shared rows: same-row arcs overlap iff
     x-intervals intersect with positive length; k and k+480 are EXACT
     duplicates (equal geometry → excluded from `overlaps`)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V202_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V202_N)
     k = F.col("o_orderkey")
     y = (k % 32).cast("double") * 100.0 + 5000.0
     x0 = ((k * 17) % 40).cast("double") * 10.0 + 2000.0
@@ -234,7 +228,7 @@ _V301_N = 64
 def _v301_arcs(spark, sf_dir):
     """Main arcs m_k: 3 collinear lattice vertices; spur arcs s_k
     (k%4==0) start AT m_k's interior vertex → m_k flagged."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V301_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V301_N)
     k = F.col("o_orderkey")
 
     def px(i):
@@ -296,7 +290,7 @@ def _v302_arcs(spark, sf_dir):
     """Roads every 40 units; disconnected vertical stubs (k%3==0) hover
     dy = 2.2 + k%7 above road k — flagged (both sides) iff dy <= 5
     (margin 0.2 from the threshold)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V302_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V302_N)
     k = F.col("o_orderkey")
     yk = k.cast("double") * 40.0 + 20000.0
     roads = o.select(
@@ -365,7 +359,7 @@ _V303_N = 2048
 def _v303_arcs(spark, sf_dir):
     """Short random-direction segments (multiplicative-hash anchors +
     bounded deltas) — nearby pairs cross generically."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V303_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _V303_N)
     k = F.col("o_orderkey")
     x, y = key_x(k), key_y(k)
     dx = ((k * 1103515245) % 601 - 300).cast("double")
@@ -441,7 +435,7 @@ _SNAP_N = 64
 def _snap_arcs(spark, sf_dir):
     """NRN roads own lattice nodes; NGD arcs start a hair off an NRN node
     (dist margins >= 2e-4 from both prox thresholds)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _SNAP_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _SNAP_N)
     k = F.col("o_orderkey")
     nx = k.cast("double") * 30.0 + 1000.0
     nrn = o.select(
@@ -506,7 +500,7 @@ _SS_N = 32
 
 
 def _ss_arcs(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _SS_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _SS_N)
     k = F.col("o_orderkey")
     yk = k.cast("double") * 200.0 + 10000.0
     roads = o.select(
@@ -561,7 +555,7 @@ def q_arc_within(spark, sf_dir):
     """3-vertex query arcs with a mid-vertex bump: the max sample
     distance is EXACTLY the mid-vertex offset (off + dip), with >= 0.1
     margin from the radius-5 threshold for every (k%9, k%3) combo."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _AW_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _AW_N)
     k = F.col("o_orderkey")
     yk = k.cast("double") * 100.0 + 30000.0
     roads = o.select(
@@ -595,7 +589,7 @@ _RM_N = 256
 
 
 def _rm_tables(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _RM_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _RM_N)
     k = F.col("o_orderkey")
     x = k.cast("double") * 3.0 + 40000.0
     restore = o.select(
@@ -634,7 +628,7 @@ _DV_CELL = 50.0
 def q_dissolve_blocks(spark, sf_dir):
     """8x8 cell grid (one cell dropped per k%13==0) dissolved into 2x2
     blocks; per block: ring count, total area, total ring vertices."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderkey") < _DV_N) & (F.col("o_orderkey") % 13 != 0))
     k = F.col("o_orderkey")
     i = (k % 8).cast("double")
@@ -679,7 +673,7 @@ def _std_raw(spark, sf_dir):
     duplicate/null ids, domain-coded strings, nulls, NRN integrity
     violations, null-coordinate points, adjacent duplicate vertices, and
     zero-length geometries (dropped)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _STD_N)
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < _STD_N)
     k = F.col("o_orderkey")
     x1 = (k * 3).cast("double") + 1000.0
     y = F.lit(7000.0)
@@ -843,7 +837,7 @@ _MP_O = 30000.0
 
 
 def _mp_arcs(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
+    p = read_table(spark, sf_dir, "part")
     c, o = _MP_C, _MP_O
     lines = p.filter(F.col("p_partkey") <= _MP_G).select(
         F.col("p_partkey").cast("int").alias("i0"),
@@ -892,7 +886,7 @@ def _mp_arcs(spark, sf_dir):
 def _mp_restore(spark, sf_dir):
     """Restore snapshot for the missing-BO check: BO rows (r even) whose
     uid is present in the working arcs iff r % 3 == 0."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = read_table(spark, sf_dir, "part").filter(
         (F.col("p_partkey") >= 1) & (F.col("p_partkey") <= 30))
     r = F.col("p_partkey").cast("int")
     return p.select(

@@ -23,12 +23,13 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from .driverq2 import (_IVF_C, _IVF_NPROBE, _centroid_values_sql,
-                       _ivf_queries, _t)
+                       _ivf_queries)
 from .operators import index_maintain as IXM
 from .operators import sampling as SA
 from .operators import similarity as SIM
 from .operators.incremental import (aggregate_delta, merge_aggregate_state,
                                     snapshot_aggregate)
+from .session import read_table
 
 # ------------------------------------------------------------- hash_split
 _HS_W = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -38,7 +39,7 @@ def q_hash_split(spark, sf_dir):
     """Deterministic corpus split, full membership oracle: every doc's
     split is a pure function of (id, seed) that DuckDB recomputes from
     the md5 key (sampling.hash_split use_md5 mode)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return SA.hash_split(d, _HS_W, use_md5=True).select("doc_id", "split")
 
 
@@ -65,7 +66,7 @@ _HSAMP_DEFAULT = 0.75
 def q_hash_sample(spark, sf_dir):
     """Per-stratum-rate Bernoulli-by-hash sample (downsample dominant
     languages) — zero-shuffle membership, md5 oracle mode."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return SA.hash_sample(d, _HSAMP_DEFAULT, stratum_col="lang",
                           fractions=_HSAMP_FR, use_md5=True) \
         .select("doc_id", "lang")
@@ -87,7 +88,7 @@ _SS_N = 20
 def q_stratified_sample(spark, sf_dir):
     """Exactly min(n, |stratum|) docs per language in deterministic
     hash order — the unbiased fixed-count sampler."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return SA.stratified_sample(d, ["lang"], _SS_N, use_md5=True) \
         .select("doc_id", "lang", "source")
 
@@ -111,7 +112,7 @@ def q_pack_chunks(spark, sf_dir):
     DuckDB over the identical md5 order — every (chunk_id, chunk_offset)
     must agree, which pins the bucket/base-offset machinery end to
     end."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return SA.pack_chunks(d, "n_chars", _PC_CHUNK, bucket_bits=8,
                           use_md5=True) \
         .select("doc_id", "chunk_id", F.col("chunk_offset").cast("long")
@@ -136,7 +137,7 @@ def q_chunk_slices(spark, sf_dir):
     (chunk, doc) slice with exact in-doc and in-chunk extents — the
     oracle replays the expansion with a lateral range per doc, so
     coverage (no gaps, no overlaps) is value-checked row by row."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     packed = SA.pack_chunks(d, "n_chars", _PC_CHUNK, bucket_bits=8,
                             use_md5=True)
     return SA.chunk_slices(packed, "n_chars", _PC_CHUNK).select(
@@ -179,7 +180,7 @@ def q_view_maintain(spark, sf_dir):
     deletes: base rows with % 5 == 0) — the maintained state must equal
     the direct aggregate of the final row set, which is what the oracle
     computes from scratch."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     base = o.filter(F.col("o_orderkey") % 7 != 0)
     ins = o.filter(F.col("o_orderkey") % 7 == 0) \
         .withColumn("_change_type", F.lit("insert"))
@@ -214,7 +215,7 @@ def q_index_maintain_live(spark, sf_dir):
     recomputes by assigning the final live id set to the same literal
     centroids (tie-break: highest cell, matching the matmul kernel's
     last-argmax)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     vid = F.col("vec_id")
     a_pred = vid % 3 != 0
     u_pred = (vid % 7 == 0) & a_pred
@@ -270,7 +271,7 @@ def q_ivf_pq_topk(spark, sf_dir):
     twin of ivf_topk): residual-encode the corpus (ivf_pq_assign),
     probe + ADC-score + exact-refine (ivf_pq_probe), flag each result
     against the brute-force exact top-k."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = _ivf_queries(spark, sf_dir)
     idx = SIM.ivf_pq_assign(emb, _IVF_C, _PQ_B)
     pq = SIM.ivf_pq_probe(
@@ -376,7 +377,7 @@ def _pyr_images(spark, sf_dir):
 
     from .functions.georef import _AXIS_MOD, _KX, _KY
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("image_id"),
         (F.shiftleft(F.pmod(F.col("event_id") * _KX, F.lit(_AXIS_MOD)), 32)
          .bitwiseOR(F.pmod(F.col("event_id") * _KY, F.lit(_AXIS_MOD))))
@@ -505,7 +506,7 @@ def q_zorder_pruned_read(spark, sf_dir):
 
     from .functions.georef import key_x, key_y
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
@@ -543,7 +544,7 @@ def q_rewrite_compact(spark, sf_dir):
     from .operators.cluster import skipping_report
     from .sources.snaplog import SnapshotLogTable
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         key_x(F.col("event_id")).alias("x"),
         key_y(F.col("event_id")).alias("y"),
@@ -584,10 +585,11 @@ def q_simplify_arcs(spark, sf_dir):
     `ok` column and pinned in tests/test_generalize.py."""
     import pandas as pd
 
+    from .functions.geomkernel import vertex_array
     from .functions.georef import key_x, key_y
     from .operators.generalize import simplify_lines, zoom_tolerance
 
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = read_table(spark, sf_dir, "events").filter(
         F.col("user_id") % 3 == 1).select(
         "user_id", "ts",
         key_x(F.col("event_id")).alias("x"),
@@ -610,8 +612,8 @@ def q_simplify_arcs(spark, sf_dir):
             rows = []
             for aid, v, s in zip(pdf["arc_id"], pdf["vertices"],
                                  pdf["simplified"]):
-                orig = np.asarray([[p[0], p[1]] for p in v])
-                kept = np.asarray([[p[0], p[1]] for p in s])
+                orig = vertex_array(v, "simplify_arcs vertices")
+                kept = vertex_array(s, "simplify_arcs simplified")
                 # vectorized point-to-chain distance: (n,1,2) points vs
                 # (1,m,2) kept segments, min over segments per point
                 a, b = kept[None, :-1], kept[None, 1:]
@@ -644,7 +646,7 @@ def _event_arcs(spark, sf_dir, min_vertices=2):
     the DuckDB oracle reproduces the exact traversal."""
     from .functions.georef import key_x, key_y
 
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = read_table(spark, sf_dir, "events").filter(
         F.col("user_id") % 3 == 0).select(
         "user_id", "ts",
         key_x(F.col("event_id")).alias("x"),

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .geomkernel import vertex_array
+
 # worker-side cache: (src, dst) -> vectorized transform callable
 _TRANSFORMERS: dict = {}
 
@@ -129,20 +131,17 @@ def reproject_vertices(df: DataFrame, src: str, dst: str,
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fn = reg if reg is not None else _transformer(src, dst)
         for pdf in batches:
-            lens = [len(v) for v in pdf[vertices]]
+            arrs = [vertex_array(v, f"reproject_vertices {vertices}")
+                    for v in pdf[vertices]]
+            lens = [len(a) for a in arrs]
             if sum(lens) == 0:
                 yield pdf
                 continue
-            flat = np.concatenate([np.asarray([list(p) for p in v], dtype=np.float64)
-                                   if len(v) else np.empty((0, 2))
-                                   for v in pdf[vertices]])
+            flat = np.concatenate(arrs)
             xs, ys = fn(flat[:, 0], flat[:, 1])
             pts = np.column_stack([xs, ys])
-            offs = np.cumsum([0] + lens)
             out = pdf.copy()
-            out[vertices] = [
-                [list(p) for p in pts[offs[i]:offs[i + 1]]] for i in range(len(lens))
-            ]
+            out[vertices] = [a.tolist() for a in np.split(pts, np.cumsum(lens)[:-1])]
             yield out
 
     return df.mapInPandas(do, schema=schema)

@@ -121,7 +121,15 @@ def bbox(vertices: Column) -> Column:
 def _canonical_geom_string(vertices: Column, decimals: int = COORD_DECIMALS) -> Column:
     """Canonical orientation string of a rounded vertex array: the
     lexicographically smaller of the forward/reverse renderings —
-    direction-insensitive geometry identity at ``decimals`` precision."""
+    direction-insensitive geometry identity at ``decimals`` precision.
+
+    Rounding rule (the same as ``nodes.node_key``): Spark's ``round``
+    rounds HALF_UP on the double's shortest decimal form (the digits
+    ``repr`` prints), not on its exact binary value. Python's ``round``
+    and ``format(x, ".5f")`` round the exact binary value, so an oracle
+    built on them picks the other neighbour on some exact 5-decimal
+    ties (0.000155, 1000.000305, ...); ``Decimal(repr(x))`` quantized
+    ROUND_HALF_UP reproduces this rule."""
     rounded = round_vertices(vertices, decimals)
     fmt = lambda vs: F.array_join(  # noqa: E731
         F.transform(
@@ -146,6 +154,9 @@ def geom_checksum(vertices: Column, decimals: int = COORD_DECIMALS) -> Column:
     string; md5 for a compact PRINTABLE key (oracle twins reproduce it
     in SQL, and standardize's id repair sorts on it). For internal
     equality-only joins prefer geom_checksum128 — half the shuffle bytes.
+    Coordinates round HALF_UP on their shortest decimal form (see
+    ``_canonical_geom_string``), so Python ``round``/``format`` oracles
+    differ from it on exact 5-decimal ties.
     """
     return F.md5(_canonical_geom_string(vertices, decimals))
 

@@ -10,6 +10,9 @@ sandbox has no shapely/GEOS.
 
 Conventions: a polygon is an (n, 2) float array of ring vertices in any
 orientation, NOT closed (last != first); a polyline is an (n, 2) array.
+``vertex_array`` is the one decode from an ``array<array<double>>``
+value to that form; callers never unpack vertices themselves, and write
+results back with ``ndarray.tolist()``.
 """
 
 from __future__ import annotations
@@ -17,6 +20,34 @@ from __future__ import annotations
 import numpy as np
 
 EPS = 1e-9
+
+
+# ---------------------------------------------------------------- decode
+def vertex_array(vs, what: str) -> np.ndarray:
+    """One ``array<array<double>>`` value (a list, or the object ndarray
+    Arrow hands a pandas UDF) as an (n, 2) float64 array; an empty value
+    is (0, 2). Raises ValueError naming ``what`` (operator and column)
+    on a null value, a null vertex, a vertex that is not exactly
+    ``[x, y]`` (ragged rows included) and a null or NaN coordinate —
+    Arrow turns a null double inside a list into NaN."""
+    if vs is None:
+        raise ValueError(f"{what}: null geometry")
+    rows = vs.tolist() if isinstance(vs, np.ndarray) else list(vs)
+    if not rows:
+        return np.empty((0, 2), dtype=np.float64)
+    try:
+        a = np.array(rows, dtype=np.float64)
+    except (TypeError, ValueError):  # a null vertex or a ragged row
+        a = None
+    if a is None or a.ndim != 2 or a.shape[1] != 2:
+        i = next((i for i, p in enumerate(rows)
+                  if p is None or np.ndim(p) != 1 or len(p) != 2), 0)
+        shown = "null" if rows[i] is None else np.asarray(rows[i]).tolist()
+        raise ValueError(f"{what}: vertex {i} is {shown}, not [x, y]")
+    if np.isnan(a).any():
+        raise ValueError(f"{what}: vertex {int(np.isnan(a).any(axis=1).argmax())} "
+                         "has a null or NaN coordinate")
+    return a
 
 
 # ---------------------------------------------------------------- predicates

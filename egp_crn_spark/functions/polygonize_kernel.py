@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .geomkernel import vertex_array
+
 ROUND = 9
 
 
@@ -112,11 +114,13 @@ def polygonize_segment_array(arr: np.ndarray) -> list[np.ndarray]:
     ]
 
 
-def polygonize_vertex_arrays(vertex_arrays) -> list[np.ndarray]:
-    """Convenience: polylines (lists of [x, y]) → bounded faces."""
+def polygonize_vertex_arrays(vertex_arrays,
+                             what: str = "polygonize input") -> list[np.ndarray]:
+    """Convenience: polylines (lists of [x, y]) → bounded faces; ``what``
+    names the input in vertex_array's malformed-geometry error."""
     chunks = []
     for vs in vertex_arrays:
-        a = np.asarray([list(p) for p in vs], dtype=np.float64)
+        a = vertex_array(vs, what)
         if len(a) >= 2:
             chunks.append(np.hstack([a[:-1], a[1:]]))
     if not chunks:

@@ -36,11 +36,11 @@ from ..functions import geomkernel as GK
 from .spatial_join import rect_intersects_join
 
 
-def conflate_pairs_rect(crn: DataFrame, ngd: DataFrame, res: int,
-                        broadcast_ngd: bool = False) -> DataFrame:
+def conflate_pairs_rect(crn: DataFrame, ngd: DataFrame, res: int) -> DataFrame:
     """(crn_id, ngd_id, occupation_area) for intersecting rectangle pairs.
 
     crn: crn_id, xmin, ymin, xmax, ymax. ngd: ngd_id, xmin, ymin, xmax, ymax.
+    The NGD block set is a dimension table: its cell cover is broadcast.
     """
     a = crn.select(
         F.col("crn_id").alias("a_id"),
@@ -52,7 +52,7 @@ def conflate_pairs_rect(crn: DataFrame, ngd: DataFrame, res: int,
         F.col("xmin").alias("bxmin"), F.col("ymin").alias("bymin"),
         F.col("xmax").alias("bxmax"), F.col("ymax").alias("bymax"),
     )
-    pairs = rect_intersects_join(a, b, res=res, broadcast_b=broadcast_ngd)
+    pairs = rect_intersects_join(a, b, res=res, b_hint="broadcast")
     crn_area = (F.col("axmax") - F.col("axmin")) * (F.col("aymax") - F.col("aymin"))
     return pairs.select(
         F.col("a_id").alias("crn_id"),
@@ -89,8 +89,8 @@ def conflate_pairs_convex(crn_polys: DataFrame, ngd_polys: DataFrame, res: int) 
                 continue
             occ = np.empty(len(pdf), dtype=np.float64)
             for i, (av, bv) in enumerate(zip(pdf["averts"], pdf["bverts"])):
-                subject = np.asarray([list(p) for p in av], dtype=np.float64)
-                clip = np.asarray([list(p) for p in bv], dtype=np.float64)
+                subject = GK.vertex_array(av, "conflate_pairs_convex crn_polys.vertices")
+                clip = GK.vertex_array(bv, "conflate_pairs_convex ngd_polys.vertices")
                 area = GK.polygon_area(subject)
                 occ[i] = 0.0 if area <= 0 else GK.convex_clip_area(subject, clip) / area
             out = pd.DataFrame(

@@ -55,7 +55,7 @@ def dissolve_blocks(faces: DataFrame, block_col: str = "bb_uid",
         for i, r in enumerate(rings):
             x, y = r[:, 0], r[:, 1]
             area = abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) / 2.0
-            rows.append((int(bb), i, [[float(p), float(q)] for p, q in r], float(area)))
+            rows.append((int(bb), i, r.tolist(), float(area)))
         return pd.DataFrame(rows, columns=["bb_uid", "ring_idx", "vertices", "area"])
 
     return boundary.groupBy(block_col).applyInPandas(per_block, schema=DISSOLVED_SCHEMA)

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.cells import cell_size
-from ..functions.geomkernel import simplify_dp
+from ..functions.geomkernel import simplify_dp, vertex_array
 
 __all__ = ["simplify_lines", "zoom_tolerance", "generalize_levels"]
 
@@ -40,15 +40,15 @@ def simplify_lines(arcs: DataFrame, tol: float,
     vertices) with tolerance ``tol``. Endpoints survive — arc topology
     (node identity at segment ends, operators/nodes.py) is preserved by
     construction. Null/short rows pass through untouched."""
+    what = f"simplify_lines {vertices_col}"
+
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
             for v in pdf[vertices_col]:
-                if v is None or len(v) <= 2:
-                    out.append(v)
-                    continue
-                line = np.asarray([[p[0], p[1]] for p in v], dtype=np.float64)
-                out.append([list(p) for p in simplify_dp(line, tol)])
+                line = None if v is None else vertex_array(v, what)
+                out.append(v if line is None or len(line) <= 2
+                           else simplify_dp(line, tol).tolist())
             pdf = pdf.copy()
             # object Series: rows carry ragged list-of-[x, y] lists
             pdf[vertices_col] = pd.Series(out, index=pdf.index,
@@ -80,23 +80,18 @@ def generalize_levels(arcs: DataFrame, reses: list[int],
     schema = StructType(list(arcs.schema.fields)
                         + [StructField("res", IntegerType(), False)])
 
+    what = f"generalize_levels {vertices_col}"
+
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            lines = []
-            for v in pdf[vertices_col]:
-                if v is None or len(v) <= 2:
-                    lines.append(None)
-                else:
-                    lines.append(np.asarray([[p[0], p[1]] for p in v],
-                                            dtype=np.float64))
+            # null and short rows pass through untouched (line None)
+            lines = [None if v is None else vertex_array(v, what)
+                     for v in pdf[vertices_col]]
+            lines = [a if a is not None and len(a) > 2 else None for a in lines]
             frames = []
             for r, tol in tols:
-                out = []
-                for v, line in zip(pdf[vertices_col], lines):
-                    if line is None:
-                        out.append(v)
-                    else:
-                        out.append([list(p) for p in simplify_dp(line, tol)])
+                out = [v if line is None else simplify_dp(line, tol).tolist()
+                       for v, line in zip(pdf[vertices_col], lines)]
                 q = pdf.copy()
                 q[vertices_col] = pd.Series(out, index=pdf.index,
                                             dtype=object)

@@ -100,7 +100,8 @@ def polygonize_tiled(
             ix |= ((morton >> (2 * b)) & 1) << b
             iy |= ((morton >> (2 * b + 1)) & 1) << b
         x0, y0 = ix * size, iy * size
-        faces = assign_holes(polygonize_vertex_arrays(list(pdf["vertices"])))
+        faces = assign_holes(polygonize_vertex_arrays(
+            pdf[vertices], f"polygonize_tiled {vertices}"))
         rows = []
         for f, holes in faces:
             # ownership: canonical shell vertex must lie in THIS tile
@@ -113,8 +114,8 @@ def polygonize_tiled(
             area -= sum(GK.polygon_area(h) for h in holes)  # shapely parity
             rows.append(
                 {"face_id": face_checksum(f), "tile": tile,
-                 "vertices": [[float(a), float(b)] for a, b in f],
-                 "holes": [[float(c) for c in h.ravel()] for h in holes],
+                 "vertices": f.tolist(),
+                 "holes": [h.ravel().tolist() for h in holes],
                  "area": float(area)}
             )
         return pd.DataFrame(rows, columns=["face_id", "tile", "vertices", "holes", "area"])
@@ -289,8 +290,8 @@ def mb_v201_deadend_within(arcs: DataFrame, faces: DataFrame,
                 pdf[id_col], pdf[vertices], pdf["poly_id"],
                 pdf["_fverts"], pdf["_fholes"],
             ):
-                line = np.asarray([list(p) for p in vs], dtype=np.float64)
-                shell = np.asarray([list(p) for p in fv], dtype=np.float64)
+                line = GK.vertex_array(vs, f"mb_v201_deadend_within {vertices}")
+                shell = GK.vertex_array(fv, "mb_v201_deadend_within faces.vertices")
                 holes = [np.asarray(list(h), dtype=np.float64).reshape(-1, 2)
                          for h in fh]
                 if GK.polyline_within_polygon(line, shell, holes):

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,7 +41,7 @@ def split_lines_at_points(lines: DataFrame, cuts: DataFrame,
         for pdf in it:
             ids, idxs, verts, lens = [], [], [], []
             for lid, vs, cs in zip(pdf[id_col], pdf[vertices], pdf["_cuts"]):
-                line = np.asarray([list(p) for p in vs], dtype=np.float64)
+                line = GK.vertex_array(vs, f"split_lines_at_points {vertices}")
                 if cs is None or (hasattr(cs, "__len__") and len(cs) == 0):
                     pieces = [line]
                 else:
@@ -51,7 +50,7 @@ def split_lines_at_points(lines: DataFrame, cuts: DataFrame,
                 for i, p in enumerate(pieces):
                     ids.append(lid)
                     idxs.append(i)
-                    verts.append([[float(a), float(b)] for a, b in p])
+                    verts.append(p.tolist())
                     lens.append(float(GK.cum_lengths(p)[-1]))
             yield pd.DataFrame(
                 {"line_id": ids, "piece_idx": idxs, "vertices": verts, "length": lens}

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -121,7 +120,7 @@ def suggested_snapping(arcs: DataFrame, radius: float = SUGGEST_RADIUS,
         for pdf in it:
             rows = []
             for fx, fy, vs in zip(pdf["from_x"], pdf["from_y"], pdf[vertices]):
-                line = np.asarray([list(p) for p in vs], dtype=np.float64)
+                line = GK.vertex_array(vs, f"suggested_snapping {vertices}")
                 m = GK.line_locate(line, float(fx), float(fy))
                 to = GK.line_interpolate(line, m)
                 rows.append(("edge", float(fx), float(fy), float(to[0]), float(to[1]), 0))

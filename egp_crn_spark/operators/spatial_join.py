@@ -58,14 +58,24 @@ def rect_intersects_join(
     a: DataFrame,
     b: DataFrame,
     res: int,
-    broadcast_b: bool = False,
+    b_hint: str | None = None,
     salt_hot: tuple[int, int] | None = None,
-    shuffle_hash_b: bool = False,
 ) -> DataFrame:
     """All (a, b) pairs whose axis-aligned rects intersect (touch counts).
 
     ``a`` columns: a_id, axmin, aymin, axmax, aymax (same for b with b_).
     Output adds ``overlap_area``. One row per pair (reference-point dedup).
+
+    ``b_hint`` is a join strategy hint for the b-side cell cover, in
+    ``guard.join_hint``'s vocabulary: ``"broadcast"`` for a dimension
+    table, or ``"shuffle_hash"``, which skips BOTH sort passes of the
+    default sort-merge join — measured 1.3x on the 2M-arc pair-candidates
+    self-join, where the sorts were ~1/3 of the wall. Shuffle-hash is
+    safe there because the per-partition build side is one cell range
+    of cover rows (bounded by shuffle-partition sizing, and AQE's
+    skew-join optimization also splits skewed SHJ partitions); callers
+    with giant unsalted hot cells should prefer the default
+    spill-friendly SMJ (``None``).
 
     ``salt_hot=(threshold, n_salt)``: explicit skew handling for dense
     'urban' cells (BASELINE.json north_star). Cells measured hotter than
@@ -83,18 +93,8 @@ def rect_intersects_join(
     cell hot only on the b-side is not salted."""
     ac = _rect_cover_cells(a, "a", res)
     bc = _rect_cover_cells(b, "b", res)
-    if broadcast_b:
-        bc = F.broadcast(bc)
-    elif shuffle_hash_b:
-        # SHUFFLE_HASH on the b-side skips BOTH sort passes of the
-        # default sort-merge join — measured 1.3x on the 2M-arc pair-
-        # candidates self-join, where the sorts were ~1/3 of the wall.
-        # Safe here because the per-partition build side is one cell
-        # range of cover rows (bounded by shuffle-partition sizing, and
-        # AQE's skew-join optimization also splits skewed SHJ
-        # partitions); callers with giant unsalted hot cells should
-        # prefer the default spill-friendly SMJ.
-        bc = bc.hint("shuffle_hash")
+    if b_hint is not None:
+        bc = bc.hint(b_hint)
     if salt_hot is not None:
         threshold, n_salt = salt_hot
         from .skew import hot_keys
@@ -398,7 +398,7 @@ def polygon_cover_cells(polys: DataFrame, res: int, convex: bool = False) -> Dat
         for pdf in it:
             ids, cs, inter = [], [], []
             for pid, vs in zip(pdf["poly_id"], pdf["vertices"]):
-                arr = np.asarray([list(p) for p in vs], dtype=np.float64)
+                arr = GK.vertex_array(vs, "polygon_cover_cells polys.vertices")
                 xmin, ymin = arr[:, 0].min(), arr[:, 1].min()
                 xmax, ymax = arr[:, 0].max(), arr[:, 1].max()
                 ix0 = int(np.clip(np.floor(xmin / size), 0, n - 1))
@@ -450,7 +450,7 @@ def pip_refine_udf(polys: DataFrame):
                             MAX_BROADCAST_POLYS,
                             "the pip_refine_udf polygon set (MAX_BROADCAST_POLYS)")
     polys_local: dict[int, np.ndarray] = {
-        int(pid): np.asarray([list(p) for p in verts], dtype=np.float64)
+        int(pid): GK.vertex_array(verts, "pip_refine_udf polys.vertices")
         for pid, verts in zip(ppdf["poly_id"], ppdf["vertices"])}
     # group polygons by vertex count so the kernel vectorizes across ALL
     # candidate rows of a batch (one gather-indexed ray-cast pass per edge)

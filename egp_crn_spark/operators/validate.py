@@ -43,9 +43,7 @@ def v101_simple(arcs: DataFrame, id_col: str = "segment_id",
     @F.pandas_udf("boolean")
     def _simple(vs: pd.Series) -> pd.Series:
         return pd.Series(
-            [GK.polyline_is_simple(np.asarray([list(p) for p in v], dtype=np.float64))
-             for v in vs]
-        )
+            [GK.polyline_is_simple(GK.vertex_array(v, f"v101_simple {vertices}")) for v in vs])
 
     v = F.col(vertices)
     may_violate = (F.size(v) > 2) | (F.element_at(v, 1) == F.element_at(v, 2))
@@ -123,8 +121,8 @@ def _arc_candidate_pairs(arcs: DataFrame, res: int, id_col: str, vertices: str,
         ("axmax", "bxmax"), ("aymax", "bymax"),
     ] + ([("ack", "bck")] if with_checksum else [])
     other = slim.select(*[F.col(a).alias(b) for a, b in renames])
-    pairs = rect_intersects_join(slim, other, res=res, salt_hot=salt_hot,
-                                 shuffle_hash_b=True)
+    pairs = rect_intersects_join(slim, other, res=res, b_hint="shuffle_hash",
+                                 salt_hot=salt_hot)
     return pairs.filter(F.col("a_id") < F.col("b_id"))
 
 
@@ -202,6 +200,8 @@ def _refine_pairs(cand: DataFrame, arcs: DataFrame, kernel,
               "b_id", "left")
     )
 
+    what = f"{kernel.__name__} {vertices}"
+
     def refine(it):
         for pdf in it:
             if len(pdf) == 0:
@@ -219,11 +219,10 @@ def _refine_pairs(cand: DataFrame, arcs: DataFrame, kernel,
                     slow["ax1"], slow["ay1"], slow["ax2"], slow["ay2"],
                     slow["bx1"], slow["by1"], slow["bx2"], slow["by2"],
                     slow["averts"], slow["bverts"]):
-                a = (np.asarray([list(p) for p in av], dtype=np.float64)
-                     if av is not None
+                # a null array is a single segment: rebuilt from its ends
+                a = (GK.vertex_array(av, what) if av is not None
                      else np.array([[ax1, ay1], [ax2, ay2]], dtype=np.float64))
-                b = (np.asarray([list(p) for p in bv], dtype=np.float64)
-                     if bv is not None
+                b = (GK.vertex_array(bv, what) if bv is not None
                      else np.array([[bx1, by1], [bx2, by2]], dtype=np.float64))
                 if kernel(a, b):
                     hits_a.append(aid)

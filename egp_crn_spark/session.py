@@ -11,7 +11,7 @@ import hashlib
 import os
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .config import env_cpus
 
@@ -44,6 +44,31 @@ def package_zip() -> str:
                 z.write(p, rel)
         os.replace(tmp, zpath)
     return zpath
+
+
+_SHIPPED: set[int] = set()
+
+
+def ensure_shipped(spark: SparkSession) -> None:
+    """Workers resolve egp_crn_spark only if the package is shipped (or
+    cwd happens to be the repo); ship once per session so the driver-
+    contract queries run under any driver harness, not only sessions
+    from get_session."""
+    key = id(spark)
+    if key in _SHIPPED:
+        return
+    try:
+        spark.sparkContext.addPyFile(package_zip())
+    except Exception:
+        pass  # already on the workers' path
+    _SHIPPED.add(key)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Driver-contract input table ``{sf_dir}/{name}.parquet``, read after
+    the package is shipped to the workers."""
+    ensure_shipped(spark)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def get_session(

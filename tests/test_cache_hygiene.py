@@ -55,7 +55,7 @@ def test_composition_leaves_zero_cached_blocks(spark):
         ngd = spark.createDataFrame(pd.DataFrame(
             {"ngd_id": [1], "xmin": [-1e5], "ymin": [-1e5],
              "xmax": [1e5], "ymax": [1e5]}))
-        pairs = CF.conflate_pairs_rect(crn, ngd, res=6, broadcast_ngd=True)
+        pairs = CF.conflate_pairs_rect(crn, ngd, res=6)
         _, _, metrics = CF.classify_conflation(
             pairs, crn.select("crn_id"), ngd.select("ngd_id"))
         assert metrics.count() == 1

@@ -76,7 +76,7 @@ def _bruteforce_pairs(crn, ngd):
 def test_conflate_rect_flagship(spark, rect_inputs):
     crn, ngd = rect_inputs
     pairs = CF.conflate_pairs_rect(
-        spark.createDataFrame(crn), spark.createDataFrame(ngd), res=5, broadcast_ngd=True
+        spark.createDataFrame(crn), spark.createDataFrame(ngd), res=5
     )
     crn_out, ngd_out, metrics = CF.classify_conflation(
         pairs,

@@ -79,7 +79,7 @@ def test_full_pipeline(spark, network):
     ngd_rects = spark.createDataFrame(pd.DataFrame(
         {"ngd_id": [1], "xmin": [0.0], "ymin": [0.0], "xmax": [2000.0], "ymax": [2000.0]}
     ))
-    pairs = CF.conflate_pairs_rect(crn_rects, ngd_rects, res=6, broadcast_ngd=True)
+    pairs = CF.conflate_pairs_rect(crn_rects, ngd_rects, res=6)
     crn_out, ngd_out, metrics = CF.classify_conflation(
         pairs, crn_rects.select("crn_id"), ngd_rects.select("ngd_id"))
     assert crn_out.filter("valid").count() == 4  # every face fully inside

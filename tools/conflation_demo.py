@@ -67,7 +67,7 @@ def main() -> None:
     exp_invalid_ngd = 0
 
     t0 = time.perf_counter()
-    pairs = conflate_pairs_rect(crn, ngd, res=9, broadcast_ngd=True)
+    pairs = conflate_pairs_rect(crn, ngd, res=9)
     crn_out, ngd_out, metrics = classify_conflation(
         pairs, crn.select("crn_id"), ngd.select("ngd_id"))
     m = metrics.first()

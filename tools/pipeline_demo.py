@@ -189,7 +189,7 @@ def main() -> None:
     )
 
     def conflate():
-        pairs = conflate_pairs_rect(bb, blocks, res=8, broadcast_ngd=True)
+        pairs = conflate_pairs_rect(bb, blocks, res=8)
         _, _, metrics = classify_conflation(pairs, bb.select("crn_id"),
                                             blocks.select("ngd_id"))
         return metrics.first()

@@ -46,7 +46,9 @@ def audit(name, df, wants, forbids, notes):
     for label, pat in forbids:
         hit = re.search(pat, plan) is not None
         results.append((label, "**PRESENT**" if hit else "absent (good)", not hit))
-    n_python = len(re.findall(r"ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas", plan))
+    n_python = len(re.findall(
+        r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas",
+        plan))
     return {"name": name, "results": results, "n_python_ops": n_python,
             "notes": notes, "ok": all(r[2] for r in results)}
 
@@ -284,7 +286,8 @@ def main() -> None:
                 r"PushedFilters: \[.*GreaterThanOrEqual\(x"),
                ("column-pruned scan", r"ReadSchema: [^\n]*pid")],
         forbids=[("any exchange in a pure read", r"Exchange"),
-                 ("any Python stage", r"ArrowEvalPython|BatchEvalPython|MapInPandas")],
+                 ("any Python stage",
+                  r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow")],
         notes=f"Manifest stats pruned the file list to {n_planned}/16 "
               "BEFORE plan time (metadata-only); the same predicate "
               "then pushes into the parquet scan as the residual — two "
@@ -336,13 +339,14 @@ def main() -> None:
     audits.append(audit(
         "vector tiles (simplify -> per-cell clip)",
         vector_tiles(simplify_lines(vt_arcs, 2.0), res=6),
-        wants=[("Arrow-batched kernels", r"MapInPandas")],
+        wants=[("DP simplify stage", r"MapInPandas"),
+               ("per-cell clip stage", r"MapInArrow")],
         forbids=[("any exchange", r"Exchange"),
                  ("any join", r"Join"),
                  ("per-row Python UDF", r"BatchEvalPython")],
         notes="The whole vector-tile pipeline is map-only: DP "
-              "generalization and per-segment cell clip run as chained "
-              "mapInPandas stages over the same scan — zero shuffles, "
+              "generalization (mapInPandas) and per-segment cell clip "
+              "(mapInArrow) run as chained stages over the same scan — zero shuffles, "
               "zero joins, so it scales with input splits alone.",
     ))
 
