@@ -24,6 +24,7 @@ from .config import EXTENT, OCCUPATION_THRESHOLD
 from .functions import cells as C
 from .functions.georef import key_x, key_x_sql, key_y, key_y_sql
 from .operators import conflate as CF
+from .operators import nodes as N
 from .operators import spatial_join as SJ
 from .session import read_table
 
@@ -287,20 +288,25 @@ _EDGE_SQL = f"""
 """
 
 
-def _edges(spark, sf_dir):
-    li = read_table(spark, sf_dir, "lineitem")
+def _edges(li: DataFrame) -> DataFrame:
+    """(n1, n2) endpoints of the derived arc graph, one arc per lineitem."""
     return li.select(
         (F.col("l_orderkey") * 2654435761 % _NODE_MOD).alias("n1"),
         ((F.col("l_orderkey") * 2654435761 + F.col("l_linenumber") * 2246822519) % _NODE_MOD).alias("n2"),
     )
 
 
-def q_node_degree(spark, sf_dir):
-    e = _edges(spark, sf_dir)
+def _degrees(li: DataFrame) -> DataFrame:
+    """(node_id, degree): endpoint-incidence count of ``_edges(li)``."""
+    e = _edges(li)
     nodes = e.select(F.col("n1").alias("node_id")).unionAll(
         e.select(F.col("n2").alias("node_id"))
     )
-    return nodes.groupBy("node_id").agg(F.count("*").alias("degree")).select(
+    return nodes.groupBy("node_id").agg(F.count("*").alias("degree"))
+
+
+def q_node_degree(spark, sf_dir):
+    return _degrees(read_table(spark, sf_dir, "lineitem")).select(
         "node_id",
         "degree",
         (F.col("degree") >= 4).alias("is_crossing"),
@@ -376,29 +382,16 @@ SQL_DELTA_ORDERS = """
 
 def q_crossings_delta(spark, sf_dir):
     """gen_crossings.py:104-122 — outer-join old vs new crossings, classify
-    Additions / Deletions / Modifications."""
-    e_new = _edges(spark, sf_dir)
-    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
-    e_old = li.select(
-        (F.col("l_orderkey") * 2654435761 % _NODE_MOD).alias("n1"),
-        ((F.col("l_orderkey") * 2654435761 + F.col("l_linenumber") * 2246822519) % _NODE_MOD).alias("n2"),
-    )
+    Additions / Deletions / Modifications (nodes.crossings_delta)."""
+    li = read_table(spark, sf_dir, "lineitem")
 
-    def degrees(e):
-        nodes = e.select(F.col("n1").alias("node_id")).unionAll(
-            e.select(F.col("n2").alias("node_id"))
-        )
-        return nodes.groupBy("node_id").agg(F.count("*").alias("degree"))
+    def counts(df):
+        return _degrees(df).select(F.col("node_id").alias("node"),
+                                   F.col("degree").alias("count"))
 
-    new_d = degrees(e_new).withColumnRenamed("degree", "new_degree")
-    old_d = degrees(e_old).withColumnRenamed("degree", "old_degree")
-    j = new_d.join(old_d, "node_id", "full_outer")
-    status = (
-        F.when(F.col("old_degree").isNull(), "Additions")
-        .when(F.col("new_degree").isNull(), "Deletions")
-        .when(F.col("new_degree") != F.col("old_degree"), "Modifications")
-    )
-    return j.select("node_id", status.alias("status")).filter(F.col("status").isNotNull())
+    delta = N.crossings_delta(counts(li),
+                              counts(li.filter(F.col("l_linenumber") <= 3)))
+    return delta.select(F.col("node").alias("node_id"), "status")
 
 
 SQL_CROSSINGS_DELTA = f"""

@@ -463,7 +463,7 @@ def q_simhash_dup(spark, sf_dir):
 
 
 def _simhash_sql() -> str:
-    """DuckDB twin of the md5-mode simhash64 + banded candidate join:
+    """DuckDB twin of the md5-mode simhash_signatures + banded candidate join:
     bit b of a token's 64-bit hash = bit (b%4) of hex nibble (16 - b//4)
     of md5('sh|' || token)."""
     nib = "strpos('0123456789abcdef', substr(md5('sh|' || tk), 16 - (b // 4), 1)) - 1"

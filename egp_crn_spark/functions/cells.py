@@ -5,7 +5,7 @@ This is the engine's replacement for the reference's per-query STRtree
 join-acceleration structure there) AND for its manual ~140-region tiling
 (/root/reference/src/config.yaml:23-160): a quadtree over the planar domain
 [0, EXTENT)^2 with resolutions 0..16 (2**r cells per axis, H3/S2-style
-parent/child/compact/k-ring semantics).
+parent/child/k-ring semantics).
 
 Everything here is JVM-side Catalyst expression — cell encode costs ~10
 bit ops per row inside whole-stage codegen, joins are on plain BIGINTs.
@@ -43,8 +43,6 @@ backend must pass). To swap in real H3 on a cluster with the lib:
                             (hex edge ≥ incircle radius: k-ring coverage
                             proofs carry over with k bumped by 1)
   res_for_radius(radius)  → finest res whose cell incircle ≥ radius
-  compact/uncompact       → h3.compact_cells / h3.uncompact_cells
-                            (operators/cellsets.py)
 
 The coverage invariant every operator relies on (and the conformance
 test asserts): a point within ``radius`` of another point/segment shares
@@ -165,14 +163,6 @@ def kring_cells(ix: Column, iy: Column, res: int, k: int = 1) -> Column:
     ]))
 
 
-def kring_of_xy(x: Column, y: Column, res: int, k: int = 1) -> Column:
-    """k-ring of the cell containing (x, y) — the backend-agnostic POINT
-    form of kring_cells (the h3 twin is grid_disk(latlng_to_cell(...));
-    ix/iy are square-backend internals that h3 has no analogue of)."""
-    ix, iy = xy_to_ixy(x, y, res)
-    return kring_cells(ix, iy, res, k)
-
-
 # ---------------------------------------------------------------- SQL emitters
 def _spread_bits_sql(e: str) -> str:
     e = f"({e} & 65535)"
@@ -228,39 +218,3 @@ def res_for_radius(radius: float, max_res: int = MAX_RES) -> int:
     while res + 1 <= max_res and cell_size(res + 1) >= radius:
         res += 1
     return res
-
-
-def cells_covering_bbox(
-    xmin: float, ymin: float, xmax: float, ymax: float, res: int
-) -> np.ndarray:
-    """All cell ids at ``res`` whose square intersects the bbox (numpy,
-    used by polygon polyfill inside pandas UDFs)."""
-    n = 1 << res
-    scale = n / EXTENT
-    ix0 = int(np.clip(np.floor(xmin * scale), 0, n - 1))
-    ix1 = int(np.clip(np.floor(xmax * scale), 0, n - 1))
-    iy0 = int(np.clip(np.floor(ymin * scale), 0, n - 1))
-    iy1 = int(np.clip(np.floor(ymax * scale), 0, n - 1))
-    ixs, iys = np.meshgrid(
-        np.arange(ix0, ix1 + 1, dtype=np.int64),
-        np.arange(iy0, iy1 + 1, dtype=np.int64),
-        indexing="ij",
-    )
-    return cell_encode_np(ixs.ravel(), iys.ravel(), res)
-
-
-def compress_bits_np(a: np.ndarray) -> np.ndarray:
-    """Inverse of spread_bits_np: gather every second bit back into the
-    low 16 — the Morton decode half (classic pair-merge chain)."""
-    a = a.astype(np.int64) & 0x55555555
-    a = (a | (a >> 1)) & 0x33333333
-    a = (a | (a >> 2)) & 0x0F0F0F0F
-    a = (a | (a >> 4)) & 0x00FF00FF
-    a = (a | (a >> 8)) & 0x0000FFFF
-    return a
-
-
-def cell_to_ixy_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Morton decode: cell ids → integer cell coordinates (ix, iy)."""
-    morton = cell.astype(np.int64) & ((1 << RES_SHIFT) - 1)
-    return compress_bits_np(morton), compress_bits_np(morton >> 1)

@@ -2,7 +2,7 @@
 
 This is the production twin promised by the cells.py backend seam: the
 engine's operators reach cell geometry only through the point API
-(cell_of_xy / parent_cell / kring_of_xy / res_for_radius / cell_size),
+(cell_of_xy / parent_cell / res_for_radius / cell_size),
 and tests/test_cells_conformance.py parametrizes the backend-agnostic
 axioms over this module whenever ``import h3`` succeeds (it is skipped,
 not failed, in environments without the lib — the sandbox has none).
@@ -34,7 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import LongType
 
 import h3 as _h3  # the import gate: ImportError here = backend unavailable
 
@@ -200,19 +200,3 @@ def parent_cell(cell: Column, res: int, parent_res: int) -> Column:
 
     return par(cell)
 
-
-def kring_of_xy(x: Column, y: Column, res: int, k: int = 1) -> Column:
-    """k-ring of the cell containing (x, y) — h3.grid_disk; includes the
-    own cell. No domain clamping: H3 has no grid edge to clamp at."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def ring(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        lat, lng = _to_latlng(xs.to_numpy(), ys.to_numpy())
-        return pd.Series(
-            [
-                [int(c) for c in _grid_disk(_latlng_to_cell(la, ln, res), k)]
-                for la, ln in zip(lat, lng)
-            ]
-        )
-
-    return ring(x, y)

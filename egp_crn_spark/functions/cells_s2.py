@@ -19,7 +19,7 @@ cells (level 30) end in 1. Parent/child/range arithmetic is pure bit
 math on the id, exactly as published.
 
 Backend surface = the cells.py seam contract (cell_of_xy / parent_cell /
-kring_of_xy / res_for_radius / cell_size / MAX_RES), with the same
+res_for_radius / cell_size / MAX_RES), with the same
 planar-patch mapping as cells_h3: [0, EXTENT)^2 is a ~0.5-degree
 equirectangular patch centered at EGP_S2_PATCH (default equator). Encode
 is one fully-vectorized numpy pass per Arrow batch — no per-row Python,
@@ -28,15 +28,14 @@ unlike a library-backed backend.
 The coverage bound (res_for_radius) uses S2's published minimum-width
 metric for the quadratic projection: min cell width at level l is
 ``(2*sqrt(2)/3) * 2^-l`` radians — a true global lower bound over the
-whole sphere, so the k-ring(1) coverage proof needs no per-patch width
+whole sphere, so a k-ring(1) coverage proof needs no per-patch width
 measurement at all (tighter than cells_h3's sampled bound).
 
 Correctness evidence (tests/test_cells_s2.py): Hilbert-curve continuity
 (consecutive leaf ids are 4-neighbours in (face,i,j) — any lookup-table
 error breaks this), encode/decode inverse round-trips over the whole
-sphere, parent/child/range-containment axioms, edge-neighbour symmetry
-including cross-face wraps, and the cells.py conformance battery via the
-CB fixture (tests/test_cells_conformance.py).
+sphere, parent/child/range-containment axioms, and the cells.py
+conformance battery via the CB fixture (tests/test_cells_conformance.py).
 """
 
 from __future__ import annotations
@@ -48,7 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import LongType
 
 from ..config import EXTENT
 
@@ -102,22 +101,6 @@ def _uv_to_st(u: np.ndarray) -> np.ndarray:
     return np.where(u >= 0.0, a, 1.0 - a)
 
 
-def _face_uv_to_xyz(face: np.ndarray, u: np.ndarray, v: np.ndarray):
-    """Published cube-face charts: face 0..5 = +x +y +z -x -y -z."""
-    one = np.ones_like(u)
-    charts = (
-        (one, u, v), (-u, one, v), (-u, -v, one),
-        (-one, -v, -u), (v, -one, -u), (v, u, -one),
-    )
-    x = np.empty_like(u)
-    y = np.empty_like(u)
-    z = np.empty_like(u)
-    for f, (cx, cy, cz) in enumerate(charts):
-        m = face == f
-        x[m], y[m], z[m] = cx[m], cy[m], cz[m]
-    return x, y, z
-
-
 def _xyz_to_face_uv(x: np.ndarray, y: np.ndarray, z: np.ndarray):
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
     axis = np.where(az >= np.maximum(ax, ay), 2,
@@ -167,26 +150,6 @@ def _from_face_ij(face: np.ndarray, i: np.ndarray, j: np.ndarray) -> np.ndarray:
     return (n << _u64(1)) | _u64(1)
 
 
-def _to_face_ij(ids: np.ndarray):
-    """(face, i, j) of the leaf position encoded in ``ids`` (uint64;
-    for non-leaf ids this is the published leaf-bit decode used by the
-    neighbour machinery)."""
-    ids = ids.astype(np.uint64)
-    face = (ids >> _u64(_POS_BITS)).astype(np.int64)
-    bits = (face.astype(np.uint64)) & _u64(_SWAP)
-    i = np.zeros(len(ids), dtype=np.uint64)
-    j = np.zeros(len(ids), dtype=np.uint64)
-    for k in range(7, -1, -1):
-        nbits = 2 if k == 7 else 4
-        bits += ((ids >> _u64(k * 8 + 1)) & _u64((1 << (2 * nbits)) - 1)) \
-            << _u64(2)
-        bits = _LOOKUP_IJ[bits]
-        i += (bits >> _u64(6)) << _u64(4 * k)
-        j += ((bits >> _u64(2)) & _u64(15)) << _u64(4 * k)
-        bits &= _u64(_SWAP | _INVERT)
-    return face, i.astype(np.int64), j.astype(np.int64)
-
-
 def _lsb_for_level(level: int) -> np.uint64:
     return _u64(1 << (2 * (MAX_LEVEL - level)))
 
@@ -195,65 +158,6 @@ def _parent_at(ids: np.ndarray, level: int) -> np.ndarray:
     """Ancestor at ``level`` — pure bit math on uint64 ids."""
     new_lsb = _lsb_for_level(level)
     return (ids.astype(np.uint64) & ~(new_lsb - _u64(1))) | new_lsb
-
-
-def _level_of(ids: np.ndarray) -> np.ndarray:
-    u = ids.astype(np.uint64)
-    lsb = u & (~u + _u64(1))
-    tz = np.round(np.log2(lsb.astype(np.float64))).astype(np.int64)
-    return MAX_LEVEL - tz // 2
-
-
-def _from_face_ij_wrap(face: np.ndarray, i: np.ndarray,
-                       j: np.ndarray) -> np.ndarray:
-    """Leaf id for possibly out-of-range leaf ij — the published wrap:
-    clamp to one leaf beyond the face, map through the LINEAR uv
-    projection to xyz (the extended chart), re-project onto the correct
-    face, and encode there. Exact at leaf level (the half-leaf centering
-    keeps every in-range transverse coordinate in its cell)."""
-    i = np.clip(i, -1, _MAX_SIZE)
-    j = np.clip(j, -1, _MAX_SIZE)
-    scale = 1.0 / _MAX_SIZE
-    limit = 1.0 + np.finfo(np.float64).eps
-    u = np.clip(scale * (2.0 * (i - _MAX_SIZE // 2) + 1.0), -limit, limit)
-    v = np.clip(scale * (2.0 * (j - _MAX_SIZE // 2) + 1.0), -limit, limit)
-    x, y, z = _face_uv_to_xyz(face.astype(np.int64), u, v)
-    nf, nu, nv = _xyz_to_face_uv(x, y, z)
-    return _from_face_ij(nf,
-                         _st_to_ij(0.5 * (nu + 1.0)),
-                         _st_to_ij(0.5 * (nv + 1.0)))
-
-
-def _from_face_ij_same(face, i, j, same: np.ndarray) -> np.ndarray:
-    out = np.empty(len(face), dtype=np.uint64)
-    if same.any():
-        out[same] = _from_face_ij(face[same], i[same], j[same])
-    rest = ~same
-    if rest.any():
-        out[rest] = _from_face_ij_wrap(face[rest], i[rest], j[rest])
-    return out
-
-
-def _all_neighbors(ids: np.ndarray, level: int) -> np.ndarray:
-    """(n, 8) uint64 array of the 8-neighbourhood of each level-``level``
-    cell (published AppendAllNeighbors with nbr_level = level). At cube
-    corners a diagonal neighbour does not exist and the wrap returns a
-    duplicate of an edge neighbour — callers dedupe per row."""
-    face, i, j = _to_face_ij(ids)
-    size = 1 << (MAX_LEVEL - level)
-    i0 = i & -size
-    j0 = j & -size
-    cols = []
-    for di in (-size, 0, size):
-        for dj in (-size, 0, size):
-            if di == 0 and dj == 0:
-                continue
-            ni, nj = i0 + di, j0 + dj
-            same = ((ni >= 0) & (ni < _MAX_SIZE)
-                    & (nj >= 0) & (nj < _MAX_SIZE))
-            cols.append(_parent_at(
-                _from_face_ij_same(face, ni, nj, same), level))
-    return np.stack(cols, axis=1)
 
 
 # ---------------------------------------------------------- patch mapping
@@ -328,24 +232,3 @@ def parent_cell(cell: Column, res: int, parent_res: int) -> Column:
         return pd.Series(_parent_at(ids, parent_res).view(np.int64))
 
     return par(cell)
-
-
-def kring_of_xy(x: Column, y: Column, res: int, k: int = 1) -> Column:
-    """k-ring of the cell containing (x, y): own cell + iterated
-    8-neighbourhoods, deduped per row. k=1 (the operators' case) is one
-    vectorized _all_neighbors pass over the batch."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def ring(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        own = cell_of_xy_np(xs.to_numpy(), ys.to_numpy(), res) \
-            .view(np.uint64)
-        cells = own.reshape(-1, 1)
-        for _ in range(k):
-            flat = cells.ravel()
-            nbrs = _all_neighbors(flat, res).reshape(cells.shape[0], -1)
-            cells = np.concatenate([cells, nbrs], axis=1)
-        out = [list(np.unique(row.astype(np.uint64)).view(np.int64))
-               for row in cells]
-        return pd.Series(out)
-
-    return ring(x, y)

@@ -12,7 +12,7 @@ re-expressed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import COORD_DECIMALS
@@ -30,6 +30,23 @@ def px(p: Column) -> Column:
 
 def py(p: Column) -> Column:
     return F.element_at(p, 2)
+
+
+def require_xy(df: DataFrame, vertices: str, what: str) -> DataFrame:
+    """``df`` with its ``vertices`` column guarded: a row with a vertex
+    that is not exactly ``[x, y]`` raises ``"<what> <vertices>: ..."``.
+
+    Column prefilters read every vertex's y with ANSI ``element_at``
+    (``bbox``, ``py``, node keys on endpoints), which on an ``[x]``
+    vertex fails with INVALID_ARRAY_INDEX_IN_ELEMENT_AT and no column
+    name. Operators whose prefilter runs before any kernel apply this
+    first; null geometries and null vertices pass through to the
+    kernel's ``geomkernel.vertex_array`` checks."""
+    v = F.col(vertices)
+    return df.withColumn(vertices, F.when(
+        F.exists(v, lambda p: F.size(p) != 2),
+        F.raise_error(F.lit(f"{what} {vertices}: a vertex is not [x, y]")),
+    ).otherwise(v))
 
 
 def start_point(vertices: Column) -> Column:

@@ -284,28 +284,6 @@ def polyline_within_polygon(line: np.ndarray, shell: np.ndarray,
     return True
 
 
-def segments_overlap(p1: np.ndarray, p2: np.ndarray,
-                     q1: np.ndarray, q2: np.ndarray) -> np.ndarray:
-    """Vectorized single-segment twin of polylines_overlap: collinear
-    with a positive-length shared section. Same EPS discipline."""
-    d = p2 - p1
-    # sqrt(dx*dx + dy*dy), NOT np.hypot: the pure-Column fast path
-    # (validate._seg_overlap_col) can only express the sqrt form, and
-    # hypot differs from it by an ulp on some inputs — same-operation-
-    # order parity between the two paths requires the same formula here.
-    L1 = np.sqrt(d[:, 0] * d[:, 0] + d[:, 1] * d[:, 1])
-    ok = L1 > EPS
-    c1 = d[:, 0] * (q1[:, 1] - p1[:, 1]) - d[:, 1] * (q1[:, 0] - p1[:, 0])
-    c2 = d[:, 0] * (q2[:, 1] - p1[:, 1]) - d[:, 1] * (q2[:, 0] - p1[:, 0])
-    col = (np.abs(c1) <= EPS * L1) & (np.abs(c2) <= EPS * L1)
-    L2 = np.where(L1 > 0, L1 * L1, 1.0)
-    t1 = ((q1 - p1) * d).sum(axis=1) / L2
-    t2 = ((q2 - p1) * d).sum(axis=1) / L2
-    lo = np.minimum(t1, t2)
-    hi = np.maximum(t1, t2)
-    return ok & col & (np.minimum(hi, 1.0) - np.maximum(lo, 0.0) > EPS)
-
-
 def polylines_overlap(a: np.ndarray, b: np.ndarray) -> bool:
     """shapely-`overlaps` semantics for polylines: they share a
     positive-length collinear section but neither equals the other.
@@ -315,8 +293,8 @@ def polylines_overlap(a: np.ndarray, b: np.ndarray) -> bool:
     for i in range(len(a) - 1):
         p1, p2 = a[i], a[i + 1]
         d1 = p2 - p1
-        # same sqrt form as segments_overlap / the Column fast path (see
-        # the parity note there) — hypot can differ by an ulp
+        # same sqrt form as the Column fast path
+        # (validate._seg_overlap_col) — hypot can differ by an ulp
         L1 = np.sqrt(d1[0] * d1[0] + d1[1] * d1[1])
         if L1 <= EPS:
             continue
@@ -411,17 +389,6 @@ def line_locate(line: np.ndarray, x: float, y: float) -> float:
     return float(cl[i] + t[i] * np.sqrt(ab2[i]))
 
 
-def point_to_polyline_distance(x: float, y: float, line: np.ndarray) -> float:
-    p = np.array([x, y])
-    a, b = line[:-1], line[1:]
-    ab = b - a
-    ab2 = (ab**2).sum(axis=1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.clip(((p - a) * ab).sum(axis=1) / np.where(ab2 == 0, 1, ab2), 0, 1)
-    proj = a + t[:, None] * ab
-    return float(np.sqrt(((proj - p) ** 2).sum(axis=1).min()))
-
-
 def split_line_at_distances(line: np.ndarray, dists: list[float]) -> list[np.ndarray]:
     """Split a polyline at sorted linear-reference distances — reference
     `split_lines` (helpers.py:408-440): cuts merged with vertices by
@@ -479,60 +446,3 @@ def simplify_dp(line: np.ndarray, tol: float) -> np.ndarray:
             stack.append((lo, split))
             stack.append((split, hi))
     return line[keep]
-
-
-def clip_polyline_to_box(line: np.ndarray, x0: float, y0: float,
-                         x1: float, y1: float) -> list[np.ndarray]:
-    """Clip a polyline to a closed axis-aligned box (Liang–Barsky per
-    segment, consecutive in-box runs stitched into pieces). Returns the
-    pieces in path order; boundary-crossing points are inserted exactly
-    (linear interpolation), zero-length pieces are dropped. Length is
-    conserved: the pieces of a plane-partitioning tile grid sum to the
-    original polyline length (the vector-tile invariant
-    tests/test_vectortiles.py pins)."""
-    pieces: list[np.ndarray] = []
-    cur: list[np.ndarray] = []
-
-    def flush():
-        nonlocal cur
-        if len(cur) >= 2:
-            arr = np.asarray(cur)
-            if float(np.abs(np.diff(arr, axis=0)).sum()) > 0.0:
-                pieces.append(arr)
-        cur = []
-
-    for a, b in zip(line[:-1], line[1:]):
-        d = b - a
-        t0, t1 = 0.0, 1.0
-        ok = True
-        for p, q in ((-d[0], a[0] - x0), (d[0], x1 - a[0]),
-                     (-d[1], a[1] - y0), (d[1], y1 - a[1])):
-            if p == 0.0:
-                if q < 0.0:
-                    ok = False
-                    break
-                continue
-            r = q / p
-            if p < 0.0:
-                if r > t1:
-                    ok = False
-                    break
-                t0 = max(t0, r)
-            else:
-                if r < t0:
-                    ok = False
-                    break
-                t1 = min(t1, r)
-        if not ok or t0 > t1:
-            flush()
-            continue
-        pa = a if t0 == 0.0 else a + t0 * d
-        pb = b if t1 == 1.0 else a + t1 * d
-        if t0 > 0.0 or not cur:
-            flush()
-            cur = [pa]
-        cur.append(pb)
-        if t1 < 1.0:
-            flush()
-    flush()
-    return pieces

@@ -101,17 +101,6 @@ def decode_image(data: bytes) -> np.ndarray:
     return np.clip(deq, 0, 255).astype(np.uint8)
 
 
-def image_meta(data: bytes) -> tuple[int, int, int, bool]:
-    """(w, h, channels, lossless) from the header without full decode."""
-    magic, w, h, c, _ = _HEADER.unpack(data[: _HEADER.size])
-    if magic not in (MAGIC_LOSSLESS, MAGIC_LOSSY):
-        if (data[:4] == _PNG_MAGIC or data[:2] == _JPEG_MAGIC) and HAS_PIL:
-            img = _PILImage.open(io.BytesIO(data))
-            return img.width, img.height, len(img.getbands()), data[:4] == _PNG_MAGIC
-        raise ValueError("unknown image container magic")
-    return w, h, c, magic == MAGIC_LOSSLESS
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB between two uint8 arrays."""
     mse = float(np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2))

@@ -198,11 +198,6 @@ def assign_holes(faces: list[np.ndarray]) -> list[tuple[np.ndarray, list[np.ndar
     return [(f, holes[i]) for i, f in enumerate(faces)]
 
 
-def polygonize_with_holes(segments) -> list[tuple[np.ndarray, list[np.ndarray]]]:
-    """polygonize_segments + hole assignment: [(shell, [hole rings])]."""
-    return assign_holes(polygonize_segments(segments))
-
-
 def face_checksum(face: np.ndarray, decimals: int = 5) -> str:
     """Rotation- and direction-insensitive checksum of a face ring (for
     cross-tile dedup of border faces)."""

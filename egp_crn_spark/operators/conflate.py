@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import OCCUPATION_THRESHOLD
+from ..functions import geomexpr as GX
 from ..functions import geomkernel as GK
 from .spatial_join import rect_intersects_join
 
@@ -78,8 +79,10 @@ def conflate_pairs_convex(crn_polys: DataFrame, ngd_polys: DataFrame, res: int) 
             F.array_max(xs).alias(f"{pre}xmax"), F.array_max(ys).alias(f"{pre}ymax"),
         )
 
-    a = with_bbox(crn_polys, "crn_id", "a")
-    b = with_bbox(ngd_polys, "ngd_id", "b")
+    a = with_bbox(GX.require_xy(crn_polys, "vertices",
+                                "conflate_pairs_convex crn_polys"), "crn_id", "a")
+    b = with_bbox(GX.require_xy(ngd_polys, "vertices",
+                                "conflate_pairs_convex ngd_polys"), "ngd_id", "b")
     cand = rect_intersects_join(a.withColumnRenamed("a_verts", "averts"),
                                 b.withColumnRenamed("b_verts", "bverts"), res=res)
 

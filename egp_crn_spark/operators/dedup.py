@@ -300,55 +300,20 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
 
 
 # ---------------------------------------------------------------- simhash
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over whitespace tokens — pure Column: per-token
-    xxhash64 bits vote ±1 per position; sign → bit. Bit positions are
-    unrolled statically (shift amounts must be Python ints). The md5
-    form a DuckDB oracle can reproduce is simhash_signatures(use_md5=True).
-
-    The token hash is hoisted into a transform() so it runs ONCE per
-    token — lambda bodies get no Catalyst subexpression elimination, so
-    inlining it in the per-bit expressions would cost 64 hash
-    evaluations per token."""
-    toks = F.transform(tokens(text), lambda t: F.xxhash64(t))
-    votes = F.aggregate(
-        toks,
-        F.array(*[F.lit(0)] * 64).cast("array<int>"),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[
-                F.when(F.shiftright(t, b).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1) for b in range(64)
-            ]),
-            lambda a, v: a + v,
-        ),
-    )
-    # OR of disjoint bit literals == sum; bit 63 is the sign bit of a long
-    terms = [
-        F.when(F.element_at(votes, b + 1) > 0,
-               F.lit(-(1 << 63) if b == 63 else (1 << b)).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        for b in range(64)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def simhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        use_md5: bool = False) -> DataFrame:
     """(id, sh): SimHash via EXPLODE + 64 flat vote sums.
 
-    Same shape as minhash_signatures and for the same reason: the
-    aggregate/zip_with formulation of simhash64() builds a giant nested
+    Same shape as minhash_signatures and for the same reason: an
+    aggregate/zip_with formulation (the per-row Column twin in
+    tests/twins.py) builds a giant nested
     higher-order expression that falls out of whole-stage codegen and
     evaluates interpreted (~10x slower at corpus scale). Exploding
     tokens to rows makes the hash one flat projection and the votes 64
     codegen-friendly sums; the groupBy(id) is one shuffle on the id.
     Documents with zero tokens get sh = 0 (all 64 votes tie) so
-    identical empty docs still pair at hamming 0 — parity with the
-    Column-expression simhash64()."""
+    identical empty docs still pair at hamming 0 — parity with that
+    Column-expression twin."""
     ex = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t"))
     if use_md5:
         # parse the 64-bit value as four 16-bit chunks (4 conv() calls

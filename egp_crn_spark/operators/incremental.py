@@ -83,25 +83,3 @@ def merge_aggregate_state(state: DataFrame, delta: DataFrame,
         .filter(F.col(_ROWS) != 0)
     )
     return merged
-
-
-def maintain_aggregate(table, keys: list[str],
-                       sums: dict[str, Column] | None = None,
-                       state: DataFrame | None = None,
-                       from_id: int | None = None,
-                       to_id: int | None = None) -> DataFrame:
-    """Advance a maintained aggregate of a SnapshotLogTable from
-    snapshot ``from_id`` (where ``state`` was computed) to ``to_id``
-    using only the changelog between them. With ``state=None`` the
-    state is initialized by a full scan of ``from_id`` first.
-
-    Invariant (pinned by tests/test_incremental.py over randomized
-    vintage sequences): the returned frame equals
-    ``snapshot_aggregate(table.read(to_id), keys, sums)`` exactly."""
-    if from_id is None or to_id is None:
-        raise ValueError("maintain_aggregate needs explicit from_id/to_id "
-                         "snapshot ids")
-    if state is None:
-        state = snapshot_aggregate(table.read(from_id), keys, sums)
-    delta = aggregate_delta(table.changelog(from_id, to_id), keys, sums)
-    return merge_aggregate_state(state, delta, keys, sums)

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = "cell_id long, row_count long, checksum string, batch_id long"
+LINEAGE_SCHEMA = "cell_id long, row_count long, checksum string"
 
 
 def partition_lineage(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
@@ -109,75 +109,12 @@ class CheckpointedRun:
             .parquet(self.data_dir)
         )
         (partition_lineage(result, self.cell_col)
-         .withColumn("batch_id", F.lit(-1).cast("long"))
          .write.mode("append").parquet(self.lineage_dir))
         result.unpersist()
-
-    def _append_data(self, result: DataFrame, batch_id: int) -> None:
-        """Data half of append_commit (factored so tests can simulate a
-        crash between the data write and the lineage append). The batch
-        writes into (cell_id, _batch_id) partitions with DYNAMIC
-        OVERWRITE: other batches' partitions are untouched, and a
-        REPLAY of this batch replaces its own half-written partitions
-        instead of appending next to them — the write is idempotent."""
-        (
-            result.withColumn("_batch_id", F.lit(int(batch_id)).cast("long"))
-            .repartition(self.cell_col)
-            .write.mode("overwrite")
-            .partitionBy(self.cell_col, "_batch_id")
-            .parquet(self.data_dir)
-        )
-
-    def append_commit(self, result: DataFrame, batch_id: int) -> None:
-        """APPEND-mode commit for continuous ingestion (one call per
-        micro-batch): the batch's rows land in (cell_id, _batch_id)
-        partitions and its per-partition lineage rows record
-        ``batch_id``. Gate replays on ``is_batch_committed`` (the
-        idempotent-foreachBatch pattern; streaming.ingest_stream wires
-        it). The two writes are still non-atomic, but a crash between
-        them is now harmless (ADVICE r5): the batch's data partitions
-        carry its _batch_id, so output()/verify() EXCLUDE them until the
-        lineage row lands, and the replay's dynamic partition overwrite
-        replaces the half-written files rather than duplicating them.
-        A cell's live content is the UNION of its committed appends, so
-        verify() matches such cells through the AGGREGATE of their
-        lineage rows (sum of counts, xor of checksums — the checksum is
-        xor-combined per row, hence mergeable across batches). Do not
-        mix commit() and append_commit() on one run: overwritten rows
-        would stay in the lineage and break the aggregate reading."""
-        result = result.cache()
-        self._append_data(result, batch_id)
-        (partition_lineage(result, self.cell_col)
-         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-         .write.mode("append").parquet(self.lineage_dir))
-        result.unpersist()
-
-    def committed_batches(self) -> set[int]:
-        """Batch ids with at least one recorded lineage row."""
-        lin = self.lineage()
-        if "batch_id" not in lin.columns:
-            return set()
-        return {r.batch_id for r in
-                lin.select("batch_id").distinct().collect()
-                if r.batch_id is not None and r.batch_id >= 0}
-
-    def is_batch_committed(self, batch_id: int) -> bool:
-        return int(batch_id) in self.committed_batches()
 
     def output(self) -> DataFrame:
-        """The run's live table. Append-mode layouts (data partitioned
-        by _batch_id) are filtered to COMMITTED batches — rows whose
-        batch crashed before its lineage append are invisible until the
-        replay re-lands them."""
-        df = self.spark.read.parquet(self.data_dir)
-        if "_batch_id" not in df.columns:
-            return df
-        committed = (self.lineage()
-                     .filter(F.col("batch_id") >= 0)
-                     .select(F.col("batch_id").alias("_batch_id"))
-                     .distinct())
-        return (df.join(F.broadcast(committed), "_batch_id", "left_semi")
-                .drop("_batch_id"))
+        """The run's committed table."""
+        return self.spark.read.parquet(self.data_dir)
 
     def verify(self) -> DataFrame:
         """Recompute per-partition lineage from the STORED output and
@@ -193,26 +130,8 @@ class CheckpointedRun:
             return self.spark.createDataFrame([], "cell_id long")
         actual = partition_lineage(self.output(), self.cell_col)
         recorded = self.lineage()
-        matched = recorded.join(
+        healthy = recorded.join(
             actual, ["cell_id", "row_count", "checksum"], "left_semi"
         ).select("cell_id").distinct()
-        # append-mode cells (ingestion): live content is the union of
-        # the cell's appends, so the AGGREGATE of its lineage rows must
-        # match — counts sum; checksums xor (the per-row xor-combine is
-        # mergeable across batches; xor the two 8-hex halves so the
-        # unsigned 64-bit value never touches a signed cast)
-        hi = F.conv(F.substring("checksum", 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring("checksum", 9, 8), 16, 10).cast("long")
-        def agg_ck(df):
-            return df.groupBy("cell_id").agg(
-                F.sum("row_count").alias("row_count"),
-                F.format_string(
-                    "%08x%08x", F.bit_xor(hi), F.bit_xor(lo)
-                ).alias("checksum"),
-            )
-        agg_matched = agg_ck(recorded).join(
-            agg_ck(actual), ["cell_id", "row_count", "checksum"], "left_semi"
-        ).select("cell_id").distinct()
-        healthy = matched.unionByName(agg_matched).distinct()
         return (recorded.select("cell_id").distinct()
                 .join(healthy, "cell_id", "left_anti"))

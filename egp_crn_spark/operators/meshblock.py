@@ -128,6 +128,7 @@ def polygonize_tiled(
 def polygonize_meshblock(arcs: DataFrame, tile_res: int = 4,
                          max_face_diameter: float | None = None) -> DataFrame:
     """Reference meshblock: polygonize(unary_union(non-deadend arcs))."""
+    arcs = GX.require_xy(arcs, "vertices", "polygonize_meshblock")
     return polygonize_tiled(meshblock_input(arcs), tile_res, max_face_diameter)
 
 
@@ -220,14 +221,14 @@ def validate_meshblock(arcs: DataFrame, restore: DataFrame,
     return out, faces, progress
 
 
-def _res_for_faces(faces: DataFrame, vertices: str = "vertices") -> int:
+def _res_for_faces(faces: DataFrame) -> int:
     """Prefilter resolution matched to face size: the finest res whose
     cell is >= the median face bbox extent. Cells much coarser than the
     faces turn the cover-cell equi-join into an all-pairs-per-cell
     explosion (candidates/deadend ~ (cell/face)²); cells much finer
     inflate the polyfill. One tiny percentile action on the bbox
     extents."""
-    bb = GX.bbox(F.col(vertices))
+    bb = GX.bbox(F.col("vertices"))
     ext = faces.select(
         F.greatest(bb["xmax"] - bb["xmin"], bb["ymax"] - bb["ymin"]).alias("d")
     )
@@ -255,8 +256,10 @@ def mb_v201_deadend_within(arcs: DataFrame, faces: DataFrame,
     sampling alone can miss an exit-and-reenter)."""
     from .spatial_join import polygon_cover_cells
 
+    arcs = GX.require_xy(arcs, vertices, "mb_v201_deadend_within arcs")
+    faces = GX.require_xy(faces, "vertices", "mb_v201_deadend_within faces")
     if res is None:
-        res = _res_for_faces(faces, vertices)
+        res = _res_for_faces(faces)
     dead_ids = N.deadends(arcs, id_col, vertices).select(id_col).distinct()
     dead = arcs.join(dead_ids, id_col, "left_semi").select(id_col, vertices)
 

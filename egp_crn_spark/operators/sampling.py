@@ -125,28 +125,6 @@ def hash_sample(df: DataFrame, fraction: float,
     return df.filter(key < thresh)
 
 
-def mix_sources(sources: dict[str, tuple[DataFrame, float]],
-                id_col: str = "doc_id", seed: int = 7,
-                source_col: str = "source") -> DataFrame:
-    """Weighted corpus mixture: each source DataFrame is hash-sampled
-    at its rate and tagged — the deterministic version of "train on
-    30% of A + 100% of B". Rates are KEEP FRACTIONS per source (not
-    relative output proportions; compose with corpus sizes for that).
-    Each source's hash stream is decorrelated by salting the seed with
-    the source name, so the same id appearing in two sources draws
-    independent coins."""
-    out = None
-    for name, (df, rate) in sources.items():
-        salted = F.xxhash64(F.lit(f"{seed}|{name}"), F.col(id_col))
-        part = df.filter(
-            F.pmod(salted, F.lit(_BUCKETS)) < int(rate * _BUCKETS)
-        ).withColumn(source_col, F.lit(name))
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        raise ValueError("mix_sources needs at least one source")
-    return out
-
-
 def stratified_sample(df: DataFrame, strata: list[str], n_per_stratum: int,
                       id_col: str = "doc_id", seed: int = 7,
                       use_md5: bool = False) -> DataFrame:

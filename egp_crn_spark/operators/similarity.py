@@ -81,6 +81,21 @@ def brute_force_topk(
     )
 
 
+def _training_sample(corpus: DataFrame, vec_col: str, id_col: str,
+                     sample: int, fn: str) -> np.ndarray:
+    """(n, dim) float64 matrix of the top-``sample`` rows by
+    xxhash64(id), collected as Arrow and decoded by ``_vector_matrix``:
+    a null or ragged embedding raises naming ``fn`` and ``vec_col``."""
+    tbl = (
+        corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
+        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
+        .limit(sample)
+        .toArrow()
+    )
+    return _vector_matrix(tbl.column("v").combine_chunks(), None,
+                          f"{fn}: column '{vec_col}'")
+
+
 def train_centroids(corpus: DataFrame, ncells: int, vec_col: str = "embedding",
                     sample: int = 4096, iters: int = 5, seed: int = 7,
                     id_col: str = "vec_id") -> np.ndarray:
@@ -90,13 +105,7 @@ def train_centroids(corpus: DataFrame, ncells: int, vec_col: str = "embedding",
     downstream ANN result run-order dependent) AND unbiased for
     id-ordered corpora (the first N ids of a source/time-ordered table
     are not a representative slice; a hash order is)."""
-    pdf = (
-        corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(sample)
-        .toPandas()
-    )
-    X = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
+    X = _training_sample(corpus, vec_col, id_col, sample, "train_centroids")
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     C = X[rng.choice(len(X), size=min(ncells, len(X)), replace=False)]
@@ -403,13 +412,7 @@ def train_pq(corpus: DataFrame, centroids: np.ndarray, m: int = 8,
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub, k = dim // m, 1 << nbits
-    pdf = (
-        corpus.select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(sample)
-        .toPandas()
-    )
-    X = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
+    X = _training_sample(corpus, vec_col, id_col, sample, "train_pq")
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     R = X - centroids[np.argmax(X @ centroids.T, axis=1)]
     rng = np.random.default_rng(seed)

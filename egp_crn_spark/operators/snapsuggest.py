@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import geomexpr as GX
 from ..functions import geomkernel as GK
 from . import nodes as N
 from .distance import point_to_arc_distance_join
@@ -63,6 +64,7 @@ def suggested_snapping(arcs: DataFrame, radius: float = SUGGEST_RADIUS,
                        id_col: str = "segment_id",
                        vertices: str = "vertices") -> DataFrame:
     """(snapping_type, from_x, from_y, to_x, to_y, valid=0)."""
+    arcs = GX.require_xy(arcs, vertices, "suggested_snapping")
     roads = arcs.filter(F.col("segment_type") == 1)
     # persisted: feeds both the node-hit and the road-hit distance joins;
     # registered for snapsuggest_release() (cache-hygiene contract)

@@ -96,6 +96,7 @@ def _arc_candidate_pairs(arcs: DataFrame, res: int, id_col: str, vertices: str,
     ``with_checksum`` rides the geometry checksum along each side (v202's
     equality exclusion) — one extra column through the join beats two
     whole-candidate-set shuffles joining checksums back by id."""
+    arcs = GX.require_xy(arcs, vertices, "validate")
     v = F.col(vertices)
     first, last = F.element_at(v, 1), F.element_at(v, -1)
     cols = [
@@ -149,8 +150,9 @@ def _seg_cross_col() -> F.Column:
 
 
 def _seg_overlap_col() -> F.Column:
-    """Pure-Column twin of GK.segments_overlap: collinear with a
-    positive-length shared section (p = a-segment, q = b-segment)."""
+    """Pure-Column twin of the numpy segments_overlap (tests/twins.py):
+    collinear with a positive-length shared section (p = a-segment,
+    q = b-segment)."""
     eps = GK.EPS
     a1x, a1y, a2x, a2y = F.col("ax1"), F.col("ay1"), F.col("ax2"), F.col("ay2")
     b1x, b1y, b2x, b2y = F.col("bx1"), F.col("by1"), F.col("bx2"), F.col("by2")

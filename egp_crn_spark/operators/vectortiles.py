@@ -109,7 +109,7 @@ def vector_tiles(arcs: DataFrame, res: int,
             bx, by = vx[sv + 1], vy[sv + 1]
 
             # cover cells of each segment's own bbox (domain-clamped,
-            # same clamping as cells_covering_bbox)
+            # same clamping as the cells_covering_bbox twin in tests/twins.py)
             ix0 = np.clip(np.floor(np.minimum(ax, bx) * scale),
                           0, n_cells - 1).astype(np.int64)
             ix1 = np.clip(np.floor(np.maximum(ax, bx) * scale),
@@ -128,7 +128,8 @@ def vector_tiles(arcs: DataFrame, res: int,
             cy = iy0[ps] + loc % chp
 
             # Liang–Barsky for every (segment, cell) pair — identical
-            # plane order and arithmetic to clip_polyline_to_box
+            # plane order and arithmetic to the clip_polyline_to_box twin
+            # (tests/twins.py)
             A_x, A_y = ax[ps], ay[ps]
             Dx, Dy = (bx - ax)[ps], (by - ay)[ps]
             x0 = cx * cs

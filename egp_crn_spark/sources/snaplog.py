@@ -16,7 +16,7 @@ Layout (all inside the table directory):
         [part_col=value/]snap<N>-<file>.parquet   -- immutable once written
     metadata/
         snap-<N>.json      -- manifest: file list (+ partition values),
-                              parent id, operation, summary
+                              parent id, operation
         version-hint.txt   -- current snapshot id (atomic os.replace)
 
 Commit protocol (mirrors Iceberg's optimistic single-table commit):
@@ -290,7 +290,7 @@ class SnapshotLogTable:
     def snapshots(self) -> list[dict]:
         """The committed snapshot log (current ancestry chain), oldest
         first — (snapshot_id, parent_id, operation, n_files,
-        total_rows, summary)."""
+        total_rows)."""
         out = []
         for n in self._ancestry():
             m = self._manifest(n)
@@ -300,14 +300,8 @@ class SnapshotLogTable:
                 "operation": m["operation"],
                 "n_files": len(m["files"]),
                 "total_rows": sum(f["rows"] for f in m["files"]),
-                "summary": m.get("summary"),
             })
         return out
-
-    def committed_summaries(self) -> list[dict]:
-        """Summaries of committed (ancestry-chain) snapshots — the
-        ingest gate scans these for already-applied batch ids."""
-        return [s["summary"] for s in self.snapshots() if s["summary"]]
 
     # ------------------------------------------------------------ commits
     def _stage_files(self, df: DataFrame, snapshot_id: int,
@@ -410,7 +404,6 @@ class SnapshotLogTable:
 
     def _commit(self, files: list[dict], operation: str,
                 expected_parent: int | None | object = _UNSET,
-                summary: dict | None = None,
                 schema_json: str | None = None) -> int:
         os.makedirs(_meta_dir(self.path), exist_ok=True)
         with _CommitLock(_meta_dir(self.path)):
@@ -438,8 +431,6 @@ class SnapshotLogTable:
                 "operation": operation,
                 "files": files,
             }
-            if summary is not None:
-                manifest["summary"] = summary
             if schema_json is not None:
                 manifest["schema"] = schema_json
             meta = self._read_table_meta()
@@ -491,14 +482,11 @@ class SnapshotLogTable:
 
     create = overwrite
 
-    def append(self, df: DataFrame, summary: dict | None = None) -> int:
+    def append(self, df: DataFrame) -> int:
         """Data files are staged ONCE (attempt-unique names, reusable
         across retries); only the carried-over parent file list is
         recomputed when a concurrent commit moves the parent — the
-        optimistic retry loop Iceberg runs on CommitFailedException.
-        ``summary`` rides the manifest (Iceberg snapshot summary) — the
-        streaming ingest stores its batch id there, making data + batch
-        marker ONE atomic commit."""
+        optimistic retry loop Iceberg runs on CommitFailedException."""
         sj = df.schema.json()
         new = self._stage_files(df, (self.current_snapshot_id() or 0) + 1)
         for _ in range(_COMMIT_RETRIES):
@@ -506,8 +494,7 @@ class SnapshotLogTable:
             prev = self._manifest(sid)["files"] if sid is not None else []
             try:
                 return self._commit(prev + new, "append",
-                                    expected_parent=sid, summary=summary,
-                                    schema_json=sj)
+                                    expected_parent=sid, schema_json=sj)
             except CommitConflict:
                 continue
         raise CommitConflict(

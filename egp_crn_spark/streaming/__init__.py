@@ -1,53 +1,19 @@
-"""Streaming & incremental processing.
+"""Structured Streaming surface.
 
 The reference has NO streaming (SURVEY.md §2.10): its incremental
 behaviour is snapshot-diff batch (deltas, crossings deltas, restore),
 mapped here to operators/deltas.py + sources.tables snapshot reads.
 
-This module adds the Structured Streaming surface a 100 TB ingestion
-pipeline needs anyway: file-source streams of image/event rows,
-watermarked windowed aggregation, streaming sessionization via
-session_window, and streaming tile-count maintenance (the incremental
-form of the tile-assignment job). All queries are expressed so the SAME
-transformations run in batch (`spark.read`) and streaming
-(`spark.readStream`) — tested with the memory sink +
-processAllAvailable().
+One streaming query stays: watermarked windowed event counts, written
+so the SAME transformation runs in batch (``spark.read``) and streaming
+(``spark.readStream``) — the ``stream_window_counts`` registry query
+drives it through the memory sink.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions import cells as C
-from ..functions.georef import phash_x, phash_y
-
-# Off-heap state for the stateful near-dup operators (VERDICT r5 #6):
-# the default HDFS-backed provider keeps every (band, bucket) group's
-# (h+1)·N signature state on the executor HEAP — at 10^12 rows that is
-# GC death. RocksDB spills state to local SSD with an in-memory
-# block cache, bounding heap use regardless of state size.
-ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider")
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-@contextmanager
-def state_store(spark, provider: str = ROCKSDB_PROVIDER):
-    """Scope a state-store provider to the queries STARTED inside the
-    block (the provider is captured at query start; running queries are
-    unaffected). Restores the previous session conf on exit."""
-    prev = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(_PROVIDER_KEY, provider)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev)
 
 
 def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
@@ -63,340 +29,3 @@ def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
         F.count("*").alias("n"),
         F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total_value"),
     )
-
-
-def streaming_sessionize(events: DataFrame, gap: str = "30 minutes",
-                         watermark: str = "1 hour") -> DataFrame:
-    """Gap-based sessions per user via session_window (the streaming twin
-    of driverq.q_sessionize)."""
-    src = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    if events.isStreaming:
-        src = src.withWatermark("ts", watermark)
-    return src.groupBy(F.session_window("ts", gap), "user_id").agg(
-        F.count("*").alias("n_events"), F.min("ts").alias("first_ts")
-    )
-
-
-def streaming_tile_counts(images: DataFrame, res: int = 6) -> DataFrame:
-    """Incrementally maintained per-tile image counts — the streaming form
-    of the tile-assignment flagship (phash → cell, pure Column so the
-    plan is identical in batch and streaming)."""
-    return (
-        images.select(
-            C.cell_of_xy(phash_x(F.col("phash")), phash_y(F.col("phash")), res).alias("tile")
-        )
-        .groupBy("tile")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def streaming_dedup(stream: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", shards: int = 32) -> DataFrame:
-    """Custom stateful operator: exact dedup ACROSS micro-batches.
-
-    State = the set of content hashes seen so far, sharded by hash prefix
-    so state is partitioned (each shard's state stays bounded and the
-    state store scales horizontally). First occurrence of a hash is
-    emitted; later occurrences — in the same or any later micro-batch —
-    are dropped. The streaming twin of operators/dedup.dedup_exact.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    hashed = stream.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.md5(F.col(text_col)).alias("ck"),
-    ).withColumn("shard", F.pmod(F.xxhash64("ck"), F.lit(shards)))
-
-    def dedup_fn(key, pdfs, state):
-        seen = set(state.get[0]) if state.exists else set()
-        out_ids, out_cks = [], []
-        for pdf in pdfs:
-            for did, ck in zip(pdf["doc_id"], pdf["ck"]):
-                if ck not in seen:
-                    seen.add(ck)
-                    out_ids.append(did)
-                    out_cks.append(ck)
-        state.update((list(seen),))
-        yield pd.DataFrame({"doc_id": out_ids, "ck": out_cks})
-
-    return hashed.groupBy("shard").applyInPandasWithState(
-        dedup_fn,
-        outputStructType="doc_id long, ck string",
-        stateStructType="seen array<string>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def ingest_stream(stream: DataFrame, run, transform,
-                  checkpoint_dir: str):
-    """Continuous ingestion with per-partition lineage — the streaming
-    form of the north-rule checkpoint-resume contract: every micro-batch
-    appends its transformed rows into the run's cell_id-partitioned
-    layout plus lineage rows recording (cell_id, row_count, checksum,
-    batch_id). foreachBatch is at-least-once on restart; the
-    ``is_batch_committed`` gate skips replayed batches, making the
-    OUTPUT exactly-once (the idempotent-foreachBatch pattern, backed by
-    the same lineage table that verify() audits — aggregate checksums
-    across a cell's appends must reproduce the stored bytes).
-
-    ``run``: an operators.lineage.CheckpointedRun (append mode — don't
-    mix with overwrite commit() on the same run). ``transform``: a
-    batch-DataFrame function whose output carries the run's cell column.
-    Returns the DataStreamWriter — caller adds options and .start()s."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if run.is_batch_committed(batch_id):
-            return
-        run.append_commit(transform(batch_df), batch_id)
-
-    return (stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir))
-
-
-def catalog_ingest_stream(stream: DataFrame, table, transform,
-                          checkpoint_dir: str):
-    """Continuous ingestion INTO the snapshot catalog with exactly-once
-    batches through one atomic pointer: each micro-batch appends as a
-    catalog commit whose manifest summary records the batch id, so the
-    data files and the processed-marker become visible in the SAME
-    version-hint flip. foreachBatch is at-least-once on restart; a
-    replayed batch finds its id in a committed (ancestry-chain) summary
-    and skips. Crash anywhere mid-commit leaves the batch INVISIBLE
-    (orphan files or an unflipped ghost manifest — ghosts are not on
-    the ancestry chain, so the gate correctly re-applies them), which
-    is a strictly stronger story than the side-table lineage gate of
-    ``ingest_stream``: there is no window where data is visible but the
-    marker is not, or vice versa.
-
-    ``table``: a sources.snaplog.SnapshotLogTable. ``transform``: batch
-    DataFrame -> DataFrame to append. Returns the DataStreamWriter —
-    caller adds options and .start()s. Downstream consumers time-travel
-    or changelog-read the same table (sources.tables seam)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        done = {s.get("batch_id") for s in table.committed_summaries()}
-        if batch_id in done:
-            return
-        table.append(transform(batch_df), summary={"batch_id": batch_id})
-
-    return (stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir))
-
-
-def streaming_hamming_near_dup(stream: DataFrame, sig_col: str,
-                               id_col: str, max_hamming: int = 2,
-                               max_bucket: int = 1000) -> DataFrame:
-    """Custom stateful operator: NEAR-dup pairs of 64-bit signatures
-    ACROSS micro-batches — the operator a 100-TB ingestion pipeline runs
-    continuously (each arriving image/document is checked against
-    everything already ingested). Streaming twin of the batch
-    ``dedup.hamming_near_pairs`` (same pigeonhole banding: a pair within
-    ``max_hamming`` shares at least one exact band, so candidate recall
-    is guaranteed).
-
-    State = per (band, bucket) group, the (id, signature) list seen so
-    far. Size bound: each item lives in exactly (max_hamming + 1)
-    groups, so total state is (max_hamming + 1) x N 16-byte entries,
-    hash-sharded across groups by the state store. The per-group
-    ``max_bucket`` cap is the streaming form of the batch mega-bucket
-    skew guard: a group that exceeds it SATURATES — it stops emitting
-    pairs and stops growing its state (the batch cap drops such buckets
-    wholesale; the streaming cap additionally keeps the pairs emitted
-    before saturation, since emitted rows cannot be recalled).
-
-    A pair within threshold in k bands is emitted k times (band groups
-    are independent); downstream consumers dedup on (a_id, b_id) — kept
-    OUT of this operator because chaining a second stateful dedup onto
-    an applyInPandasWithState stream is version-sensitive. Emitted rows:
-    (a_id, b_id, hamming) with a_id < b_id.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    n_bands = max(max_hamming + 1, 2)
-    base, extra = divmod(64, n_bands)
-    widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
-    banded = stream.select(
-        F.col(id_col).cast("long").alias("item_id"),
-        F.col(sig_col).cast("long").alias("sh"),
-    ).select(
-        "item_id", "sh",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"),
-                         F.shiftright("sh", offsets[b])
-                         .bitwiseAND(F.lit((1 << widths[b]) - 1)).alias("bucket"))
-                for b in range(n_bands)
-            ])
-        ).alias("bb"),
-    ).select("item_id", "sh", "bb.band", "bb.bucket")
-
-    def pair_fn(key, pdfs, state):
-        if state.exists:
-            ids, shs, sat = state.get
-            ids, shs, sat = list(ids), list(shs), bool(sat)
-        else:
-            ids, shs, sat = [], [], False
-        out_a, out_b, out_h = [], [], []
-        for pdf in pdfs:
-            order = pdf.sort_values("item_id")  # deterministic within batch
-            for nid, nsh in zip(order["item_id"], order["sh"]):
-                nid, nsh = int(nid), int(nsh)
-                if not sat:
-                    for oid, osh in zip(ids, shs):
-                        if oid == nid:
-                            continue
-                        h = bin((nsh ^ osh) & 0xFFFFFFFFFFFFFFFF).count("1")
-                        if h <= max_hamming:
-                            a, b = (oid, nid) if oid < nid else (nid, oid)
-                            out_a.append(a)
-                            out_b.append(b)
-                            out_h.append(h)
-                    ids.append(nid)
-                    shs.append(nsh)
-                    if len(ids) > max_bucket:
-                        sat = True  # skew guard: stop pairing AND growing
-        state.update((ids, shs, sat))
-        yield pd.DataFrame({"a_id": out_a, "b_id": out_b,
-                            "hamming": pd.array(out_h, dtype="int32")})
-
-    return banded.groupBy("band", "bucket").applyInPandasWithState(
-        pair_fn,
-        outputStructType="a_id long, b_id long, hamming int",
-        stateStructType="ids array<long>, shs array<long>, sat boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_phash_near_dup(images: DataFrame, phash_col: str = "phash",
-                             id_col: str = "image_id", max_hamming: int = 2,
-                             max_bucket: int = 1000) -> DataFrame:
-    """Streaming image near-dup on the phash column — the continuous form
-    of operators/images.phash_near_dup."""
-    return streaming_hamming_near_dup(images, phash_col, id_col,
-                                      max_hamming, max_bucket)
-
-
-def minhash_sig_columns(text: Column, num_hashes: int, k: int = 3) -> list:
-    """Per-row (map-side) minhash signature columns — the streaming form
-    of ``dedup.minhash_signatures``. The batch path explodes shingles and
-    min-aggregates (one shuffle) because Catalyst re-evaluates the
-    tokenizer once per ``transform`` call; here each doc's signature must
-    be computable WITHOUT aggregation (stateful streaming allows one
-    stateful operator per query, and it must be the pairing). num_hashes
-    array_min(transform(...)) passes over the shingle array cost
-    O(num_hashes x tokens) per row — acceptable at micro-batch sizes and
-    embarrassingly parallel. Values are IDENTICAL to the batch
-    signatures (same xxhash64(seed-lit, shingle) composition; min over
-    distinct == min over all), so band buckets — and therefore candidate
-    recall — match the batch LSH exactly."""
-    from ..operators.text import shingles
-
-    sh = F.array_distinct(shingles(text, k))
-    return [F.array_min(F.transform(sh, lambda s, h=h: F.xxhash64(F.lit(h), s)))
-            .alias(f"_m{h}") for h in range(num_hashes)]
-
-
-def streaming_minhash_candidates(docs: DataFrame, text_col: str = "text",
-                                 id_col: str = "doc_id", num_hashes: int = 8,
-                                 bands: int = 4, k: int = 3,
-                                 max_bucket: int = 1000) -> DataFrame:
-    """Custom stateful operator: banded-MinHash near-dup CANDIDATE pairs
-    ACROSS micro-batches — the text twin of the hamming front
-    (``streaming_hamming_near_dup``), closing the continuous-curation
-    gap: documents ingested continuously are banded against everything
-    already ingested (reference analog: the deltas stage's incremental
-    posture, fetch_deltas.py:166-233).
-
-    Signatures are computed map-side (``minhash_sig_columns``) with the
-    SAME hash composition as batch ``dedup_minhash_lsh``, and band
-    buckets use the same md5(concat_ws) key — so the candidate set
-    equals the batch ``_band_pairs`` candidate set over the union of all
-    micro-batches (modulo the cap, below). State per (band, bucket)
-    group is just the id list (the bucket key equality IS the candidate
-    condition — no signatures needed in state, unlike the hamming front
-    which must compute distances), so state is the minimum possible:
-    ``bands`` x N 8-byte entries, hash-sharded by the state store.
-
-    The per-group ``max_bucket`` cap is the streaming form of the batch
-    ``_cap_hot_window`` skew guard: a group that exceeds it SATURATES —
-    stops emitting pairs and stops growing state.
-
-    Emits (a_id, b_id, band) with a_id < b_id; a pair agreeing in k
-    bands is emitted k times — downstream dedups on (a_id, b_id) and
-    VERIFIES with the same ``dedup.exact_jaccard`` + threshold filter
-    the batch path uses (candidates are a recall superset; verification
-    needs the shingle sets, which live in the corpus, not in stream
-    state). Tested stream == batch vs dedup_minhash_lsh over 3
-    micro-batches under both state stores.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    sig = docs.select(F.col(id_col).cast("long").alias("item_id"),
-                      *minhash_sig_columns(F.col(text_col), num_hashes, k))
-    # docs with no shingles have NULL minhashes — they cannot be
-    # near-dups (and concat_ws would silently bucket them together)
-    sig = sig.filter(F.col("_m0").isNotNull())
-    banded = sig.select(
-        "item_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *[F.col(f"_m{b * rows + r}")
-                                         for r in range(rows)])).alias("bucket"),
-            ) for b in range(bands)
-        ])).alias("bb"),
-    ).select("item_id", "bb.band", "bb.bucket")
-
-    def pair_fn(key, pdfs, state):
-        if state.exists:
-            ids, sat = state.get
-            ids, sat = list(ids), bool(sat)
-        else:
-            ids, sat = [], False
-        out_a, out_b = [], []
-        band = int(key[0])
-        for pdf in pdfs:
-            order = pdf.sort_values("item_id")  # deterministic within batch
-            for nid in order["item_id"]:
-                nid = int(nid)
-                if sat:
-                    continue
-                for oid in ids:
-                    if oid == nid:
-                        continue
-                    a, b = (oid, nid) if oid < nid else (nid, oid)
-                    out_a.append(a)
-                    out_b.append(b)
-                ids.append(nid)
-                if len(ids) > max_bucket:
-                    sat = True  # skew guard: stop pairing AND growing
-        state.update((ids, sat))
-        yield pd.DataFrame({"a_id": out_a, "b_id": out_b,
-                            "band": pd.array([band] * len(out_a), dtype="int32")})
-
-    return banded.groupBy("band", "bucket").applyInPandasWithState(
-        pair_fn,
-        outputStructType="a_id long, b_id long, band int",
-        stateStructType="ids array<long>, sat boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_simhash_near_dup(docs: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id", max_hamming: int = 3,
-                               max_bucket: int = 1000) -> DataFrame:
-    """Streaming text near-dup: per-row Column-expression simhash64 (no
-    aggregation, so it streams map-side) + the shared stateful hamming
-    pairing — the continuous form of operators/dedup.dedup_simhash."""
-    from ..operators.dedup import simhash64
-
-    sigs = docs.select(F.col(id_col), simhash64(F.col(text_col)).alias("_sh"))
-    return streaming_hamming_near_dup(sigs, "_sh", id_col,
-                                      max_hamming, max_bucket)

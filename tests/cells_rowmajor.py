@@ -67,11 +67,6 @@ def kring_cells(ix: Column, iy: Column, res: int, k: int = 1) -> Column:
     return F.array_compact(F.array(*cols))
 
 
-def kring_of_xy(x: Column, y: Column, res: int, k: int = 1) -> Column:
-    """Backend-agnostic point form of kring_cells (see cells.kring_of_xy)."""
-    ix, iy = xy_to_ixy(x, y, res)
-    return kring_cells(ix, iy, res, k)
-
 
 def cell_of_xy_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     n = 1 << res

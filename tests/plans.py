@@ -1,6 +1,6 @@
-"""Physical-plan inspection helpers.
+"""Physical-plan inspection helpers for the plan-shape tests.
 
-Used by tests to enforce the engine's scale contracts: cell/georef
+They enforce the engine's scale contracts: cell/georef
 pipelines stay inside whole-stage codegen (no Python eval nodes), joins
 that should broadcast do broadcast, and shuffle counts stay bounded.
 """

@@ -21,6 +21,7 @@ from egp_crn_spark.operators import standardize as ST
 from egp_crn_spark.operators import validate as V
 from egp_crn_spark.operators.distance import (arc_within_network_distance,
                                               point_to_arc_distance_join)
+from tests.twins import point_to_polyline_distance
 
 
 # ---------------------------------------------------------------- fixture prep
@@ -292,7 +293,7 @@ def test_v302_min_distance(arcs_std, arcs_std_pd):
                 continue
             near = {
                 o.segment_id for o in rows
-                if GK.point_to_polyline_distance(p[0], p[1], o.np_verts) <= MIN_DISTANCE
+                if point_to_polyline_distance(p[0], p[1], o.np_verts) <= MIN_DISTANCE
             }
             epts = [(round(v[0], 5), round(v[1], 5)) for v in (r.np_verts[0], r.np_verts[-1])]
             connected = set().union(*(pts_id[e] for e in epts))
@@ -329,7 +330,7 @@ def test_point_to_arc_distance_join_bruteforce(spark, arcs_std, arcs_std_pd):
     want_pairs = set()
     for r in pts.itertuples():
         for o in arcs_std_pd.itertuples():
-            d = GK.point_to_polyline_distance(r.x, r.y, o.np_verts)
+            d = point_to_polyline_distance(r.x, r.y, o.np_verts)
             if d <= radius:
                 want_pairs.add((r.p_id, o.segment_id))
     assert got_pairs == want_pairs
@@ -337,7 +338,7 @@ def test_point_to_arc_distance_join_bruteforce(spark, arcs_std, arcs_std_pd):
     for rec in got.itertuples():
         verts = arcs_std_pd.set_index("segment_id").loc[rec.segment_id, "np_verts"]
         assert rec.dist == pytest.approx(
-            GK.point_to_polyline_distance(rec.x, rec.y, verts), rel=1e-9
+            point_to_polyline_distance(rec.x, rec.y, verts), rel=1e-9
         )
 
 
@@ -365,7 +366,7 @@ def test_point_near_arc_pairs_res_independent(spark, arcs_std, arcs_std_pd):
     want = set()
     for r in pts.itertuples():
         for o in arcs_std_pd.itertuples():
-            if GK.point_to_polyline_distance(r.x, r.y, o.np_verts) <= radius:
+            if point_to_polyline_distance(r.x, r.y, o.np_verts) <= radius:
                 want.add((r.p_id, o.segment_id))
     assert sets[5] == sets[8] == sets[11] == want
 

@@ -7,10 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from egp_crn_spark import plans
 from egp_crn_spark.functions import cells as C
 from egp_crn_spark.functions.georef import key_x, key_y
 from egp_crn_spark.sources.tables import save_bucketed_table
+from tests import plans
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +62,6 @@ def test_ivf_index_bucketed_serving(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from egp_crn_spark import plans
     from egp_crn_spark.operators.similarity import ivf_assign, ivf_probe
 
     rng = np.random.default_rng(5)
@@ -103,7 +102,6 @@ def test_hot_cell_cap_bounded_audited(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from egp_crn_spark import plans
     from egp_crn_spark.operators.similarity import (cap_index_cells,
                                                     ivf_assign, ivf_probe)
 

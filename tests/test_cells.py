@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from egp_crn_spark.config import EXTENT
 from egp_crn_spark.functions import cells
+from tests.twins import cell_to_ixy_np, cells_covering_bbox
 
 
 def _ref_interleave(ix: int, iy: int) -> int:
@@ -75,8 +76,7 @@ def test_cell_encode_and_kring_match_numpy(spark):
         out = df.select(ix.alias("ix"), iy.alias("iy"),
                         cells.cell_encode(ix, iy, res).alias("c"),
                         cells.kring_cells(ix, iy, res, 1).alias("ring"),
-                        cells.kring_of_xy(F.col("x"), F.col("y"), res, 2)
-                        .alias("ring2")).toPandas()
+                        cells.kring_cells(ix, iy, res, 2).alias("ring2")).toPandas()
         x = np.r_[pdf.x.to_numpy(), 0.0]
         y = np.r_[pdf.y.to_numpy(), 7.0]
         want_ix = np.clip(np.floor(x * (n / EXTENT)), 0, n - 1).astype(np.int64)
@@ -160,13 +160,13 @@ def test_res_for_radius():
 
 
 def test_cells_covering_bbox():
-    got = cells.cells_covering_bbox(0.0, 0.0, cells.cell_size(4) * 1.5, cells.cell_size(4) * 0.5, 4)
+    got = cells_covering_bbox(0.0, 0.0, cells.cell_size(4) * 1.5, cells.cell_size(4) * 0.5, 4)
     assert len(got) == 2  # two cells in x, one in y
 
 
 def test_morton_decode_roundtrip():
     """cell_to_ixy_np inverts cell_encode_np at every resolution tier
-    (the vector-tile clip derives tile boxes from cell ids with it)."""
+    (the vector-tile parity oracle derives tile boxes from cell ids with it)."""
     import numpy as np
 
     ix = np.arange(0, 65536, 97, dtype=np.int64)
@@ -175,5 +175,5 @@ def test_morton_decode_roundtrip():
         n = 1 << res
         a, b = ix % n, iy % n
         enc = cells.cell_encode_np(a, b, res)
-        ra, rb = cells.cell_to_ixy_np(enc)
+        ra, rb = cell_to_ixy_np(enc)
         assert (ra == a).all() and (rb == b).all()

@@ -12,6 +12,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 from egp_crn_spark.config import EXTENT
 from egp_crn_spark.functions import cells as morton_cells
@@ -47,6 +48,40 @@ def _backend(name):
     return b
 
 
+def _kring_of_xy(B, x, y, res: int, k: int = 1):
+    """k-ring of the cell holding (x, y) on backend ``B``, own cell
+    included. The square grids answer through the form the distance
+    joins build, ``kring_cells(*xy_to_ixy(x, y))``. The engine's S2 and
+    h3 backends only encode, so their rings come from the test-side S2
+    neighbour oracle (tests/s2_neighbours.py) and from h3.grid_disk."""
+    if hasattr(B, "kring_cells"):
+        return B.kring_cells(*B.xy_to_ixy(x, y, res), res, k)
+    if B.__name__.endswith("cells_s2"):
+        from tests.s2_neighbours import all_neighbors
+
+        @F.pandas_udf(ArrayType(LongType()))
+        def ring(xs: pd.Series, ys: pd.Series) -> pd.Series:
+            cells = B.cell_of_xy_np(xs.to_numpy(), ys.to_numpy(), res) \
+                .view(np.uint64).reshape(-1, 1)
+            for _ in range(k):
+                nbrs = all_neighbors(cells.ravel(), res) \
+                    .reshape(cells.shape[0], -1)
+                cells = np.concatenate([cells, nbrs], axis=1)
+            return pd.Series([list(np.unique(row).view(np.int64))
+                              for row in cells])
+
+        return ring(x, y)
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def disk(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        lat, lng = B._to_latlng(xs.to_numpy(), ys.to_numpy())
+        return pd.Series([
+            [int(c) for c in B._grid_disk(B._latlng_to_cell(la, ln, res), k)]
+            for la, ln in zip(lat, lng)])
+
+    return disk(x, y)
+
+
 @pytest.fixture(scope="module", params=["morton", "rowmajor"])
 def C(request):
     """Square-grid backends: these tests exercise the ix/iy internals
@@ -63,8 +98,9 @@ def CB(request):
     available — pure numpy) and real h3 when the library is importable
     (skipped, not failed, where it is not): the backend-agnostic axioms
     below reach cells only through the point API — cell_of_xy,
-    parent_cell, kring_of_xy, res_for_radius, cell_size — which is the
-    exact surface the operators use through the cells.py seam."""
+    parent_cell, res_for_radius, cell_size — which is the exact surface
+    the operators use through the cells.py seam, plus the k-ring of a
+    point (``_kring_of_xy``)."""
     return _backend(request.param)
 
 
@@ -111,7 +147,7 @@ def test_kring_of_xy_contains_own_cell(spark, CB):
     res = 6
     out = df.select(
         CB.cell_of_xy(F.col("x"), F.col("y"), res).alias("own"),
-        CB.kring_of_xy(F.col("x"), F.col("y"), res, 1).alias("ring"),
+        _kring_of_xy(CB, F.col("x"), F.col("y"), res, 1).alias("ring"),
     ).collect()[0]
     assert out["own"] in out["ring"]
     assert len(set(out["ring"])) >= 7
@@ -157,7 +193,7 @@ def test_res_for_radius_covers(spark, CB):
         {"ax": ax[keep], "ay": ay[keep], "bx": bx[keep], "by": by[keep]}))
     missed = df.filter(
         ~F.arrays_overlap(
-            CB.kring_of_xy(F.col("ax"), F.col("ay"), res, 1),
+            _kring_of_xy(CB, F.col("ax"), F.col("ay"), res, 1),
             F.array(CB.cell_of_xy(F.col("bx"), F.col("by"), res)),
         )
     ).count()

@@ -4,9 +4,10 @@ Anchors to implementation-independent facts of the published S2 cell-id
 scheme: structural constants (face cells, id layout), inverse
 round-trips, Hilbert-curve continuity (consecutive leaf ids are lattice
 neighbours — ANY lookup-table error breaks this), parent/child/range
-axioms, and edge-neighbour symmetry including cross-face wraps. The
-backend-agnostic operator axioms run via the CB fixture in
-test_cells_conformance.py.
+axioms, and the k-ring(1) coverage bound of ``res_for_radius``. The
+decoder and the neighbour enumeration are test-side
+(tests/s2_neighbours.py); the backend-agnostic operator axioms run via
+the CB fixture in test_cells_conformance.py.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import numpy as np
 import pytest
 
 from egp_crn_spark.functions import cells_s2 as S
+from tests import s2_neighbours as N
 
 
 def _rand_sphere(n, seed):
@@ -49,7 +51,7 @@ def test_encode_decode_roundtrip_whole_sphere():
     cells across all faces."""
     lat, lng = _rand_sphere(5000, 2)
     leaf = S.cell_id_np(lat, lng, S.MAX_LEVEL).view(np.uint64)
-    face, i, j = S._to_face_ij(leaf)
+    face, i, j = N.to_face_ij(leaf)
     back = S._from_face_ij(face, i, j)
     assert (back == leaf).all()
     assert (i >= 0).all() and (i < S._MAX_SIZE).all()
@@ -63,8 +65,8 @@ def test_hilbert_curve_continuity():
     lat, lng = _rand_sphere(2000, 3)
     leaf = S.cell_id_np(lat, lng, S.MAX_LEVEL).view(np.uint64)
     nxt = leaf + np.uint64(2)  # next leaf position along the curve
-    f0, i0, j0 = S._to_face_ij(leaf)
-    f1, i1, j1 = S._to_face_ij(nxt)
+    f0, i0, j0 = N.to_face_ij(leaf)
+    f1, i1, j1 = N.to_face_ij(nxt)
     same = f0 == f1  # curve jumps faces at face-position boundaries
     assert same.sum() > 1900
     manhattan = np.abs(i1 - i0) + np.abs(j1 - j0)
@@ -82,8 +84,8 @@ def test_parent_containment_and_ranges(fine, coarse):
     lsb = S._lsb_for_level(coarse)
     assert (cf >= cc - (lsb - np.uint64(1))).all()
     assert (cf <= cc + (lsb - np.uint64(1))).all()
-    assert (S._level_of(cf) == fine).all()
-    assert (S._level_of(cc) == coarse).all()
+    assert (N.level_of(cf) == fine).all()
+    assert (N.level_of(cc) == coarse).all()
 
 
 def test_children_partition_parent():
@@ -95,7 +97,7 @@ def test_children_partition_parent():
         kids = [c - lsb + np.uint64(2 * k + 1) * child_lsb for k in range(4)]
         for kid in kids:
             assert (S._parent_at(kid, level) == c).all()
-            assert (S._level_of(kid) == level + 1).all()
+            assert (N.level_of(kid) == level + 1).all()
         # 4 distinct children whose ranges tile the parent's range
         lo = kids[0] - (child_lsb - np.uint64(1))
         hi = kids[3] + (child_lsb - np.uint64(1))
@@ -111,9 +113,9 @@ def test_neighbor_symmetry_including_face_wraps(level):
     lat, lng = _rand_sphere(300, 6 + level)
     c = S.cell_id_np(lat, lng, level).view(np.uint64)
     c = np.unique(c)
-    nbrs = S._all_neighbors(c, level)
-    assert (S._level_of(nbrs.ravel()) == level).all()
-    back = S._all_neighbors(nbrs.ravel(), level) \
+    nbrs = N.all_neighbors(c, level)
+    assert (N.level_of(nbrs.ravel()) == level).all()
+    back = N.all_neighbors(nbrs.ravel(), level) \
         .reshape(len(c), 8, 8)
     for idx in range(len(c)):
         for k in range(8):
@@ -125,7 +127,7 @@ def test_neighbor_symmetry_including_face_wraps(level):
 def test_interior_cell_has_8_distinct_neighbors():
     # face-0 center is far from every cube edge at level 10
     c = S.cell_id_np(np.array([0.0]), np.array([0.0]), 10).view(np.uint64)
-    nbrs = S._all_neighbors(c, 10)
+    nbrs = N.all_neighbors(c, 10)
     assert len(set(nbrs[0].tolist())) == 8
     assert c[0] not in nbrs[0]
 
@@ -153,7 +155,7 @@ def test_coverage_invariant_numpy(patch, res):
         blat, blng = S._to_latlng(bx, by)
         ca = S.cell_id_np(alat, alng, res).view(np.uint64)
         cb = S.cell_id_np(blat, blng, res).view(np.uint64)
-        ring = S._all_neighbors(ca, res)
+        ring = N.all_neighbors(ca, res)
         hit = (ca == cb) | (ring == cb[:, None]).any(axis=1)
         assert hit.all(), f"missed {int((~hit).sum())} of 600"
     finally:

@@ -2,7 +2,8 @@
 
 validate.py resolves single-segment candidate pairs with Column algebra
 (_seg_cross_col / _seg_overlap_col) while multi-vertex pairs go through
-the numpy kernels (GK.segments_properly_intersect / segments_overlap).
+the numpy kernels (GK.segments_properly_intersect / the
+segments_overlap twin in tests/twins.py).
 Both paths claim IDENTICAL semantics — same EPS, same operation order.
 This is the contract test: thousands of adversarial segment pairs
 (random, collinear, touching, degenerate, shared-endpoint) evaluated
@@ -17,6 +18,7 @@ from pyspark.sql import functions as F
 
 from egp_crn_spark.functions import geomkernel as GK
 from egp_crn_spark.operators.validate import _seg_cross_col, _seg_overlap_col
+from tests.twins import segments_overlap
 
 
 def _pair_frame(spark, rng, n=4000):
@@ -65,7 +67,7 @@ def test_overlap_column_matches_kernel(spark):
     rng = np.random.default_rng(4321)
     pdf, df = _pair_frame(spark, rng)
     got = df.select(_seg_overlap_col().alias("v")).toPandas()["v"].to_numpy()
-    want = _numpy_verdicts(pdf, GK.segments_overlap)
+    want = _numpy_verdicts(pdf, segments_overlap)
     assert (got == want).all()
     assert want.any()  # population actually contains collinear overlaps
 

@@ -6,11 +6,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from egp_crn_spark.functions.geomkernel import (point_to_polyline_distance,
-                                                simplify_dp)
+from egp_crn_spark.functions.geomkernel import simplify_dp
 from egp_crn_spark.operators.generalize import (generalize_levels,
                                                 simplify_lines,
                                                 zoom_tolerance)
+from tests.twins import point_to_polyline_distance
 
 
 def _noisy_line(n=200, seed=0):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from egp_crn_spark.functions import geomexpr as GX
 from egp_crn_spark.functions import geomkernel as GK
+from tests.twins import point_to_polyline_distance
 
 
 # ---------------------------------------------------------------- numpy kernels
@@ -61,7 +62,7 @@ def test_linear_referencing():
     line = np.array([[0, 0], [10, 0], [10, 10]], dtype=float)
     assert GK.line_interpolate(line, 15.0).tolist() == [10.0, 5.0]
     assert GK.line_locate(line, 10.0, 5.0) == pytest.approx(15.0)
-    assert GK.point_to_polyline_distance(5.0, 3.0, line) == pytest.approx(3.0)
+    assert point_to_polyline_distance(5.0, 3.0, line) == pytest.approx(3.0)
 
 
 def test_split_line_at_distances():

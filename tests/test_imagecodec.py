@@ -25,14 +25,6 @@ def test_lossy_psnr_above_40db():
     assert np.abs(back.astype(int) - arr.astype(int)).max() <= IC.JPEG_QUANT_STEP
 
 
-def test_meta():
-    arr = np.zeros((8, 12, 3), dtype=np.uint8)
-    w, h, c, lossless = IC.image_meta(IC.encode_image(arr, "png"))
-    assert (w, h, c, lossless) == (12, 8, 3, True)
-    w, h, c, lossless = IC.image_meta(IC.encode_image(arr, "jpeg"))
-    assert (w, h, c, lossless) == (12, 8, 3, False)
-
-
 def test_deterministic():
     arr = np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3)
     assert IC.encode_image(arr, "jpeg") == IC.encode_image(arr, "jpeg")

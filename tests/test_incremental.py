@@ -29,6 +29,16 @@ def _df(spark, rows):
         rows, "id int, part string, flag int, val int, weight int")
 
 
+def _advance(t, state, frm, to):
+    """Maintained aggregate at snapshot ``to`` from the one at ``frm``
+    (a full scan of ``frm`` when ``state`` is None), using only the
+    changelog between them."""
+    if state is None:
+        state = IV.snapshot_aggregate(t.read(frm), KEYS, SUMS())
+    delta = IV.aggregate_delta(t.changelog(frm, to), KEYS, SUMS())
+    return IV.merge_aggregate_state(state, delta, KEYS, SUMS())
+
+
 def _collect(df):
     return {
         (r.part, r.flag): (r._rows, r.val_sum, r.weight_sum)
@@ -50,8 +60,7 @@ def test_three_vintages_incremental_equals_recompute(spark, tmp_path):
 
     state = IV.snapshot_aggregate(t.read(s1), KEYS, SUMS())
     for frm, to in [(s1, s2), (s2, s3)]:
-        state = IV.maintain_aggregate(t, KEYS, SUMS(), state=state,
-                                      from_id=frm, to_id=to)
+        state = _advance(t, state, frm, to)
         want = IV.snapshot_aggregate(t.read(to), KEYS, SUMS())
         assert _collect(state) == _collect(want), (frm, to)
 
@@ -62,7 +71,7 @@ def test_groups_vanish_when_rows_hit_zero(spark, tmp_path):
     t = SnapshotLogTable(spark, str(tmp_path / "tbl"), partition_col="part")
     s1 = t.overwrite(_df(spark, [(1, "a", 0, 1, 1), (2, "b", 7, 2, 2)]))
     s2 = t.overwrite_partitions(_df(spark, [(3, "b", 8, 3, 3)]))
-    got = IV.maintain_aggregate(t, KEYS, SUMS(), from_id=s1, to_id=s2)
+    got = _advance(t, None, s1, s2)
     keys = {(r.part, r.flag) for r in got.collect()}
     assert keys == {("a", 0), ("b", 8)}  # (b, 7) vanished
 
@@ -77,7 +86,7 @@ def test_null_keys_maintained(spark, tmp_path):
     s2 = t.append(spark.createDataFrame(
         [(4, "a", None, 10, 2)],
         "id int, part string, flag int, val int, weight int"))
-    got = IV.maintain_aggregate(t, KEYS, SUMS(), from_id=s1, to_id=s2)
+    got = _advance(t, None, s1, s2)
     want = IV.snapshot_aggregate(t.read(s2), KEYS, SUMS())
     assert _collect(got) == _collect(want)
     assert ("a", None) in _collect(got)
@@ -108,8 +117,7 @@ def test_random_vintage_sequences(spark, tmp_path, seed):
                                 parts=(rng.choice("abcd"),))))
         else:
             new_sid = t.append(_df(spark, rows(rng.randint(1, 6))))
-        state = IV.maintain_aggregate(t, KEYS, SUMS(), state=state,
-                                      from_id=sid, to_id=new_sid)
+        state = _advance(t, state, sid, new_sid)
         want = IV.snapshot_aggregate(t.read(new_sid), KEYS, SUMS())
         assert _collect(state) == _collect(want), f"seed={seed} sid={new_sid}"
         sid = new_sid

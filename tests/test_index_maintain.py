@@ -15,9 +15,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from egp_crn_spark.operators import index_maintain as IM
-from egp_crn_spark.operators.similarity import (ivf_probe, train_centroids,
+from egp_crn_spark.operators.similarity import (ivf_assign, ivf_pq_assign,
+                                                ivf_probe, train_centroids,
                                                 train_pq)
 from egp_crn_spark.sources.snaplog import SnapshotLogTable
+from tests import plans
 
 DIM = 16
 
@@ -44,6 +46,27 @@ def _index_set(df, pq):
     return {(r.n_id, r.cell, tuple(r.cv), r._cn) for r in out}
 
 
+def _rebuild(corpus, C, as_of, books=None):
+    """From-scratch index of one corpus snapshot — the oracle a
+    maintained live index must equal as a set."""
+    idx = (ivf_pq_assign(corpus, C, books) if books is not None
+           else ivf_assign(corpus, C, dtype="float32"))
+    return idx.withColumn(IM.AS_OF, F.lit(int(as_of)))
+
+
+def _initial(corpus, C, as_of, books=None):
+    """(index, empty tombstones) built from a full corpus scan."""
+    idx = _rebuild(corpus, C, as_of, books)
+    return idx, idx.select("n_id").limit(0).withColumn(IM.TOMB_TS, F.lit(0))
+
+
+def _advance(t, C, frm, to, idx, tombs, books=None):
+    """Advance (index, tombstones) from snapshot ``frm`` to ``to``
+    through index_delta over the changelog between them."""
+    appends, new = IM.index_delta(t.changelog(frm, to), C, to, books)
+    return idx.unionByName(appends), tombs.unionByName(new)
+
+
 @pytest.fixture(scope="module")
 def trained(spark, tmp_path_factory):
     """Corpus table with 3 vintages + centroids/codebooks trained on v1."""
@@ -67,16 +90,15 @@ def trained(spark, tmp_path_factory):
 def test_maintained_equals_rebuild(spark, trained, pq):
     t, C, B, (s1, s2, s3) = trained
     books = B if pq else None
-    idx, tombs = IM.build_index_state(t.read(s1), C, s1, codebooks=books)
+    idx, tombs = _initial(t.read(s1), C, s1, books)
     for frm, to in [(s1, s2), (s2, s3)]:
-        idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs,
-                                           codebooks=books)
+        idx, tombs = _advance(t, C, frm, to, idx, tombs, books)
         live = IM.live_index(idx, tombs)
-        want, _ = IM.build_index_state(t.read(to), C, to, codebooks=books)
+        want = _rebuild(t.read(to), C, to, books)
         assert _index_set(live, pq) == _index_set(want, pq), (frm, to, pq)
     # updated ids must carry their NEW encoding (vector changed at v2)
     live = IM.live_index(idx, tombs)
-    fresh, _ = IM.build_index_state(t.read(s3), C, s3, codebooks=books)
+    fresh = _rebuild(t.read(s3), C, s3, books)
     upd_live = _index_set(live.filter(F.col("n_id") < 60).filter("n_id >= 40"), pq)
     upd_fresh = _index_set(fresh.filter(F.col("n_id") < 60).filter("n_id >= 40"), pq)
     assert upd_live == upd_fresh and len(upd_live) == 20
@@ -84,11 +106,11 @@ def test_maintained_equals_rebuild(spark, trained, pq):
 
 def test_probe_over_live_index_matches_rebuild(spark, trained):
     t, C, B, (s1, s2, s3) = trained
-    idx, tombs = IM.build_index_state(t.read(s1), C, s1)
+    idx, tombs = _initial(t.read(s1), C, s1)
     for frm, to in [(s1, s2), (s2, s3)]:
-        idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
+        idx, tombs = _advance(t, C, frm, to, idx, tombs)
     live = IM.live_index(idx, tombs)
-    fresh, _ = IM.build_index_state(t.read(s3), C, s3)
+    fresh = _rebuild(t.read(s3), C, s3)
     queries = t.read(s3).filter("vec_id % 10 = 0").select(
         F.col("vec_id").alias("q_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("qv"))
@@ -104,9 +126,9 @@ def test_dead_rows_never_eat_rank_slots(spark, trained):
     """Filtering happens before top-k: a deleted id must not appear AND
     its former rank slot must be filled by the next live neighbour."""
     t, C, B, (s1, s2, s3) = trained
-    idx, tombs = IM.build_index_state(t.read(s1), C, s1)
+    idx, tombs = _initial(t.read(s1), C, s1)
     for frm, to in [(s1, s2), (s2, s3)]:
-        idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
+        idx, tombs = _advance(t, C, frm, to, idx, tombs)
     live = IM.live_index(idx, tombs)
     k = 5
     queries = t.read(s3).filter("vec_id = 0").select(
@@ -118,47 +140,26 @@ def test_dead_rows_never_eat_rank_slots(spark, trained):
     assert len(got) == min(k, len(live_ids) - 1)
 
 
-def test_compaction_resets_state(spark, trained):
-    t, C, B, (s1, s2, s3) = trained
-    idx, tombs = IM.build_index_state(t.read(s1), C, s1)
-    for frm, to in [(s1, s2), (s2, s3)]:
-        idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
-    n_raw = idx.count()
-    live, tombs2 = IM.compact_index(idx, tombs)
-    assert tombs2.count() == 0
-    assert live.count() < n_raw  # dead generations physically dropped
-    want, _ = IM.build_index_state(t.read(s3), C, s3)
-    assert _index_set(live, False) == _index_set(want, False)
-    # a post-compaction maintenance step still composes
-    s4 = t.append(_df(spark, _rows(range(300, 310), "d")))
-    idx2, tombs3 = IM.maintain_ivf_index(t, C, s3, s4, live, tombs2)
-    want4, _ = IM.build_index_state(t.read(s4), C, s4)
-    assert _index_set(IM.live_index(idx2, tombs3), False) == \
-        _index_set(want4, False)
-
-
 def test_streaming_ingest_then_maintain(spark, tmp_path):
-    """Composition: micro-batches land in the corpus through the
-    exactly-once catalog ingest (one atomic hint flip per batch), then
-    the index maintains along the committed snapshot chain — the
+    """Composition: micro-batches of a Structured Streaming source land
+    in the corpus as one snapshot append each (foreachBatch), then the
+    index advances along that snapshot chain through index_delta — the
     continuous-ingestion posture of a production ANN pipeline. Final
     live index == from-scratch rebuild of the head snapshot."""
     import pandas as pd
-
-    from egp_crn_spark.streaming import catalog_ingest_stream
 
     t = SnapshotLogTable(spark, str(tmp_path / "stream_corpus"),
                          partition_col="part")
     s0 = t.overwrite(_df(spark, _rows(range(30), "a")))
     C = train_centroids(t.read(s0), ncells=4, sample=32)
-    idx, tombs = IM.build_index_state(t.read(s0), C, s0)
+    idx, tombs = _initial(t.read(s0), C, s0)
 
     src = tmp_path / "src"
     src.mkdir()
     stream = spark.readStream.schema(
         "vec_id int, part string, embedding array<double>").parquet(str(src))
-    q = catalog_ingest_stream(stream, t, lambda d: d,
-                              str(tmp_path / "ck")).start()
+    q = (stream.writeStream.foreachBatch(lambda batch, _: t.append(batch))
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
     for b in range(2):
         ids = range(100 + 10 * b, 110 + 10 * b)
         pd.DataFrame({
@@ -173,9 +174,9 @@ def test_streaming_ingest_then_maintain(spark, tmp_path):
                    if s["snapshot_id"] >= s0)
     assert len(chain) == 3  # s0 + one commit per micro-batch
     for frm, to in zip(chain, chain[1:]):
-        idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
+        idx, tombs = _advance(t, C, frm, to, idx, tombs)
     live = IM.live_index(idx, tombs)
-    want, _ = IM.build_index_state(t.read(chain[-1]), C, chain[-1])
+    want = _rebuild(t.read(chain[-1]), C, chain[-1])
     assert _index_set(live, False) == _index_set(want, False)
     assert live.count() == 50
 
@@ -197,7 +198,7 @@ def test_index_persists_in_partitioned_snaplog_with_dirty_band_compaction(
 
     it = SnapshotLogTable(spark, str(tmp_path / "index"),
                           partition_col="band")
-    idx, tombs = IM.build_index_state(t.read(s1), C, s1)
+    idx, tombs = _initial(t.read(s1), C, s1)
     it.overwrite(with_band(idx))
 
     # vintage 2: delete-and-update ids 0..9 (rewrite partition a)
@@ -224,7 +225,7 @@ def test_index_persists_in_partitioned_snaplog_with_dirty_band_compaction(
     assert clean_before <= after
     assert not any(p in after for p in before - clean_before)
 
-    want, _ = IM.build_index_state(t.read(s2), C, s2)
+    want = _rebuild(t.read(s2), C, s2)
     got = it.read().drop("band")
     assert _index_set(got, False) == _index_set(want, False)
 
@@ -250,7 +251,7 @@ def test_random_vintage_sequences_maintain_exactly(spark, tmp_path, seed):
 
     s = t.overwrite(_df(spark, [r for p in parts for r in rows_of(p)]))
     C = train_centroids(t.read(s), ncells=4, sample=64)
-    idx, tombs = IM.build_index_state(t.read(s), C, s)
+    idx, tombs = _initial(t.read(s), C, s)
 
     for step in range(4):
         op = rng.choice(["append", "rewrite"])
@@ -268,48 +269,27 @@ def test_random_vintage_sequences_maintain_exactly(spark, tmp_path, seed):
             for i in rng.sample(list(model[p]), k=min(3, len(model[p]) - 1)):
                 del model[p][i]  # dropped rows
             s2 = t.overwrite_partitions(_df(spark, rows_of(p)))
-        idx, tombs = IM.maintain_ivf_index(t, C, s, s2, idx, tombs)
+        idx, tombs = _advance(t, C, s, s2, idx, tombs)
         s = s2
         live = IM.live_index(idx, tombs)
-        want, _ = IM.build_index_state(t.read(s), C, s)
+        want = _rebuild(t.read(s), C, s)
         assert _index_set(live, False) == _index_set(want, False), (seed, step, op)
-
-
-def test_cell_balance_flags_drift(spark, trained):
-    """A corpus that drifts into one region (all new vectors near a
-    single centroid) must push max_over_mean well past the build-time
-    ratio — the retrain/rebuild signal the docstring promises."""
-    t, C, B, (s1, s2, s3) = trained
-    idx, _ = IM.build_index_state(t.read(s1), C, s1)
-    base = IM.cell_balance(idx)
-    assert base["rows"] == 80 and base["cells"] <= 8
-    # drifted corpus: 400 copies of (near) centroid 0's direction
-    drift = spark.createDataFrame(
-        [(5000 + i, "z", [float(x) + 0.01 * (i % 3) for x in C[0]])
-         for i in range(400)],
-        "vec_id int, part string, embedding array<double>")
-    idx2, _ = IM.build_index_state(t.read(s1).unionByName(drift), C, s1)
-    skewed = IM.cell_balance(idx2)
-    assert skewed["rows"] == 480
-    assert skewed["max_over_mean"] > 2 * base["max_over_mean"]
 
 
 def test_tombstone_broadcast_guard_fallback(spark, trained, monkeypatch):
     """VERDICT r7 #4: an oversized tombstone backlog flips live_index
     from broadcast to a pinned shuffled hash join automatically —
-    identical results both paths — and tombstone_backlog surfaces the
-    compact-me signal. The bound is guard.BROADCAST_MAX_ROWS, inclusive."""
+    identical results both paths. The bound is guard.BROADCAST_MAX_ROWS,
+    inclusive."""
     t, C, B, (s1, s2, s3) = trained
-    idx, tombs = IM.build_index_state(t.read(s1), C, s1)
+    idx, tombs = _initial(t.read(s1), C, s1)
     for frm, to in [(s1, s2), (s2, s3)]:
-        idx, tombs = IM.maintain_ivf_index(t, C, frm, to, idx, tombs)
-    from egp_crn_spark import plans
+        idx, tombs = _advance(t, C, frm, to, idx, tombs)
     from egp_crn_spark.operators import guard
     # a large cap broadcasts the tombstones
     monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", 1 << 40)
     bcast = IM.live_index(idx, tombs)
     assert "BroadcastHashJoin" in plans.physical_plan(bcast)
-    assert not IM.tombstone_backlog(tombs)["over_broadcast"]
     # plant a backlog larger than a tiny cap: the shuffled path
     monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", 2)
     shuffled = IM.live_index(idx, tombs)
@@ -317,19 +297,13 @@ def test_tombstone_broadcast_guard_fallback(spark, trained, monkeypatch):
     assert "BroadcastHashJoin" not in p, p[:1200]
     assert "ShuffledHashJoin" in p, p[:1200]
     assert _index_set(shuffled, False) == _index_set(bcast, False)
-    back = IM.tombstone_backlog(tombs)
-    assert back["ids"] > 2 and back["over_broadcast"]
+    ids = tombs.select("n_id").distinct().count()
+    assert ids > 2
     # boundary: exactly ids rows at a bound of ids broadcasts; one row
     # over the bound takes the shuffled hash join
-    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", back["ids"])
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", ids)
     at = plans.physical_plan(IM.live_index(idx, tombs))
     assert "BroadcastHashJoin" in at and "ShuffledHashJoin" not in at
-    assert not IM.tombstone_backlog(tombs)["over_broadcast"]
-    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", back["ids"] - 1)
+    monkeypatch.setattr(guard, "BROADCAST_MAX_ROWS", ids - 1)
     over = plans.physical_plan(IM.live_index(idx, tombs))
     assert "ShuffledHashJoin" in over and "BroadcastHashJoin" not in over
-    assert IM.tombstone_backlog(tombs)["over_broadcast"]
-    # compaction clears the pressure
-    cidx, ctombs = IM.compact_index(idx, tombs)
-    cback = IM.tombstone_backlog(ctombs)
-    assert cback["ids"] == 0 and not cback["over_broadcast"]

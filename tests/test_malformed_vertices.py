@@ -12,15 +12,14 @@ Each operator gets a valid input with ONE geometry made malformed:
 
 Operators whose Column prefilter reads every vertex's y coordinate
 before any kernel runs (bounding boxes, endpoint node keys) meet a
-``short`` row in Spark first: ANSI ``element_at`` raises
-INVALID_ARRAY_INDEX_IN_ELEMENT_AT there, without a column name.
+``short`` or ``wide`` row in Spark first, at ``geomexpr.require_xy``,
+which names the column too.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from egp_crn_spark.functions import crs
 from egp_crn_spark.operators import conflate as CF
 from egp_crn_spark.operators import meshblock as MB
 from egp_crn_spark.operators import validate as V
@@ -111,12 +110,6 @@ def _snapping(spark, bad):
     return suggested_snapping(arcs, radius=20.0, vertices="geom")
 
 
-def _reproject(spark, bad):
-    crs.register_transform("local", "engine", lambda xs, ys: (xs * 2.0, ys + 100.0))
-    return crs.reproject_vertices(_arcs(spark, bad), "local", "engine",
-                                  vertices="geom")
-
-
 def _simplify(spark, bad):
     return simplify_lines(_arcs(spark, bad), 1.0, vertices_col="geom")
 
@@ -136,14 +129,9 @@ OPERATORS = {
     "mb_v201_deadend_within": (_v201_within, "vertices"),
     "split_lines_at_points": (_split, "geom"),
     "suggested_snapping": (_snapping, "geom"),
-    "reproject_vertices": (_reproject, "geom"),
     "simplify_lines": (_simplify, "geom"),
     "generalize_levels": (_generalize, "geom"),
 }
-# Column prefilters that read y of every vertex before the kernel
-COLUMN_READS_Y = {"v202_overlap", "v303_crosses", "conflate_pairs_convex",
-                  "polygonize_meshblock", "mb_v201_deadend_within",
-                  "suggested_snapping"}
 
 
 @pytest.mark.parametrize("case", sorted(MALFORM))
@@ -155,7 +143,4 @@ def test_malformed_vertex_raises_naming_column(spark, op, case):
             build(spark, MALFORM[case]).collect()
     finally:
         snapsuggest_release()
-    if case == "short" and op in COLUMN_READS_Y:
-        assert "INVALID_ARRAY_INDEX_IN_ELEMENT_AT" in str(err.value)
-    else:
-        assert f"{column}: " in str(err.value), str(err.value)[-2000:]
+    assert f"{column}: " in str(err.value), str(err.value)[-2000:]

@@ -1,16 +1,15 @@
-"""Neighbour comparison, suggested snapping, and streaming twins."""
+"""Neighbour comparison, suggested snapping, and the stream == batch
+windowed event counts."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from egp_crn_spark.operators.neighbours import block_neighbours, compare_neighbours
 from egp_crn_spark.operators.snapsuggest import suggested_snapping, unintegrated_bo_nodes
-from egp_crn_spark.streaming import (streaming_sessionize, streaming_tile_counts,
-                                     windowed_event_counts)
+from egp_crn_spark.streaming import windowed_event_counts
 
 
 def _grid_blocks(spark, n=3, s=1000.0, skip=()):
@@ -115,337 +114,3 @@ def test_windowed_counts_stream_equals_batch(spark, stream_events):
     want = want.sort_values(["ws", "event_type"]).reset_index(drop=True)
     assert len(got) == len(want)
     assert (got.n.values == want.n.values).all()
-
-
-def test_streaming_sessionize_runs(spark, stream_events):
-    stream, batch = stream_events
-    _run_stream(streaming_sessionize(stream), "sessions")
-    got = spark.sql("select * from sessions").toPandas()
-    assert len(got) > 0
-    assert (got.n_events >= 1).all()
-
-
-def test_streaming_tile_counts(spark, tmp_path, fixtures_dir):
-    src = spark.read.parquet(f"{fixtures_dir}/images.parquet").select("image_id", "phash")
-    path = str(tmp_path / "img_stream")
-    src.write.parquet(path)
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    _run_stream(streaming_tile_counts(stream), "tiles")
-    got = spark.sql("select * from tiles").toPandas()
-    want = streaming_tile_counts(src).toPandas()
-    assert got.n.sum() == want.n.sum() == src.count()
-    assert len(got) == len(want)
-
-
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    """applyInPandasWithState: duplicates are suppressed across
-    micro-batches, not just within one."""
-    import pandas as pd
-
-    from egp_crn_spark.streaming import streaming_dedup
-
-    src_dir = tmp_path / "docs_stream"
-    src_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    b1 = pd.DataFrame({"doc_id": [1, 2, 3, 4],
-                       "text": ["aa", "bb", "aa", "cc"]})  # 3 in-batch dup of 1
-    b1.to_parquet(src_dir / "b1.parquet")
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src_dir))
-    q = (streaming_dedup(stream).writeStream.outputMode("append")
-         .format("memory").queryName("dedup_out")
-         .option("checkpointLocation", ckpt).start())
-    q.processAllAvailable()
-    got1 = spark.sql("select * from dedup_out").toPandas()
-    assert sorted(got1.doc_id) == [1, 2, 4]
-
-    # batch 2: 5 dups batch-1 text; 6 is new; 7 dups within batch 2
-    b2 = pd.DataFrame({"doc_id": [5, 6, 7, 8],
-                       "text": ["bb", "dd", "ee", "ee"]})
-    b2.to_parquet(src_dir / "b2.parquet")
-    q.processAllAvailable()
-    q.stop()
-    got2 = spark.sql("select * from dedup_out").toPandas()
-    assert sorted(got2.doc_id) == [1, 2, 4, 6, 7]
-
-
-@pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
-def test_streaming_phash_near_dup_stream_equals_batch(spark, tmp_path, provider):
-    """Planted phash families arriving across THREE micro-batches: the
-    union of streamed pair emissions (deduped — band groups emit
-    independently) must equal the batch hamming_near_pairs result over
-    the full data. Pairs span batches: the second/third family members
-    arrive after the first is already in state. Runs under BOTH state
-    stores: heap-backed HDFS default and the off-heap RocksDB provider
-    the 100-TB continuous path needs (VERDICT r5 #6)."""
-    import pandas as pd
-
-    from egp_crn_spark.operators.dedup import hamming_near_pairs
-    from egp_crn_spark.streaming import (ROCKSDB_PROVIDER, state_store,
-                                         streaming_phash_near_dup)
-
-    def i64(v):
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    def flip(v, *bits):
-        for b in bits:
-            v ^= 1 << b
-        return i64(v)
-
-    base_a, base_b = 0x5A5A5A5A5A5A5A5A, 0x0123456789ABCDEF
-    rows = {
-        1: flip(base_a), 2: flip(base_a, 3), 3: flip(base_a, 7, 40),
-        10: flip(base_b), 11: flip(base_b, 63),
-        20: flip(base_a, 1, 2, 9, 17, 33, 45, 52, 60),  # near nothing
-    }
-    batches = [[1, 10, 20], [2, 11], [3]]
-    src_dir = tmp_path / "ph_stream"
-    src_dir.mkdir()
-    stream = spark.readStream.schema("image_id long, phash long").parquet(str(src_dir))
-    providers = {"hdfs": spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"), "rocksdb": ROCKSDB_PROVIDER}
-    with state_store(spark, providers[provider]):
-        q = (streaming_phash_near_dup(stream, max_hamming=2)
-             .writeStream.outputMode("append").format("memory")
-             .queryName(f"phdup_out_{provider}")
-             .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-        for i, ids in enumerate(batches):
-            pd.DataFrame({"image_id": ids,
-                          "phash": [rows[k] for k in ids]}
-                         ).to_parquet(src_dir / f"b{i}.parquet")
-            q.processAllAvailable()
-        q.stop()
-    got = spark.sql(f"select distinct a_id, b_id, hamming from phdup_out_{provider}").toPandas()
-    full = pd.DataFrame({"image_id": list(rows), "phash": list(rows.values())})
-    want = hamming_near_pairs(spark.createDataFrame(full), "phash",
-                              "image_id", max_hamming=2).toPandas()
-    got_set = set(map(tuple, got.astype("int64").values.tolist()))
-    want_set = set(map(tuple, want.astype("int64").values.tolist()))
-    assert got_set == want_set
-    assert want_set == {(1, 2, 1), (1, 3, 2), (10, 11, 1)}
-
-
-def test_streaming_simhash_near_dup_cross_batch(spark, tmp_path):
-    """Streaming text near-dup: per-row simhash64 + the shared stateful
-    hamming pairing finds a cross-batch duplicate; matches the batch
-    pairing over the same signatures."""
-    import pandas as pd
-
-    from egp_crn_spark.operators.dedup import hamming_near_pairs, simhash64
-    from egp_crn_spark.streaming import streaming_simhash_near_dup
-
-    texts = {
-        1: "the quick brown fox jumps over the lazy dog",
-        2: "the quick brown fox jumps over the lazy dog",  # exact dup
-        3: "a completely different document about spark shuffles",
-    }
-    src_dir = tmp_path / "doc_stream"
-    src_dir.mkdir()
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src_dir))
-    q = (streaming_simhash_near_dup(stream, max_hamming=3)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("shdup_out")
-         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-    for i, ids in enumerate([[1, 3], [2]]):
-        pd.DataFrame({"doc_id": ids, "text": [texts[k] for k in ids]}
-                     ).to_parquet(src_dir / f"b{i}.parquet")
-        q.processAllAvailable()
-    q.stop()
-    got = spark.sql("select distinct a_id, b_id, hamming from shdup_out").toPandas()
-    full = spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())}))
-    want = hamming_near_pairs(full.select("doc_id", simhash64(F.col("text")).alias("sh")),
-                              "sh", "doc_id", max_hamming=3).toPandas()
-    got_set = set(map(tuple, got.astype("int64").values.tolist()))
-    want_set = set(map(tuple, want.astype("int64").values.tolist()))
-    assert got_set == want_set
-    assert (1, 2, 0) in got_set
-
-
-MINHASH_TEXTS = {
-    # family A: near-identical long sentences (high Jaccard), arriving
-    # across three different micro-batches
-    1: "the quick brown fox jumps over the lazy dog near the river bank",
-    2: "the quick brown fox jumps over the lazy dog near the river bank",
-    3: "the quick brown fox jumps over the lazy dog near the river edge",
-    # family B: another pair split across batches
-    10: "spark shuffles partition data across executors during wide transformations",
-    11: "spark shuffles partition data across executors during wide transformation",
-    # singletons: near nothing
-    20: "completely unrelated text about product quantization codebooks",
-    21: "short",
-}
-MINHASH_BATCHES = [[1, 10, 20], [2, 11, 21], [3]]
-
-
-@pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
-def test_streaming_minhash_stream_equals_batch(spark, tmp_path, provider):
-    """Streaming banded-MinHash candidates over THREE micro-batches +
-    the batch exact_jaccard verify == batch dedup_minhash_lsh over the
-    full corpus (VERDICT r7 #5). Pairs span batches (family members
-    arrive after the first is in state); both state stores."""
-    import pandas as pd
-
-    from egp_crn_spark.operators.dedup import dedup_minhash_lsh, exact_jaccard
-    from egp_crn_spark.streaming import (ROCKSDB_PROVIDER, state_store,
-                                         streaming_minhash_candidates)
-
-    src_dir = tmp_path / "mh_stream"
-    src_dir.mkdir()
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src_dir))
-    providers = {"hdfs": spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"), "rocksdb": ROCKSDB_PROVIDER}
-    with state_store(spark, providers[provider]):
-        q = (streaming_minhash_candidates(stream, num_hashes=8, bands=4)
-             .writeStream.outputMode("append").format("memory")
-             .queryName(f"mh_out_{provider}")
-             .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-        for i, ids in enumerate(MINHASH_BATCHES):
-            pd.DataFrame({"doc_id": ids,
-                          "text": [MINHASH_TEXTS[k] for k in ids]}
-                         ).to_parquet(src_dir / f"b{i}.parquet")
-            q.processAllAvailable()
-        q.stop()
-    cand = (spark.sql(f"select distinct a_id, b_id from mh_out_{provider}"))
-    full = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": list(MINHASH_TEXTS), "text": list(MINHASH_TEXTS.values())}))
-    # the downstream verify the operator's contract prescribes: shingle
-    # sets live in the corpus, not in stream state
-    got = exact_jaccard(full, cand, "text", "doc_id").filter(
-        F.col("jaccard") >= 0.5).toPandas()
-    want = dedup_minhash_lsh(full, num_hashes=8, bands=4, threshold=0.5).toPandas()
-    got_set = {(int(a), int(b), round(j, 9)) for a, b, j in
-               got[["a_id", "b_id", "jaccard"]].values.tolist()}
-    want_set = {(int(a), int(b), round(j, 9)) for a, b, j in
-                want[["a_id", "b_id", "jaccard"]].values.tolist()}
-    assert got_set == want_set
-    # cross-batch recall actually exercised: the exact dup pair (1,2) and
-    # both near pairs span different micro-batches
-    got_pairs = {(a, b) for a, b, _ in got_set}
-    assert {(1, 2), (10, 11)} <= got_pairs
-
-
-def test_streaming_minhash_bucket_saturation(spark, tmp_path):
-    """max_bucket cap: a degenerate bucket of identical texts saturates —
-    pairing stops, state stops growing, query keeps running."""
-    import pandas as pd
-
-    from egp_crn_spark.streaming import streaming_minhash_candidates
-
-    n = 30
-    src_dir = tmp_path / "mh_sat"
-    src_dir.mkdir()
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src_dir))
-    q = (streaming_minhash_candidates(stream, num_hashes=8, bands=4, max_bucket=5)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("mh_sat_out")
-         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-    text = "identical document text repeated many times for the saturation test"
-    pd.DataFrame({"doc_id": range(n), "text": [text] * n}
-                 ).to_parquet(src_dir / "b0.parquet")
-    q.processAllAvailable()
-    pd.DataFrame({"doc_id": [100], "text": [text]}).to_parquet(src_dir / "b1.parquet")
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("select distinct a_id, b_id from mh_sat_out").toPandas()
-    # all 4 band groups coincide for identical texts: <= 6*5/2 distinct
-    # pairs before every group trips the cap; far below n*(n+1)/2
-    assert 0 < len(got) <= 6 * 5 / 2
-
-
-def test_streaming_near_dup_bucket_saturation(spark, tmp_path):
-    """The per-group cap: a degenerate bucket (many identical
-    signatures) saturates after max_bucket items — pairing stops, state
-    stops growing, and the query keeps running."""
-    import pandas as pd
-
-    from egp_crn_spark.streaming import streaming_phash_near_dup
-
-    n = 30
-    src_dir = tmp_path / "sat_stream"
-    src_dir.mkdir()
-    stream = spark.readStream.schema("image_id long, phash long").parquet(str(src_dir))
-    q = (streaming_phash_near_dup(stream, max_hamming=2, max_bucket=5)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("sat_out")
-         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-    pd.DataFrame({"image_id": range(n), "phash": [12345] * n}
-                 ).to_parquet(src_dir / "b0.parquet")
-    q.processAllAvailable()
-    pd.DataFrame({"image_id": [100], "phash": [12345]}
-                 ).to_parquet(src_dir / "b1.parquet")
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("select distinct a_id, b_id from sat_out").toPandas()
-    # only pairs among the first 5-6 items per band group before the cap
-    # tripped; far fewer than the n*(n+1)/2 uncapped explosion
-    assert 0 < len(got) <= 3 * 6 * 5 / 2
-
-
-def test_ingest_stream_lineage_exactly_once(spark, tmp_path):
-    """Streaming ingestion with per-partition lineage: two micro-batches
-    append into the cell-partitioned layout, lineage records each
-    (cell, batch), the cross-batch AGGREGATE checksum verifies against
-    the stored bytes, and a replayed batch (foreachBatch at-least-once)
-    is skipped — output stays exactly-once."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from egp_crn_spark.functions import cells as C
-    from egp_crn_spark.functions.georef import phash_x, phash_y
-    from egp_crn_spark.operators.lineage import CheckpointedRun
-    from egp_crn_spark.streaming import ingest_stream
-
-    def transform(df):
-        return df.select(
-            "image_id",
-            C.cell_of_xy(phash_x(F.col("phash")), phash_y(F.col("phash")), 2)
-            .alias("cell_id"))
-
-    src_dir = tmp_path / "ingest_src"
-    src_dir.mkdir()
-    run = CheckpointedRun(spark, str(tmp_path / "run"))
-    stream = spark.readStream.schema("image_id long, phash long").parquet(str(src_dir))
-    q = ingest_stream(stream, run, transform, str(tmp_path / "ckpt")).start()
-    batches = []
-    for b in range(2):
-        pdf = pd.DataFrame({
-            "image_id": range(100 * b, 100 * b + 100),
-            "phash": [((i * 2654435761) % (1 << 63)) for i in
-                      range(100 * b, 100 * b + 100)]})
-        batches.append(pdf)
-        pdf.to_parquet(src_dir / f"b{b}.parquet")
-        q.processAllAvailable()
-    q.stop()
-
-    assert run.committed_batches() == {0, 1}
-    assert run.output().count() == 200
-    # cells span both batches -> only the aggregate lineage can match
-    assert run.verify().count() == 0
-    # replay batch 0 through the same gate: skipped, output unchanged
-    b0 = transform(spark.createDataFrame(batches[0]).select("image_id", "phash"))
-    if not run.is_batch_committed(0):
-        run.append_commit(b0, 0)
-    assert run.output().count() == 200
-    assert run.verify().count() == 0
-
-    # half-committed batch (ADVICE r5): crash BETWEEN the data write and
-    # the lineage append. The orphan rows must be invisible to output()
-    # and verify(); the replay's dynamic partition overwrite must land
-    # the batch exactly once, not append a second copy.
-    b2 = transform(spark.createDataFrame(pd.DataFrame({
-        "image_id": range(200, 250),
-        "phash": [((i * 2654435761) % (1 << 63)) for i in range(200, 250)],
-    })))
-    run._append_data(b2, 2)            # data landed, lineage did not
-    assert not run.is_batch_committed(2)
-    assert run.output().count() == 200  # orphans excluded
-    assert run.verify().count() == 0
-    run.append_commit(b2, 2)           # the restart replays batch 2
-    assert run.is_batch_committed(2)
-    assert run.output().count() == 250  # exactly once, no duplicates
-    assert run.verify().count() == 0

@@ -17,12 +17,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "egp_crn_spark"
 DECODER = PACKAGE / "functions" / "geomkernel.py"
-# modules whose per-element comprehensions decode something other than
-# [x, y] vertices, with what they decode
-NOT_VERTICES = {
-    "egp_crn_spark/operators/similarity.py":
-        "IVF / PQ training samples: fixed-width embedding vectors",
-}
 _ARRAY_FUNCS = {"array", "asarray", "asanyarray", "ascontiguousarray"}
 
 
@@ -71,7 +65,7 @@ def test_detector_flags_every_decode_form():
 def test_no_vertex_decode_outside_geomkernel():
     sites = [f"{mod.relative_to(ROOT)}:{line}"
              for mod in sorted(PACKAGE.rglob("*.py"))
-             if mod != DECODER and str(mod.relative_to(ROOT)) not in NOT_VERTICES
+             if mod != DECODER
              for line in vertex_decode_lines(mod.read_text())]
     assert not sites, ("per-vertex decode outside geomkernel.vertex_array:\n"
                        + "\n".join(sites))

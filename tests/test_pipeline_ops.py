@@ -14,6 +14,8 @@ from egp_crn_spark.operators import similarity as SIM
 from egp_crn_spark.operators import text as TX
 from egp_crn_spark.operators.lineage import CheckpointedRun, partition_lineage
 from egp_crn_spark.operators.skew import hot_keys, salted_aggregate
+from tests import plans
+from tests.twins import simhash64
 
 SF = "/root/testdata/sf0.001"
 
@@ -181,7 +183,6 @@ def test_ivf_matmul_matches_expr(spark, embeddings, monkeypatch):
     and the literal-expression quantizer assign identical cells and
     return identical top-k ids on the same data. 8 cells take the expr
     path; lowering _EXPR_NCELLS_MAX below 8 sends them to matmul."""
-    from egp_crn_spark import plans
 
     queries = embeddings.filter("vec_id % 50 = 0").select(
         F.col("vec_id").alias("q_id"),
@@ -238,11 +239,14 @@ def test_ivf_float32_index(spark, embeddings, monkeypatch):
 
 
 @pytest.mark.parametrize("kernel", ["ivf_assign", "ivf_pq_assign",
-                                    "dedup_embedding_cosine"])
+                                    "dedup_embedding_cosine",
+                                    "train_centroids", "train_pq"])
 def test_ragged_vectors_raise(spark, monkeypatch, kernel):
     """Rows of widths dim-1 and dim+1 in ONE Arrow batch flatten to
     exactly n x dim values; every fixed-width decode must still refuse
-    them, naming the column, instead of silently shifting rows."""
+    them, naming the column, instead of silently shifting rows. The
+    training samples (train_centroids, train_pq) decode on the driver,
+    so they raise at the call."""
     dim = 8
     rng = np.random.default_rng(3)
     corpus = spark.createDataFrame(
@@ -253,15 +257,22 @@ def test_ragged_vectors_raise(spark, monkeypatch, kernel):
     C = rng.standard_normal((4, dim))
     if kernel == "ivf_assign":
         monkeypatch.setattr(SIM, "_EXPR_NCELLS_MAX", 0)  # the matmul kernel
-        out, what = SIM.ivf_assign(corpus, C), "ivf_assign: column 'cv'"
+        run, what = SIM.ivf_assign(corpus, C).collect, "ivf_assign: column 'cv'"
     elif kernel == "ivf_pq_assign":
-        out = SIM.ivf_pq_assign(corpus, C, rng.standard_normal((2, 256, dim // 2)))
+        run = SIM.ivf_pq_assign(
+            corpus, C, rng.standard_normal((2, 256, dim // 2))).collect
         what = "ivf_pq_assign: column 'cv'"
-    else:
-        out = DD.dedup_embedding_cosine(corpus, threshold=0.0)
+    elif kernel == "dedup_embedding_cosine":
+        run = DD.dedup_embedding_cosine(corpus, threshold=0.0).collect
         what = "dedup_embedding_cosine: column '_v'"
+    elif kernel == "train_centroids":
+        run = lambda: SIM.train_centroids(corpus, ncells=2)  # noqa: E731
+        what = "train_centroids: column 'embedding'"
+    else:
+        run = lambda: SIM.train_pq(corpus, C, m=2)  # noqa: E731
+        what = "train_pq: column 'embedding'"
     with pytest.raises(Exception, match=f"{what} has ragged vectors"):
-        out.collect()
+        run()
 
 
 def test_ivf_matmul_large_ncells(spark, embeddings):
@@ -504,7 +515,6 @@ def test_v302_small_deadend_broadcast_path(spark, monkeypatch):
 
     from egp_crn_spark.operators import guard
     from egp_crn_spark.operators import validate as V
-    from egp_crn_spark import plans
 
     def arc(sid, pts):
         return {"segment_id": sid,
@@ -534,7 +544,7 @@ def test_simhash_banding_recall_exhaustive(spark):
         "iota kappa lambda mu nu omicron", "pi rho sigma tau upsilon phi",
     ]
     df = spark.createDataFrame(pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
-    sig = df.select("doc_id", DD.simhash64(F.col("text")).alias("sh")).toPandas()
+    sig = df.select("doc_id", simhash64(F.col("text")).alias("sh")).toPandas()
     sh = dict(zip(sig.doc_id, sig.sh))
     for h in (2, 5, 9):
         want = {
@@ -723,7 +733,6 @@ def test_phash_near_dup_planted(spark):
     # the Window count and its `_cnt <= max_bucket` Filter are descendants
     # (later lines) of every collect_list ObjectHashAggregate, so no
     # bucket over the cap is ever collected
-    from egp_crn_spark import plans
     lines = plans.physical_plan(
         phash_near_dup(df, max_hamming=3, max_bucket=10)).splitlines()
     aggs = [i for i, ln in enumerate(lines)

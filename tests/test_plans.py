@@ -11,8 +11,8 @@ import re
 
 import pytest
 
-from egp_crn_spark import plans
 from egp_crn_spark.driverq import QUERIES
+from tests import plans
 
 SF = "/root/testdata/sf0.001"
 

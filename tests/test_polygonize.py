@@ -70,14 +70,15 @@ def test_open_lines_no_face():
 
 
 def test_assign_holes_island():
-    from egp_crn_spark.functions.polygonize_kernel import polygonize_with_holes
+    from egp_crn_spark.functions.polygonize_kernel import (assign_holes,
+                                                           polygonize_segments)
 
     def ring_segs(x0, y0, s):
         c = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s)]
         return [(c[i], c[(i + 1) % 4]) for i in range(4)]
 
     segs = ring_segs(0, 0, 100) + ring_segs(40, 40, 20)  # island inside
-    faces = polygonize_with_holes(segs)
+    faces = assign_holes(polygonize_segments(segs))
     by_area = sorted(faces, key=lambda fh: -len(fh[0]))
     areas = sorted(
         abs(np.dot(f[:, 0], np.roll(f[:, 1], -1)) - np.dot(f[:, 1], np.roll(f[:, 0], -1))) / 2
@@ -91,12 +92,13 @@ def test_assign_holes_island():
 
 
 def test_adjacent_faces_not_nested():
-    from egp_crn_spark.functions.polygonize_kernel import polygonize_with_holes
+    from egp_crn_spark.functions.polygonize_kernel import (assign_holes,
+                                                           polygonize_segments)
 
     # two cells sharing a wall: tiling, NOT nesting (shared nodes)
     segs = [((0, 0), (1, 0)), ((1, 0), (2, 0)), ((2, 0), (2, 1)), ((2, 1), (1, 1)),
             ((1, 1), (0, 1)), ((0, 1), (0, 0)), ((1, 0), (1, 1))]
-    faces = polygonize_with_holes(segs)
+    faces = assign_holes(polygonize_segments(segs))
     assert len(faces) == 2
     assert all(len(h) == 0 for _, h in faces)
 

@@ -11,6 +11,7 @@ from egp_crn_spark.functions import cells as C
 from egp_crn_spark.functions.imagecodec import decode_image, resize_nearest
 from egp_crn_spark.operators.pyramid import (base_tiles, build_pyramid,
                                              rollup_level)
+from tests import plans
 
 RES, MIN_RES, PX = 5, 2, 8
 
@@ -88,7 +89,6 @@ def test_pyramid_update_equals_rebuild(spark, images, monkeypatch, bound):
     level, across inserts + deletes (including cells emptied by the
     delete of their last image) — with the dirty set broadcast (under
     the guard bound) and with it over the bound (shuffled hash joins)."""
-    from egp_crn_spark import plans
     from egp_crn_spark.operators import guard
     from egp_crn_spark.operators.pyramid import pyramid_update
 
@@ -182,14 +182,13 @@ def test_pyramid_maintained_across_catalog_vintages(spark, images,
 
 def test_pyramid_maintained_over_streaming_ingest(spark, images,
                                                   tmp_path):
-    """Continuously-maintained map stack: imagery arrives through the
-    exactly-once streaming catalog ingest (one atomic commit per
-    micro-batch), and the pyramid advances per committed snapshot from
-    the catalog's own changelog — equal to a from-scratch build of the
+    """Continuously-maintained map stack: imagery arrives through a
+    Structured Streaming source, each micro-batch one snapshot append
+    (foreachBatch), and the pyramid advances per snapshot from the
+    catalog's own changelog — equal to a from-scratch build of the
     final table."""
     from egp_crn_spark.operators.pyramid import pyramid_update
     from egp_crn_spark.sources.snaplog import SnapshotLogTable
-    from egp_crn_spark.streaming import catalog_ingest_stream
 
     src = tmp_path / "src"
     src.mkdir()
@@ -197,8 +196,8 @@ def test_pyramid_maintained_over_streaming_ingest(spark, images,
     pdf = images.select("image_id", "phash", "bytes").toPandas()
     stream = spark.readStream.schema(
         "image_id string, phash long, bytes binary").parquet(str(src))
-    q = (catalog_ingest_stream(stream, t, lambda d: d,
-                               str(tmp_path / "ck")).start())
+    q = (stream.writeStream.foreachBatch(lambda batch, _: t.append(batch))
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
     sids = []
     step = (len(pdf) + 2) // 3
     for i in range(3):

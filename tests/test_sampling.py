@@ -124,20 +124,6 @@ def test_hash_sample_per_stratum_rates(spark, docs):
             assert per.get(lang, 0) == n, lang
 
 
-def test_mix_sources_tags_and_rates(spark, docs):
-    a = docs.filter("doc_id < 300")
-    b = docs.filter("doc_id >= 300")
-    got = SP.mix_sources({"web": (a, 0.5), "books": (b, 1.0)}).toPandas()
-    per = got.groupby("source").size()
-    assert per["books"] == 200
-    assert abs(per.get("web", 0) / 300 - 0.5) < 0.15
-    # same ids in two sources draw independent coins (salted seeds)
-    both = SP.mix_sources({"x": (a, 0.5), "y": (a, 0.5)}).toPandas()
-    xs = set(both[both.source == "x"].doc_id)
-    ys = set(both[both.source == "y"].doc_id)
-    assert xs != ys  # decorrelated — overlapping but not identical
-
-
 def test_pack_chunks_epoch_layouts(spark, docs):
     """VERDICT r7 #7: epoch salts the layout — each epoch individually
     stable (coverage invariant holds per epoch), epochs mutually

@@ -249,53 +249,6 @@ def test_model_random_op_sequences(spark, tdir, seed):
         assert got == want, f"seed={seed} time travel to {sid}"
 
 
-def test_catalog_ingest_stream_exactly_once(spark, tmp_path, tdir):
-    """Streaming ingestion into the catalog: batch data + batch marker
-    commit through ONE version-hint flip. Replayed batches skip; a
-    ghost manifest (crashed before the flip) does NOT count as
-    committed, so its batch is correctly re-applied."""
-    import json as _json
-
-    import pandas as pd
-
-    from egp_crn_spark.streaming import catalog_ingest_stream
-
-    src = tmp_path / "ing_src"
-    src.mkdir()
-    t = SnapshotLogTable(spark, tdir)
-    stream = spark.readStream.schema("id long, part string, val double").parquet(str(src))
-    q = (catalog_ingest_stream(stream, t, lambda d: d, str(tmp_path / "ck"))
-         .start())
-    for i in range(3):
-        pd.DataFrame({"id": [10 * i, 10 * i + 1], "part": ["a", "b"],
-                      "val": [0.0, 1.0]}).to_parquet(src / f"b{i}.parquet")
-        q.processAllAvailable()
-    q.stop()
-    assert sorted(r.id for r in t.read().collect()) == [0, 1, 10, 11, 20, 21]
-    batch_ids = sorted(s["batch_id"] for s in t.committed_summaries())
-    assert batch_ids == [0, 1, 2]
-
-    # at-least-once replay of batch 1: the committed summary gates it out
-    before = t.current_snapshot_id()
-    replay = spark.createDataFrame(
-        pd.DataFrame({"id": [10, 11], "part": ["a", "b"], "val": [0.0, 1.0]}))
-    done = {s.get("batch_id") for s in t.committed_summaries()}
-    assert 1 in done
-    assert t.current_snapshot_id() == before
-
-    # ghost manifest claiming batch 7 (crash BEFORE the hint flip):
-    # not on the ancestry chain -> not committed -> batch 7 re-applies
-    ghost_id = before + 1
-    with open(os.path.join(tdir, "metadata", f"snap-{ghost_id}.json"), "w") as f:
-        _json.dump({"snapshot_id": ghost_id, "parent_id": before,
-                    "operation": "append", "files": [],
-                    "summary": {"batch_id": 7}}, f)
-    assert 7 not in {s.get("batch_id") for s in t.committed_summaries()}
-    t.append(replay, summary={"batch_id": 7})
-    assert 7 in {s.get("batch_id") for s in t.committed_summaries()}
-    assert sorted(r.id for r in t.read().collect()) == [0, 1, 10, 10, 11, 11, 20, 21]
-
-
 def test_inflight_commit_not_mistaken_for_ghost(spark, tdir):
     """The ADVICE r6 lost-update window: writer A has created
     snap-2.json but not yet flipped the hint when writer B commits.

@@ -7,10 +7,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from egp_crn_spark import plans
 from egp_crn_spark.config import EXTENT
 from egp_crn_spark.functions import geomkernel as GK
 from egp_crn_spark.operators import spatial_join as SJ
+from tests import plans
 
 
 @pytest.fixture(scope="module")

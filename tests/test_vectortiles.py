@@ -7,9 +7,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from egp_crn_spark.functions.cells import cell_size, cell_to_ixy_np
-from egp_crn_spark.functions.geomkernel import clip_polyline_to_box
+from egp_crn_spark.functions.cells import cell_size
 from egp_crn_spark.operators.vectortiles import vector_tiles
+from tests.twins import cell_to_ixy_np, cells_covering_bbox, clip_polyline_to_box
 
 
 def _len(line):
@@ -105,8 +105,6 @@ def _reference_pieces(line, res):
     """The r8 scalar kernel (per-segment assign + clip + stitch), kept
     here as the parity oracle for the r9 vectorized kernel: cell id ->
     list of pieces in path order."""
-    from egp_crn_spark.functions.cells import (cell_to_ixy_np,
-                                               cells_covering_bbox)
     cs = cell_size(res)
     done, open_p = {}, {}
     for a, b in zip(line[:-1], line[1:]):

@@ -4,8 +4,8 @@ The complete LLM-corpus story composed from the engine's own operators,
 each stage consuming the previous one's output — the "a user could run
 their whole curation pipeline here" demonstration:
 
-  1M docs → exact dedup → MinHash-LSH near-dup → connected components →
-  canonical keep → quality filter → deterministic 98/1/1 split →
+  1M docs → exact dedup → MinHash-LSH near-dup (drop the larger id of
+  every pair) → quality filter → deterministic 98/1/1 split →
   2048-token concat-and-chunk packing (coverage invariant asserted).
 """
 
@@ -24,7 +24,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from egp_crn_spark.config import env_cpus  # noqa: E402
 from egp_crn_spark.operators import sampling as SP  # noqa: E402
-from egp_crn_spark.operators.components import dedup_keep_canonical  # noqa: E402
 from egp_crn_spark.operators.dedup import dedup_exact, dedup_minhash_lsh  # noqa: E402
 from egp_crn_spark.operators.text import quality_features, token_count  # noqa: E402
 from egp_crn_spark.session import get_session  # noqa: E402
@@ -65,13 +64,14 @@ def main() -> None:
     stages["exact_dedup"] = {}
     exact_kept = stage("exact_dedup", s_exact)
 
-    # 2) near-dup: MinHash-LSH pairs → connected components → canonical
+    # 2) near-dup: MinHash-LSH pairs; keep a doc unless it is the
+    # larger id of some pair (a planted triangle keeps its min id)
     def s_near():
         pairs = dedup_minhash_lsh(
             exact_kept, num_hashes=8, bands=4, threshold=0.5,
             use_md5=False, max_bucket=2000)
-        kept = dedup_keep_canonical(
-            exact_kept, pairs, "doc_id").cache()
+        dup = pairs.select(F.greatest("a_id", "b_id").alias("doc_id"))
+        kept = exact_kept.join(dup, "doc_id", "left_anti").cache()
         stages["near_dedup"] = {"kept": kept.count()}
         return kept
 
@@ -137,7 +137,7 @@ previous one's output.
 | stage | wall s | result |
 |---|---|---|
 | exact dedup (content-hash canonical) | {stages['exact_dedup']['sec']} | {stages['exact_dedup']['kept']:,} kept |
-| near-dup (MinHash-LSH → CC → canonical) | {stages['near_dedup']['sec']} | {stages['near_dedup']['kept']:,} kept |
+| near-dup (MinHash-LSH → drop larger id of each pair) | {stages['near_dedup']['sec']} | {stages['near_dedup']['kept']:,} kept |
 | quality filter (tokens ≥ 8, punct ≤ 0.2) | {stages['quality']['sec']} | {stages['quality']['kept']:,} kept |
 | deterministic 98/1/1 split | {stages['split']['sec']} | {stages['split']['counts']} |
 | pack train split ({CHUNK}-token chunks) | {stages['pack']['sec']} | {stages['pack']['docs']:,} docs → {stages['pack']['chunks']:,} chunks, {stages['pack']['tokens']:,} tokens (coverage invariant exact) |

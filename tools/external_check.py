@@ -1,11 +1,11 @@
 """External-libs conformance runner (VERDICT r7 #8).
 
 Three of the engine's capabilities are twinned against external
-libraries that are absent from the sandbox: the real-H3 cell backend
-(functions/cells_h3.py), pyproj geodesic reprojection (functions/crs.py),
+libraries that may be absent: the real-H3 cell backend
+(functions/cells_h3.py), the PIL image codec (functions/imagecodec.py)
 and the real Iceberg catalog binding (sources/tables.py behind
 ``EGP_ICEBERG_CATALOG``). Their in-repo stand-ins execute everywhere
-(Morton + native S2 cells, registered transforms, the snaplog catalog
+(Morton + native S2 cells, the deterministic codec, the snaplog catalog
 emulation), and the import-gated twins carry conformance suites that
 SKIP when the library is missing.
 
@@ -77,20 +77,6 @@ def check_h3() -> dict:
     return out
 
 
-def check_pyproj() -> dict:
-    """Geodesic reprojection: functions/crs.py picks the pyproj
-    transformer automatically when importable; the crs suite's geodesic
-    tier then runs real EPSG transforms instead of registered ones."""
-    present = _probe("pyproj")
-    out = {"dependency": "pyproj", "present": present}
-    if not present:
-        out["status"] = "absent — registered-transform tier only"
-        return out
-    out["pytest"] = _run_pytest(["tests/test_crs.py"])
-    out["status"] = "ran" if out["pytest"]["ok"] else "FAILED"
-    return out
-
-
 def check_pil() -> dict:
     """Real image codec: functions/imagecodec.py prefers PIL when
     importable (HAS_PIL); the codec parity tests then exercise the real
@@ -157,7 +143,7 @@ def main() -> int:
     ap.add_argument("--report", default=os.path.join(REPO, "external_report.json"))
     args = ap.parse_args()
 
-    checks = [check_h3(), check_pyproj(), check_pil(), check_iceberg()]
+    checks = [check_h3(), check_pil(), check_iceberg()]
     ran = [c for c in checks if c["present"]]
     failed = [c for c in checks if c.get("status") == "FAILED"]
     report = {

@@ -188,8 +188,9 @@ def main(n=2_000_000, out_md="BENCH/ICEBERG.md"):
     state = IV.snapshot_aggregate(t.read(s1), keys, sums).persist()
     state.count()
     t0 = time.time()
-    maintained = IV.maintain_aggregate(t, keys, sums, state=state,
-                                       from_id=s1, to_id=s2)
+    maintained = IV.merge_aggregate_state(
+        state, IV.aggregate_delta(t.changelog(s1, s2), keys, sums),
+        keys, sums)
     got_inc = {r.cell: (r._rows, r.ck) for r in maintained.collect()}
     walls["incremental_maintain"] = time.time() - t0
     t0 = time.time()
@@ -211,8 +212,9 @@ def main(n=2_000_000, out_md="BENCH/ICEBERG.md"):
     state2.count()
     t0 = time.time()
     got_inc3 = {r.cell: (r._rows, r.ck) for r in
-                IV.maintain_aggregate(t, keys, sums, state=state2,
-                                      from_id=s2, to_id=s3).collect()}
+                IV.merge_aggregate_state(
+                    state2, IV.aggregate_delta(t.changelog(s2, s3), keys, sums),
+                    keys, sums).collect()}
     walls["incremental_maintain_small_delta"] = time.time() - t0
     t0 = time.time()
     got_full3 = {r.cell: (r._rows, r.ck) for r in

@@ -89,26 +89,7 @@ def main(n=500_000, out_md="BENCH/VECTORTILES.md"):
             f"{agg['tiles']:,} | {n/wall:,.0f} | "
             f"{'EQUAL' if ok else f'MISMATCH {agg_len}-{want}'} |")
         assert ok, (res, agg["len"], want)
-    # combined multi-zoom build: generalize_levels emits every zoom from
-    # ONE scan/Arrow pass (r9), then one clip pass per the res column
-    from egp_crn_spark.operators.generalize import generalize_levels
-    t0 = time.time()
-    # persist the one simplify pass so each zoom's clip reads it instead
-    # of re-running the python stage (a filter on `res` cannot prune an
-    # opaque mapInPandas stage)
-    multi = generalize_levels(arcs, [8, 10]).persist()
-    both = None
-    for res in (8, 10):
-        t = vector_tiles(multi.filter(F.col("res") == res).drop("res"), res)
-        both = t if both is None else both.unionByName(t)
-    n_multi = both.count()
-    wall_multi = time.time() - t0
-    multi.unpersist(blocking=False)
     lines += [
-        "",
-        f"Combined res-8 + res-10 build through generalize_levels "
-        f"(single-scan multi-zoom, r9): {wall_multi:.1f}s for "
-        f"{n_multi:,} pieces — vs the sum of the per-zoom walls above.",
         "",
         "Length conservation is exact in aggregate (|Δ| ≤ 1e-6 rel): the "
         "clip inserts boundary points and never drops or double-counts a "
