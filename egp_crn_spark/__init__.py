@@ -12,4 +12,11 @@ is pure bit arithmetic, JVM-side), Arrow-batched pandas UDFs only for exact
 geometric refinement that Catalyst cannot express.
 """
 
+from egp_crn_spark import zipimport_lazy
+
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle any engine kernel;
+# from then on their per-task import-cache invalidation stops re-reading
+# every zip on the path (see zipimport_lazy).
+zipimport_lazy.install()

@@ -38,11 +38,7 @@ def partition_lineage(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
         .groupBy(F.col(cell_col).alias("cell_id"))
         .agg(
             F.count("*").alias("row_count"),
-            F.format_string(
-                "%016x",
-                F.aggregate(F.collect_list("_h"), F.lit(0).cast("long"),
-                            lambda acc, h: acc.bitwiseXOR(h)),
-            ).alias("checksum"),
+            F.format_string("%016x", F.bit_xor("_h")).alias("checksum"),
         )
     )
 

@@ -143,4 +143,19 @@ def test_malformed_vertex_raises_naming_column(spark, op, case):
             build(spark, MALFORM[case]).collect()
     finally:
         snapsuggest_release()
-    assert f"{column}: " in str(err.value), str(err.value)[-2000:]
+    text = _error_text(err.value)
+    assert f"{column}: " in text, text[-2000:]
+
+
+def _error_text(exc: BaseException) -> str:
+    """The whole error: PySpark's text plus the message of every Java
+    throwable in the cause chain. The Python worker's traceback (the
+    ``ValueError`` naming the column) rides the chain's
+    ``org.apache.spark.api.python.PythonException``, and survives there
+    when the Py4J text is cut to ``"Job aborted due to stage ..."``."""
+    parts = [str(exc)]
+    jexc = getattr(exc, "java_exception", None) or getattr(exc, "_origin", None)
+    while jexc is not None:
+        parts.append(str(jexc.toString()))
+        jexc = jexc.getCause()
+    return "\n".join(parts)

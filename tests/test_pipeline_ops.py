@@ -472,6 +472,35 @@ def test_partition_lineage_order_insensitive(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_partition_lineage_checksum_matches_list_xor(spark):
+    """The ``bit_xor`` checksum equals the xor folded over each cell's
+    collected row hashes (the expression it replaced, kept as oracle),
+    on a seeded frame with nulls, negatives and a one-row cell, and the
+    plan builds no per-cell list."""
+    rng = np.random.default_rng(1404)
+    n = 2000
+    cells = rng.integers(0, 23, n).tolist() + [99]
+    vals = rng.integers(-10**12, 10**12, n + 1).tolist()
+    names = [None if i % 17 == 0 else f"n{i % 101}" for i in range(n + 1)]
+    df = spark.createDataFrame(list(zip(cells, vals, names)),
+                               "cell_id long, v long, name string")
+    row_hash = F.xxhash64(F.concat_ws(
+        "\x1f", *[F.col(c).cast("string") for c in sorted(df.columns)]))
+    oracle = (df.withColumn("_h", row_hash).groupBy("cell_id").agg(
+        F.count("*").alias("row_count"),
+        F.format_string("%016x", F.aggregate(
+            F.collect_list("_h"), F.lit(0).cast("long"),
+            lambda acc, h: acc.bitwiseXOR(h))).alias("checksum")))
+    lineage = partition_lineage(df)
+    got = lineage.toPandas().sort_values("cell_id").reset_index(drop=True)
+    want = oracle.toPandas().sort_values("cell_id").reset_index(drop=True)
+    assert len(got) == 24
+    pd.testing.assert_frame_equal(got, want)
+    # ordinary partial aggregation: no per-cell list in an ObjectHashAggregate
+    plan = plans.physical_plan(lineage)
+    assert "ObjectHashAggregate" not in plan and "collect_list" not in plan, plan
+
+
 def test_salted_aggregate_matches_plain(spark):
     df = spark.range(10000).select(
         F.when(F.col("id") < 9000, F.lit(1)).otherwise(F.col("id") % 50).alias("k"),
