@@ -1,4 +1,4 @@
-"""SparkSession factory — AQE + skew-join + Arrow on, shuffle sized to cores.
+"""SparkSession factory — AQE + skew-join + Arrow + codegen cache on, shuffle sized to cores.
 
 Local mode is the sandbox stand-in for a multi-executor cluster; all
 operators are written for hash/range partitioning across executors (the
@@ -112,6 +112,23 @@ def get_session(
         # analysis and runtime error messages lose the Python call-site
         # fragment; JVM stack traces and Python tracebacks are unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Compile each generated class once per session. Spark keys its
+        # compiled-class cache on the generated source, and a whole-stage
+        # class name that carries the stage id (AQE numbers stages in
+        # completion order) makes identical code miss it on a rerun.
+        # Trade-off: JVM stack traces name `GeneratedIterator`, not
+        # `GeneratedIteratorForCodegenStage<N>`.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # The cache must hold the working set: a rerun that cycles an LRU
+        # cache through more classes than it has entries misses on every
+        # class, and Spark's default is 100. Distinct classes one session
+        # compiled: 220 (perfbench crn_qa, 3 passes), 185 (images), 1,056
+        # (tools/check_correctness.py, registry at sf0.001), 2,036 (the
+        # test suite). 4096 holds the largest twice over, at about 8 KB
+        # of Metaspace a class. A static conf (isModifiable false), read
+        # once per JVM when code is first generated: it takes effect only
+        # here, before the first query.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     # one BLAS thread PER PYTHON WORKER: numpy kernels inside pandas UDFs
     # otherwise spawn a full OpenBLAS/MKL pool in each of N concurrent
