@@ -9,13 +9,16 @@ pivots them into ``v<code>`` int columns (validate_topology.py:156-172).
 | 101  | construction_simple       | :328-345 (is_simple) | per-row kernel (scalar pandas UDF) |
 | 102  | construction_cluster_tol  | :296-326             | pure Column (min segment length)   |
 | 201  | duplication_duplicated    | :347-371 (equals)    | checksum groupBy (no O(n²) equals) |
-| 202  | duplication_overlap       | :373-392 (overlaps)  | cell self-join + collinear kernel  |
+| 202  | duplication_overlap       | :373-392 (overlaps)  | shared cell self-join + one refine (`_pair_flags`) |
 | 301  | connectivity_node_inter   | :235-272             | relational (endpoints × interiors) |
 | 302  | connectivity_min_distance | :174-233             | deadend distance join − connected  |
-| 303  | connectivity_segmentation | :274-294 (crosses)   | cell self-join + crossing kernel   |
+| 303  | connectivity_segmentation | :274-294 (crosses)   | shared cell self-join + one refine (`_pair_flags`) |
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -90,7 +93,7 @@ def _arc_candidate_pairs(arcs: DataFrame, res: int, id_col: str, vertices: str,
     candidates multiplies shuffle bytes by the mean vertex size (the
     round-2 hotspot). Single-segment arcs — the overwhelming majority of
     a noded network — are FULLY described by their endpoint columns, so
-    most pairs never need an array at all; `_refine_pairs` joins arrays
+    most pairs never need an array at all; `_pair_flags` joins arrays
     back by id only for pairs involving a multi-vertex arc.
 
     ``with_checksum`` rides the geometry checksum along each side (v202's
@@ -169,109 +172,98 @@ def _seg_overlap_col() -> F.Column:
     return ok & col & (F.least(hi, F.lit(1.0)) - F.greatest(lo, F.lit(0.0)) > eps)
 
 
-def _refine_pairs(cand: DataFrame, arcs: DataFrame, kernel,
-                  seg_fast_col: F.Column, id_col: str,
-                  vertices: str) -> DataFrame:
-    """Split candidate refinement:
+# ---------------------------------------------------------------- 202 + 303
+# code -> (numpy kernel, its Column twin over single-segment candidates)
+_PAIR_TESTS = {
+    202: (GK.polylines_overlap, _seg_overlap_col),
+    303: (GK.polylines_cross_shapely, _seg_cross_col),
+}
 
-    - both arcs single-segment (the bulk of a noded network): the exact
-      predicate is the pure-Column ``seg_fast_col`` over the endpoint
-      columns already on the candidate row — zero Python, zero extra
-      shuffle;
-    - any multi-vertex side: join that side's vertex array back by id
-      (arrays shuffle once per MULTI-VERTEX arc, not once per candidate)
-      and run the general numpy ``kernel`` via mapInPandas; a
-      single-segment side reconstructs its 2-point array from the
-      endpoint columns already on the row.
 
-    ONE linear pipeline — fast hits ride through the same mapInPandas as
-    pass-throughs, so the expensive cell self-join has exactly one
-    consumer (a branch-and-union here would recompute it per branch, or
-    force a persist barrier; both measured slower)."""
+def _pair_flags(arcs: DataFrame, codes: list[int], res: int = 10,
+                id_col: str = "segment_id", vertices: str = "vertices",
+                salt_hot: tuple[int, int] | None = None) -> DataFrame:
+    """``(flagged_id, _code)`` for each requested code of ``_PAIR_TESTS``,
+    off ONE candidate set and ONE refine stage.
+
+    A code's verdict ``t<code>`` is its Column twin when both arcs are
+    single-segment (the bulk of a noded network: zero Python) and null
+    when a multi-vertex side needs the numpy kernel. 202 is false on
+    checksum-equal pairs: shapely `overlaps` excludes equal geometries
+    (validate_topology.py:383-392). Pairs no code can flag are dropped;
+    the rest get their multi-vertex sides' arrays joined back by id (once
+    per multi-vertex arc, not once per candidate), and one mapInPandas
+    decodes each slow pair once and runs every kernel left undecided.
+    Fast hits ride through it too, so the cell self-join has exactly one
+    consumer (a branch-and-union would recompute it per branch, or force
+    a persist barrier; both measured slower)."""
+    codes = sorted(codes)
+    cand = _arc_candidate_pairs(arcs, res, id_col, vertices,
+                                with_checksum=202 in codes, salt_hot=salt_hot)
     both_single = (F.col("anv") == 2) & (F.col("bnv") == 2)
-    reduced = cand.filter((both_single & seg_fast_col) | ~both_single).select(
-        "a_id", "b_id", both_single.alias("_fast"),
-        "ax1", "ay1", "ax2", "ay2", "bx1", "by1", "bx2", "by2",
-    )
+    verdicts = []
+    for c in codes:
+        t = F.when(both_single, _PAIR_TESTS[c][1]())
+        if c == 202:
+            t = F.when(F.col("ack") != F.col("bck"), t).otherwise(False)
+        verdicts.append(t.alias(f"t{c}"))
+    flags = [f"t{c}" for c in codes]
     v = F.col(vertices)
     multi = arcs.filter(F.size(v) > 2)
     reduced = (
-        reduced.join(multi.select(F.col(id_col).alias("a_id"), v.alias("averts")),
-                     "a_id", "left")
-        .join(multi.select(F.col(id_col).alias("b_id"), v.alias("bverts")),
-              "b_id", "left")
+        cand.select("a_id", "b_id", "ax1", "ay1", "ax2", "ay2",
+                    "bx1", "by1", "bx2", "by2", *verdicts)
+        .filter(reduce(operator.or_, [F.col(t).isNull() | F.col(t) for t in flags]))
+        .join(multi.select(F.col(id_col).alias("a_id"), v.alias("av")), "a_id", "left")
+        .join(multi.select(F.col(id_col).alias("b_id"), v.alias("bv")), "b_id", "left")
+        # a single-segment side's array is rebuilt from its endpoints
+        .select("a_id", "b_id", *flags, *[
+            F.coalesce(f"{s}v", F.array(F.array(f"{s}x1", f"{s}y1"),
+                                        F.array(f"{s}x2", f"{s}y2"))).alias(f"{s}verts")
+            for s in "ab"])
     )
-
-    what = f"{kernel.__name__} {vertices}"
+    # plain functions only: the closure is pickled, and Columns do not pickle
+    kernels = [_PAIR_TESTS[c][0] for c in codes]
+    what = f"v{'/v'.join(map(str, codes))} {vertices}"
 
     def refine(it):
         for pdf in it:
-            if len(pdf) == 0:
-                continue
-            # fast rows are pre-verified hits (the Column predicate ran in
-            # the join stage) — take them in bulk, loop only the rows that
-            # actually need the ragged-array kernel
-            fast = pdf["_fast"].to_numpy(dtype=bool)
-            hits_a = pdf["a_id"][fast].tolist()
-            hits_b = pdf["b_id"][fast].tolist()
-            slow = pdf[~fast]
-            for (aid, bid, ax1, ay1, ax2, ay2, bx1, by1, bx2, by2,
-                 av, bv) in zip(
-                    slow["a_id"], slow["b_id"],
-                    slow["ax1"], slow["ay1"], slow["ax2"], slow["ay2"],
-                    slow["bx1"], slow["by1"], slow["bx2"], slow["by2"],
-                    slow["averts"], slow["bverts"]):
-                # a null array is a single segment: rebuilt from its ends
-                a = (GK.vertex_array(av, what) if av is not None
-                     else np.array([[ax1, ay1], [ax2, ay2]], dtype=np.float64))
-                b = (GK.vertex_array(bv, what) if bv is not None
-                     else np.array([[bx1, by1], [bx2, by2]], dtype=np.float64))
-                if kernel(a, b):
-                    hits_a.append(aid)
-                    hits_b.append(bid)
-            if hits_a:
-                yield pd.DataFrame({"a_id": hits_a, "b_id": hits_b})
+            # fast verdicts in bulk; loop only the rows a kernel must decide
+            hit = [pdf[t].eq(True).to_numpy(dtype=bool, copy=True) for t in flags]
+            need = pdf[flags].isna().to_numpy()
+            rows = np.flatnonzero(need.any(axis=1))
+            slow = pdf.iloc[rows]
+            for i, todo, av, bv in zip(rows, need[rows], slow["averts"], slow["bverts"]):
+                a, b = GK.vertex_array(av, what), GK.vertex_array(bv, what)
+                for h, kernel, run in zip(hit, kernels, todo):
+                    if run:
+                        h[i] = kernel(a, b)
+            aid, bid = pdf["a_id"].to_numpy(), pdf["b_id"].to_numpy()
+            out = pd.DataFrame({
+                "flagged_id": np.concatenate([np.concatenate([aid[h], bid[h]]) for h in hit]),
+                "_code": np.repeat(codes, [2 * int(h.sum()) for h in hit]),
+            })
+            if len(out):
+                yield out.drop_duplicates()
 
-    return reduced.mapInPandas(refine, schema="a_id string, b_id string")
+    return reduced.mapInPandas(refine, schema="flagged_id string, _code int").distinct()
 
 
-def _pairs_to_flags(hit_pairs: DataFrame) -> DataFrame:
-    # explode, NOT union-of-two-selects: a union would give the pair
-    # pipeline (cell self-join + kernel refine) TWO consumers and Spark
-    # would recompute it once per branch
-    return (
-        hit_pairs.select(F.explode(F.array("a_id", "b_id")).alias("flagged_id"))
-        .distinct()
-    )
-
-
-# ---------------------------------------------------------------- 202
 def v202_overlap(arcs: DataFrame, res: int = 10, id_col: str = "segment_id",
                  vertices: str = "vertices",
                  salt_hot: tuple[int, int] | None = None) -> DataFrame:
-    """Arcs must not overlap (share a collinear positive-length section).
-    shapely `overlaps` excludes equal geometries, so checksum-equal pairs
-    are removed before the kernel (validate_topology.py:383-392)."""
-    cand = _arc_candidate_pairs(arcs, res, id_col, vertices,
-                                with_checksum=True, salt_hot=salt_hot)
-    cand = cand.filter(F.col("ack") != F.col("bck"))
-    return _pairs_to_flags(_refine_pairs(
-        cand, arcs, GK.polylines_overlap, _seg_overlap_col(), id_col, vertices,
-    ))
+    """Arcs must not overlap (share a collinear positive-length section,
+    equal geometries excepted) — validate_topology.py:373-392."""
+    return _pair_flags(arcs, [202], res, id_col, vertices, salt_hot).select("flagged_id")
 
 
-# ---------------------------------------------------------------- 303
 def v303_crosses(arcs: DataFrame, res: int = 10, id_col: str = "segment_id",
                  vertices: str = "vertices",
                  salt_hot: tuple[int, int] | None = None) -> DataFrame:
     """Arcs must not cross (must be segmented at intersections) —
-    validate_topology.py:274-294. For single-segment pairs (no interior
-    vertices) shapely `crosses` reduces to the proper-crossing test,
-    which vectorizes across the whole Arrow batch."""
-    cand = _arc_candidate_pairs(arcs, res, id_col, vertices, salt_hot=salt_hot)
-    return _pairs_to_flags(_refine_pairs(
-        cand, arcs, GK.polylines_cross_shapely, _seg_cross_col(), id_col, vertices,
-    ))
+    validate_topology.py:274-294. For single-segment pairs shapely
+    `crosses` reduces to the proper-crossing test."""
+    return _pair_flags(arcs, [303], res, id_col, vertices, salt_hot).select("flagged_id")
 
 
 # ---------------------------------------------------------------- 301
@@ -428,8 +420,7 @@ VALIDATIONS = {
 }
 
 
-def validate_topology(arcs: DataFrame, codes: list[int] | None = None,
-                      id_col: str = "segment_id") -> DataFrame:
+def validate_topology(arcs: DataFrame, codes: list[int] | None = None) -> DataFrame:
     """Run validations and pivot flag sets into v<code> int columns
     (validate_topology.py:156-172). ``arcs`` should be standardized first."""
     # shared normalized projection across 7 validations; registered so
@@ -438,18 +429,19 @@ def validate_topology(arcs: DataFrame, codes: list[int] | None = None,
     arcs = arcs.cache()
     _VT_PERSISTED.append(arcs)
     codes = codes or sorted(VALIDATIONS)
+    # 202 and 303 share one candidate set and one refine stage
+    pair_codes = [c for c in codes if c in _PAIR_TESTS]
+    parts = [_pair_flags(arcs, pair_codes)] if pair_codes else []
+    parts += [VALIDATIONS[c](arcs).select("flagged_id", F.lit(c).alias("_code"))
+              for c in codes if c not in _PAIR_TESTS]
     # ONE pivot join, not 7 chained left-joins: flag sets are tiny, so
     # union them with their code, pivot to v<code> columns in one
     # aggregation, and join arcs once — the chained form stacked 7
     # sort-merge joins of the full arc set into a single action
-    flags = None
-    for code in codes:
-        f = VALIDATIONS[code](arcs).select(
-            F.col("flagged_id").alias(id_col), F.lit(code).alias("_code"))
-        flags = f if flags is None else flags.unionByName(f)
-    pivoted = flags.groupBy(id_col).agg(
+    pivoted = reduce(DataFrame.unionByName, parts).groupBy(
+        F.col("flagged_id").alias("segment_id")).agg(
         *[F.max(F.when(F.col("_code") == c, 1).otherwise(0)).alias(f"v{c}")
           for c in codes]
     )
-    return arcs.join(pivoted, id_col, "left").fillna(
+    return arcs.join(pivoted, "segment_id", "left").fillna(
         {f"v{c}": 0 for c in codes})

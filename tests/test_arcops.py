@@ -304,12 +304,41 @@ def test_v302_min_distance(arcs_std, arcs_std_pd):
     assert "v102_close_deadend" in _tags(arcs_std_pd, got)
 
 
-def test_validate_topology_flag_columns(arcs_std):
-    out = V.validate_topology(arcs_std, codes=[101, 102, 201])
-    cols = set(out.columns)
-    assert {"v101", "v102", "v201"} <= cols
-    agg = out.select(F.sum("v101"), F.sum("v102"), F.sum("v201")).first()
-    assert agg[0] >= 1 and agg[1] >= 1 and agg[2] >= 3
+def test_validate_topology_flag_columns(arcs_std, arcs_std_pd):
+    """All seven codes in one call: the pairwise columns equal both the
+    brute-force oracles and the standalone validations."""
+    try:
+        out = V.validate_topology(arcs_std).toPandas()
+    finally:
+        V.validate_release()
+    assert {f"v{c}" for c in V.VALIDATIONS} <= set(out.columns)
+    def flagged(col):
+        return set(out.loc[out[col] == 1, "segment_id"])
+    overlap = _pairwise_flags(arcs_std_pd, GK.polylines_overlap, exclude_equal=True)
+    assert flagged("v202") == overlap == set(V.v202_overlap(arcs_std).toPandas().flagged_id)
+    cross = _pairwise_flags(arcs_std_pd, GK.polylines_cross_shapely)
+    assert flagged("v303") == cross == set(V.v303_crosses(arcs_std).toPandas().flagged_id)
+
+
+def test_validate_topology_shared_pair_refine(spark):
+    """202 and 303 share one refine stage: a multi-vertex pair that both
+    kernels flag gets both codes, and a reversed duplicate gets 201 but
+    not 202 (shapely `overlaps` excludes equal geometries)."""
+    arcs = spark.createDataFrame(pd.DataFrame({
+        "segment_id": ["A", "B", "C", "D"],
+        "vertices": [
+            [[1000.0, 1000.0], [1004.0, 1000.0]],
+            [[1001.0, 1000.0], [1002.0, 1000.0], [1002.0, 999.0], [1002.5, 1001.0]],
+            [[1010.0, 1000.0], [1012.0, 1000.0]],
+            [[1012.0, 1000.0], [1010.0, 1000.0]],
+        ],
+    }))
+    try:
+        out = V.validate_topology(arcs, codes=[201, 202, 303]).toPandas()
+    finally:
+        V.validate_release()
+    got = {r.segment_id: (r.v201, r.v202, r.v303) for r in out.itertuples()}
+    assert got == {"A": (0, 1, 1), "B": (0, 1, 1), "C": (1, 0, 0), "D": (1, 0, 0)}
 
 
 # ---------------------------------------------------------------- distance ops

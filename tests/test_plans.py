@@ -197,6 +197,24 @@ def test_mb_v201_is_distributed(spark):
         f"candidates must come from a cell equi-join:\n{p[:2000]}"
 
 
+def test_validate_topology_one_pair_refine(spark):
+    """v202 and v303 share one candidate set and one refine stage: the
+    whole validate_topology plan holds exactly one MapInPandas."""
+    import pandas as pd
+
+    from egp_crn_spark.operators import validate as V
+
+    arcs = spark.createDataFrame(pd.DataFrame({
+        "segment_id": ["a", "b"],
+        "vertices": [[[0.0, 0.0], [10.0, 0.0]], [[5.0, -5.0], [5.0, 5.0]]],
+    }))
+    try:
+        p = plans.physical_plan(V.validate_topology(arcs))
+    finally:
+        V.validate_release()
+    assert p.count("MapInPandas") == 1, p
+
+
 def test_partitioned_write_prunes_on_tile_predicate(spark, tmp_path):
     """The lineage/checkpoint output layout (parquet partitioned by
     cell_id — the Iceberg partition-transform stand-in) must let a tile

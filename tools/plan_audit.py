@@ -103,9 +103,28 @@ def main() -> None:
         wants=[("multi-vertex refine kernel", r"MapInPandas"),
                ("arrays attach per-arc via join", r"BroadcastHashJoin|SortMergeJoin")],
         forbids=[("per-row Python UDF", r"BatchEvalPython")],
-        notes="One MapInPandas total; fast-path hits ride through it as "
-              "pass-throughs, so the cell join has a single consumer.",
+        notes="One MapInPandas total: the refine stage `_pair_flags` runs "
+              "for 202 and 303 alike, and fast-path hits ride through it "
+              "as pass-throughs, so the cell join has a single consumer.",
     ))
+
+    # 3b) validate_topology: 202 and 303 share that one refine stage
+    from egp_crn_spark.operators.validate import (validate_release,
+                                                  validate_topology)
+    try:
+        audits.append(audit(
+            "validate_topology (all seven codes)", validate_topology(arcs),
+            wants=[("exactly one MapInPandas (final plan)",
+                    r"== Final Plan ==(?:(?!MapInPandas)[\s\S])*MapInPandas"
+                    r"(?:(?!MapInPandas)[\s\S])*== Initial Plan ==")],
+            forbids=[("per-row Python UDF", r"BatchEvalPython"),
+                     ("cartesian product", r"CartesianProduct")],
+            notes="v202 and v303 share one candidate set and one refine "
+                  "stage; the other Python stage is v101's scalar pandas "
+                  "UDF over the few arcs that may be non-simple.",
+        ))
+    finally:
+        validate_release()
 
     # 4) distance join: bigint-cell equi-join, pure Column refine
     from egp_crn_spark.operators.spatial_join import distance_join
